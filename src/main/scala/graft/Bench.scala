@@ -488,7 +488,7 @@ object Bench {
         val port = graft.remote.RemoteFixture.port
         val df = s.range(5000000L)
           .selectExpr("CAST(id % 1000003 AS INT) AS a", "CAST(id % 999983 AS INT) AS b")
-        graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "gcd",
+        graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "gcd",
             Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
           .write.format("noop").mode("overwrite").save()
       },
@@ -501,7 +501,7 @@ object Bench {
         val server = flightBenchServer() // shared across reps; adapter → RemoteFixture
         val df = s.range(5000000L)
           .selectExpr("CAST(id % 1000003 AS INT) AS a", "CAST(id % 999983 AS INT) AS b")
-        graft.remote.flight.FlightUdf.withFlightColumn(df, "127.0.0.1", server,
+        graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", server)),
             "gcd", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
           .write.format("noop").mode("overwrite").save()
       },
@@ -1103,7 +1103,7 @@ object Bench {
         Graft.install(s)
         val port = graft.remote.RemoteFixture.port
         val df = s.range(2000000L).selectExpr("id % 100000 AS x")
-        graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "script_score",
+        graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "script_score",
             Seq("x"), org.apache.spark.sql.types.LongType)
           .write.format("noop").mode("overwrite").save()
       },

@@ -329,7 +329,7 @@ object SparkEntry {
       // localCheckpoint: the orderBy's range-partitioner SAMPLES its child,
       // which would re-run the whole remote exchange a second time; pin the
       // augmented frame first so the wire work happens exactly once.
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "gcd",
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "gcd",
           Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
         .selectExpr("l_orderkey", "l_linenumber", "value AS g")
         .localCheckpoint()
@@ -360,7 +360,7 @@ object SparkEntry {
       val df = s.table("lineitem")
         .selectExpr("l_orderkey", "l_linenumber",
           "map('rf', l_returnflag, 'ls', l_linestatus) AS m")
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "graft_identity",
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "graft_identity",
           Seq("m"), org.apache.spark.sql.types.MapType(
             org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
         .selectExpr("l_orderkey", "l_linenumber", "graft_to_json(value) AS mj")
@@ -654,7 +654,7 @@ object SparkEntry {
       val port = graft.remote.RemoteFixture.port
       val df = s.table("lineitem").selectExpr("l_orderkey", "l_linenumber",
         "CAST(l_extendedprice AS DECIMAL(18,2)) AS d")
-      graft.remote.RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "graft_identity",
+      graft.remote.RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "graft_identity",
           Seq("d"), org.apache.spark.sql.types.DecimalType(18, 2))
         .selectExpr("l_orderkey", "l_linenumber", "CAST(value AS STRING) AS dstr")
         .localCheckpoint() // exchange runs once; sort sampling reads the checkpoint

@@ -22,49 +22,14 @@ import java.nio.charset.StandardCharsets
  * partitions round-robined across them; on a real cluster the workers run
  * as sidecars per executor host.
  */
-final class JsWorker extends AutoCloseable {
-  private val script: java.io.File = {
-    val fromCwd = new java.io.File(sys.props("user.dir"), "tools/jsudf_server.js")
-    val fromEnv = sys.env.get("GRAFT_JSUDF").map(new java.io.File(_))
-    fromEnv.filter(_.isFile).orElse(Some(fromCwd).filter(_.isFile)).getOrElse(
-      throw new IllegalStateException(
-        s"tools/jsudf_server.js not found from ${sys.props("user.dir")} (set GRAFT_JSUDF)"))
-  }
-
-  private val proc: Process = {
-    val cmd = Seq("node", script.getAbsolutePath, "--port", "0") ++
-      // per-call guest deadline (worker-thread terminate-and-respawn on a
-      // stuck sync loop) — the engine's SO_TIMEOUT is the outer layer
-      sys.env.get("GRAFT_JSUDF_TIMEOUT_MS").toSeq.flatMap(v => Seq("--call-timeout-ms", v))
-    new ProcessBuilder(cmd: _*)
-      .redirectError(ProcessBuilder.Redirect.INHERIT)
-      .start()
-  }
-
-  /** Ephemeral port the worker bound; lazy so a pool launches every process
-    * before blocking on any port (startup overlaps). */
-  lazy val boundPort: Int = {
-    val br = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
-    val line = br.readLine()
-    if (line == null || !line.startsWith("PORT "))
-      throw new IllegalStateException(s"js udf worker failed to start (got: $line)")
-    line.stripPrefix("PORT ").trim.toInt
-  }
-
-  override def close(): Unit = proc.destroy()
-}
+final class JsWorker extends Sidecar("jsudf_server.js", "GRAFT_JSUDF", f =>
+  Seq("node", f, "--port", "0") ++
+    // per-call guest deadline (worker-thread terminate-and-respawn on a
+    // stuck sync loop) — the engine's SO_TIMEOUT is the outer layer
+    sys.env.get("GRAFT_JSUDF_TIMEOUT_MS").toSeq.flatMap(v => Seq("--call-timeout-ms", v)))
 
 object JsWorker {
-  private val poolSize: Int =
-    sys.env.get("GRAFT_JSUDF_WORKERS").map(_.toInt).getOrElse(
-      math.min(8, Runtime.getRuntime.availableProcessors()))
-
-  lazy val shared: Seq[JsWorker] = {
-    val ws = (1 to poolSize).map(_ => new JsWorker()) // all processes launch...
-    sys.addShutdownHook(ws.foreach(_.close()))
-    ws.foreach(_.boundPort)                           // ...then block on ports
-    ws
-  }
+  lazy val shared: Seq[JsWorker] = Sidecar.pool("GRAFT_JSUDF_WORKERS", 8)(new JsWorker())
   /** All pool endpoints, for round-robin assignment across partitions. */
   def endpoints: Seq[(String, Int)] = shared.map(w => ("127.0.0.1", w.boundPort))
   def port: Int = shared.head.boundPort
@@ -136,28 +101,36 @@ class JsUdfClient(host: String, port: Int, timeoutMs: Int = 120000) extends Auto
     * render it as "Name: message" so a guest TimeoutError is tellable from a
     * missing function; pre-v4 plain-text ERR lines pass through unchanged. */
   private def renderErr(status: String): String = {
-    if (status != null && status.startsWith("ERR {")) {
+    if (status.startsWith("ERR {")) {
       try {
         val o = mapper.readTree(status.stripPrefix("ERR "))
         s"${o.path("name").asText("Error")}: ${o.path("message").asText(status)}"
       } catch { case _: Exception => status }
-    } else String.valueOf(status)
+    } else status
+  }
+
+  /** The next line; a peer-closed connection is an `EOFException`, so the
+    * caller sees a transport failure, not a server answer. */
+  private def readLine(): String = {
+    val l = in.readLine()
+    if (l == null) throw new java.io.EOFException("connection closed by server")
+    l
   }
 
   private def exchange(cmd: String, body: Option[ObjectNode]): JsonNode = {
     out.write(cmd); out.write("\n")
     body.foreach { b => out.write(mapper.writeValueAsString(b)); out.write("\n") }
     out.flush()
-    val status = in.readLine()
-    if (status == null || !status.startsWith("OK"))
+    val status = readLine()
+    if (!status.startsWith("OK"))
       throw new RuntimeException(s"js call failed: ${renderErr(status)}")
-    mapper.readTree(in.readLine())
+    mapper.readTree(readLine())
   }
 
   private def textExchange(cmd: String): Seq[String] = {
     out.write(cmd); out.write("\n"); out.flush()
-    val status = in.readLine()
-    if (status == null || !status.startsWith("OK"))
+    val status = readLine()
+    if (!status.startsWith("OK"))
       throw new RuntimeException(s"js request failed: ${renderErr(status)}")
     Iterator.continually(in.readLine()).takeWhile(l => l != null && l.nonEmpty).toSeq
   }
@@ -272,40 +245,33 @@ case class JsAggTransport(endpoints: Seq[(String, Int)], resultType: DataType)
     withClient(pid)(_.accFinish(fname, state, resultType))
 }
 
-/** Spark-side integration: evaluate a JS guest function per partition —
-  * the [[RemoteUdf]] shape (fan-out, pooled per-partition connections,
-  * bounded chunks) over the JSON framing. */
-object JsUdf {
-  private def fanOut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
+/** The JSON wire for [[RemoteOp]]: one [[JsUdfClient]] per partition task,
+  * closed with it. `retType` travels with the wire because the JSON body
+  * carries no type tags. */
+private[remote] final case class JsWire(fname: String, shape: CallShape, retType: DataType)
+    extends RemoteWire {
+  def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession =
+    new RemoteSession {
+      private val client = new JsUdfClient(host, port)
+      def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = shape match {
+        case CallShape.Scalar => client.call(fname, retType, rows).map(Seq(_))
+        case CallShape.Fallible =>
+          client.callWithErrors(fname, retType, rows).map { case (v, e) => Seq(v, e) }
+        case CallShape.Table =>
+          client.callTable(fname, retType, rows).map { case (i, v) => Seq(i, v) }
+      }
+      def close(dead: Boolean): Unit = client.close()
+    }
+}
 
+/** Spark-side integration over the JS worker pool: each entry point is the
+  * one remote operator, [[RemoteOp]], with the [[JsWire]] adapter (its other
+  * adapters are the Arrow-IPC [[IpcWire]] and the two Flight wires). */
+object JsUdf {
   def withJsColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                    fname: String, argCols: Seq[String],
-                   retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, retType, rows)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
+                   retType: DataType): org.apache.spark.sql.DataFrame =
+    RemoteOp(df, endpoints, argCols, retType)(JsWire(fname, CallShape.Scalar, retType))
 
   /** Define a JS guest function from source on EVERY endpoint of the pool
     * (each V8 process owns its own registry) — driver-side, once, before
@@ -317,59 +283,17 @@ object JsUdf {
       try c.define(kind, sig, code) finally c.close()
     }
 
-  /** Append `value` AND `error` columns from the JS guest — the fallible
-    * call surface ([[RemoteUdf.withRemoteFallibleColumn]] over JSON framing). */
+  /** Append `value` AND `error` columns from the JS guest: a throwing row
+    * carries (null, "ErrType: message"). */
   def withJsFallibleColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                            fname: String, argCols: Seq[String],
-                           retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+
-      StructField("value", retType) :+ StructField("error", StringType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.callWithErrors(fname, retType, rows)
-          chunk.zip(vals).map { case (r, (v, e)) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v :+ e)
-          }
-        }
-      }
-    }(enc)
-  }
+                           retType: DataType): org.apache.spark.sql.DataFrame =
+    RemoteOp(df, endpoints, argCols, retType)(JsWire(fname, CallShape.Fallible, retType))
 
   def withJsTableColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                         fname: String, argCols: Seq[String],
-                        retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new JsUdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          client.callTable(fname, retType, rows).map { case (rowIdx, v) =>
-            org.apache.spark.sql.Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
+                        retType: DataType): org.apache.spark.sql.DataFrame =
+    RemoteOp(df, endpoints, argCols, retType)(JsWire(fname, CallShape.Table, retType))
 
   /** Register a JS guest aggregate as a session temp function. */
   def registerAggregate(spark: org.apache.spark.sql.SparkSession, name: String,

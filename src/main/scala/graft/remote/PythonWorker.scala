@@ -14,32 +14,8 @@ package graft.remote
  * host:port; in local mode the lazily-started shared worker on loopback
  * serves all 32 executor threads over per-partition pooled connections.
  */
-final class PythonWorker extends AutoCloseable {
-  private val script: java.io.File = {
-    val fromCwd = new java.io.File(sys.props("user.dir"), "tools/pyudf_server.py")
-    val fromEnv = sys.env.get("GRAFT_PYUDF").map(new java.io.File(_))
-    fromEnv.filter(_.isFile).orElse(Some(fromCwd).filter(_.isFile)).getOrElse(
-      throw new IllegalStateException(
-        s"tools/pyudf_server.py not found from ${sys.props("user.dir")} (set GRAFT_PYUDF)"))
-  }
-
-  private val proc: Process = new ProcessBuilder("python3", script.getAbsolutePath, "--port", "0")
-    .redirectError(ProcessBuilder.Redirect.INHERIT)
-    .start()
-
-  /** Ephemeral port the worker bound; read from its `PORT <n>` startup line.
-    * Lazy so a pool can launch every process before blocking on any port —
-    * interpreter startup overlaps instead of serializing. */
-  lazy val boundPort: Int = {
-    val br = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
-    val line = br.readLine()
-    if (line == null || !line.startsWith("PORT "))
-      throw new IllegalStateException(s"python udf worker failed to start (got: $line)")
-    line.stripPrefix("PORT ").trim.toInt
-  }
-
-  override def close(): Unit = proc.destroy()
-}
+final class PythonWorker
+    extends Sidecar("pyudf_server.py", "GRAFT_PYUDF", f => Seq("python3", f, "--port", "0"))
 
 /** Shared lazily-started worker POOL for queries exercising the CPython guest
   * on a single node (mirrors [[RemoteFixture]] for the in-process JVM server).
@@ -52,18 +28,50 @@ final class PythonWorker extends AutoCloseable {
 object PythonWorker {
   /** Pool size: enough interpreters to keep CPU-bound guests parallel
     * without paying 32 process startups; override with GRAFT_PYUDF_WORKERS. */
-  private val poolSize: Int =
-    sys.env.get("GRAFT_PYUDF_WORKERS").map(_.toInt).getOrElse(
-      math.min(8, Runtime.getRuntime.availableProcessors()))
-
-  lazy val shared: Seq[PythonWorker] = {
-    val ws = (1 to poolSize).map(_ => new PythonWorker()) // all processes launch...
-    sys.addShutdownHook(ws.foreach(_.close()))
-    ws.foreach(_.boundPort)                               // ...then block on ports
-    ws
-  }
+  lazy val shared: Seq[PythonWorker] = Sidecar.pool("GRAFT_PYUDF_WORKERS", 8)(new PythonWorker())
   /** All pool endpoints, for round-robin assignment across partitions. */
   def endpoints: Seq[(String, Int)] = shared.map(w => ("127.0.0.1", w.boundPort))
   /** A single pool port (legacy callers / discovery checks). */
   def port: Int = shared.head.boundPort
+}
+
+/** A guest-worker subprocess: `launch` runs `tools/<script>` (or the file the
+  * `env` variable names), and the worker prints `PORT <n>` once it listens. */
+abstract class Sidecar(script: String, env: String, launch: String => Seq[String])
+    extends AutoCloseable {
+  private val proc: Process = {
+    val fromCwd = new java.io.File(sys.props("user.dir"), s"tools/$script")
+    val file = sys.env.get(env).map(new java.io.File(_)).filter(_.isFile)
+      .orElse(Some(fromCwd).filter(_.isFile)).getOrElse(throw new IllegalStateException(
+        s"tools/$script not found from ${sys.props("user.dir")} (set $env)"))
+    new ProcessBuilder(launch(file.getAbsolutePath): _*)
+      .redirectError(ProcessBuilder.Redirect.INHERIT)
+      .start()
+  }
+
+  /** Ephemeral port the worker bound, from its `PORT <n>` startup line.
+    * Lazy so a pool can launch every process before blocking on any port —
+    * interpreter startup overlaps instead of serializing. */
+  lazy val boundPort: Int = {
+    val line = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
+      .readLine()
+    if (line == null || !line.startsWith("PORT "))
+      throw new IllegalStateException(s"$script failed to start (got: $line)")
+    line.stripPrefix("PORT ").trim.toInt
+  }
+
+  override def close(): Unit = proc.destroy()
+}
+
+object Sidecar {
+  /** A pool of `sizeEnv` (default: `max` capped at the core count) workers,
+    * closed at JVM exit: every process launches, then all block on ports. */
+  def pool[W <: Sidecar](sizeEnv: String, max: Int)(worker: => W): Seq[W] = {
+    val n = sys.env.get(sizeEnv).map(_.toInt)
+      .getOrElse(math.min(max, Runtime.getRuntime.availableProcessors()))
+    val ws = (1 to n).map(_ => worker)
+    sys.addShutdownHook(ws.foreach(_.close()))
+    ws.foreach(_.boundPort)
+    ws
+  }
 }

@@ -66,6 +66,35 @@ object RemoteProtocol {
   // per-call wall-clock deadline (TimeoutError over the wire)
   val Version = 4
 
+  /** One '\n'-terminated line of the line-framed wire, or null at end of
+    * stream. */
+  def readLine(in: java.io.InputStream): String = {
+    val sb = new java.lang.StringBuilder()
+    var b = in.read()
+    if (b < 0) return null
+    while (b >= 0 && b != '\n') { sb.append(b.toChar); b = in.read() }
+    sb.toString
+  }
+
+  /** A call's argument schema: columns `a0, a1, ...` of `argTypes`, tagged
+    * with `argMeta`'s extension metadata when given. */
+  def argSchema(argTypes: Seq[DataType], argMeta: Seq[SMetadata] = Nil): ASchema = {
+    val meta = if (argMeta.nonEmpty) argMeta else argTypes.map(_ => SMetadata.empty)
+    new ASchema(argTypes.zip(meta).zipWithIndex.map { case ((t, m), i) =>
+      toArrowField(s"a$i", t, m) }.asJava)
+  }
+
+  /** Allocate `root` and write `rows` into it, one bound writer per column. */
+  def fillRoot(root: VectorSchemaRoot, rows: Seq[Seq[Any]]): Unit = {
+    root.allocateNew()
+    val writers = root.getFieldVectors.asScala.map(cellWriter).toArray
+    rows.iterator.zipWithIndex.foreach { case (row, i) =>
+      var j = 0
+      while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
+    }
+    root.setRowCount(rows.size)
+  }
+
   private def fieldType(t: ArrowType, md: SMetadata): FieldType = {
     val ext = graft.types.GraftType.extensionOf(md)
     val m = ext.map(e => Map(ExtKey -> e).asJava).orNull
@@ -859,14 +888,6 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
     }
   }
 
-  private def readLine(in: DataInputStream): String = {
-    val sb = new java.lang.StringBuilder()
-    var b = in.read()
-    if (b < 0) return null
-    while (b >= 0 && b != '\n') { sb.append(b.toChar); b = in.read() }
-    sb.toString
-  }
-
   /** Sever every live connection (clients see EOF/reset and their retry
     * policy takes over) without stopping the listener — the shape of a
     * transient network blip, also used at shutdown. */
@@ -971,10 +992,7 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
   private def textExchange(cmd: String): Seq[String] = {
     out.write(cmd.getBytes(StandardCharsets.UTF_8))
     out.flush()
-    val status = readLine(in)
-    if (status == null) throw new java.io.EOFException("connection closed by server")
-    if (!status.startsWith("OK"))
-      throw new RuntimeException(s"remote request failed: $status")
+    expectOk()
     val lines = Seq.newBuilder[String]
     var l = readLine(in)
     while (l != null && l.nonEmpty) { lines += l; l = readLine(in) }
@@ -1043,24 +1061,7 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
     val verb = if (retract) "ACCRETRACT" else "ACC"
     out.write(s"$verb $fname\n".getBytes(StandardCharsets.UTF_8))
     writeBlob(out, state)
-    val meta = if (argMeta.nonEmpty) argMeta else argTypes.map(_ => SMetadata.empty)
-    val schema = new ASchema(argTypes.zip(meta).zipWithIndex.map { case ((t, m), i) =>
-      toArrowField(s"a$i", t, m) }.asJava)
-    val root = VectorSchemaRoot.create(schema, allocator)
-    val writer = new ArrowStreamWriter(root, null, out)
-    writer.start()
-    rows.grouped(BatchSize).foreach { chunk =>
-      root.allocateNew()
-      val writers = (0 until argTypes.length).map(j => cellWriter(root.getVector(j)))
-      chunk.zipWithIndex.foreach { case (row, i) =>
-        var j = 0
-        while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-      }
-      root.setRowCount(chunk.size)
-      writer.writeBatch()
-    }
-    writer.end()
-    root.close()
+    writeStream(argSchema(argTypes, argMeta), rows)
     out.flush()
     expectOk()
     readBlob(in)
@@ -1082,14 +1083,14 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
     writeBlob(out, state)
     out.flush()
     expectOk()
-    val reader = new ArrowStreamReader(in, allocator)
-    val rroot = reader.getVectorSchemaRoot
-    var result: Any = null
-    while (reader.loadNextBatch()) {
-      if (rroot.getRowCount > 0) result = getCell(rroot.getVector(0), 0)
+    readResponse { reader =>
+      val rroot = reader.getVectorSchemaRoot
+      var result: Any = null
+      while (reader.loadNextBatch()) {
+        if (rroot.getRowCount > 0) result = getCell(rroot.getVector(0), 0)
+      }
+      result
     }
-    reader.close(false)
-    result
   }
 
   private def expectOk(): Unit = {
@@ -1099,71 +1100,20 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
       throw new RuntimeException(s"remote call failed: $status")
   }
 
-  private def exchange(cmd: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
-                       argMeta: Seq[SMetadata],
-                       dictEncodeStrings: Boolean = false): Seq[Seq[Any]] =
+  private[remote] def exchange(cmd: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
+                               argMeta: Seq[SMetadata],
+                               dictEncodeStrings: Boolean = false): Seq[Seq[Any]] =
     withRetry(exchangeOnce(cmd, argTypes, rows, argMeta, dictEncodeStrings))
 
   private def exchangeOnce(cmd: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
                            argMeta: Seq[SMetadata],
                            dictEncodeStrings: Boolean): Seq[Seq[Any]] = {
     out.write(cmd.getBytes(StandardCharsets.UTF_8))
-    val meta = if (argMeta.nonEmpty) argMeta else argTypes.map(_ => SMetadata.empty)
-    val schema = new ASchema(argTypes.zip(meta).zipWithIndex.map { case ((t, m), i) =>
-      toArrowField(s"a$i", t, m) }.asJava)
-    val root = VectorSchemaRoot.create(schema, allocator)
-    try {
-      if (dictEncodeStrings) {
-        // one batch per exchange (the Spark integration already chunks at
-        // BatchSize): fill the value root, encode string columns, and let
-        // the stock writer ship schema + DictionaryBatches + index batch
-        require(rows.size <= BatchSize,
-          s"dictionary-encoded exchanges are single-batch (${rows.size} > $BatchSize rows)")
-        root.allocateNew()
-        val writers = (0 until argTypes.length).map(j => cellWriter(root.getVector(j)))
-        rows.zipWithIndex.foreach { case (row, i) =>
-          var j = 0
-          while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-        }
-        root.setRowCount(rows.size)
-        val (encRoot, provider, release) = dictionaryEncodeStrings(root, allocator)
-        try {
-          // close(), not just end(): the writer retains internal dictionary
-          // copies only close() releases — but close() also closes its
-          // channel, so shield the connection's stream behind a non-closing
-          // wrapper
-          val shield = new java.io.FilterOutputStream(out) {
-            override def write(b: Array[Byte], off: Int, len: Int): Unit =
-              out.write(b, off, len)
-            override def close(): Unit = out.flush()
-          }
-          val writer = new ArrowStreamWriter(encRoot, provider, shield)
-          try { writer.start(); writer.writeBatch(); writer.end() }
-          finally writer.close()
-        } finally release()
-      } else {
-        val writer = new ArrowStreamWriter(root, null, out)
-        writer.start()
-        rows.grouped(BatchSize).foreach { chunk =>
-          root.allocateNew()
-          val writers = (0 until argTypes.length).map(j => cellWriter(root.getVector(j)))
-          chunk.zipWithIndex.foreach { case (row, i) =>
-            var j = 0
-            while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-          }
-          root.setRowCount(chunk.size)
-          writer.writeBatch()
-        }
-        writer.end()
-      }
-    } finally root.close() // buffers must not outlive a failed (retried) attempt
+    if (dictEncodeStrings) writeDictEncoded(argSchema(argTypes, argMeta), rows)
+    else writeStream(argSchema(argTypes, argMeta), rows)
     out.flush()
-    val status = readLine(in)
-    if (status == null) throw new java.io.EOFException("connection closed by server")
-    if (!status.startsWith("OK"))
-      throw new RuntimeException(s"remote call failed: $status")
-    val reader = new ArrowStreamReader(in, allocator)
-    try {
+    expectOk()
+    readResponse { reader =>
       val rroot = reader.getVectorSchemaRoot
       val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
       while (reader.loadNextBatch()) {
@@ -1174,15 +1124,66 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
         doneBatch()
       }
       results.toSeq
-    } finally reader.close(false)
+    }
   }
 
-  private def readLine(in: DataInputStream): String = {
-    val sb = new java.lang.StringBuilder()
-    var b = in.read()
-    if (b < 0) return null
-    while (b >= 0 && b != '\n') { sb.append(b.toChar); b = in.read() }
-    sb.toString
+  /** Read one response IPC stream with `f`. A complete stream ends with its
+    * EOS marker while the connection stays open, so reaching end of input
+    * means the server hung up mid-response: an `EOFException`, never a
+    * short result (the reader alone treats end of input as end of stream). */
+  private def readResponse[T](f: ArrowStreamReader => T): T = {
+    var eof = false
+    val watched = new java.io.FilterInputStream(in) {
+      override def read(): Int = { val b = super.read(); if (b < 0) eof = true; b }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = super.read(b, off, len)
+        if (n < 0) eof = true
+        n
+      }
+    }
+    val reader = new ArrowStreamReader(watched, allocator)
+    val res = try f(reader) finally reader.close(false)
+    if (eof) throw new java.io.EOFException("connection closed mid-response")
+    res
+  }
+
+  /** Write `rows` as one Arrow IPC stream of [[RemoteProtocol.BatchSize]]
+    * batches. The root is closed even when a write fails: buffers must not
+    * outlive a failed (retried) attempt. */
+  private def writeStream(schema: ASchema, rows: Seq[Seq[Any]]): Unit = {
+    val root = VectorSchemaRoot.create(schema, allocator)
+    try {
+      val writer = new ArrowStreamWriter(root, null, out)
+      writer.start()
+      rows.grouped(BatchSize).foreach { chunk => fillRoot(root, chunk); writer.writeBatch() }
+      writer.end()
+    } finally root.close()
+  }
+
+  /** Write `rows` as ONE batch with string columns dictionary-encoded: the
+    * stock writer ships schema + DictionaryBatches + index batch. */
+  private def writeDictEncoded(schema: ASchema, rows: Seq[Seq[Any]]): Unit = {
+    require(rows.size <= BatchSize,
+      s"dictionary-encoded exchanges are single-batch (${rows.size} > $BatchSize rows)")
+    val root = VectorSchemaRoot.create(schema, allocator)
+    try {
+      fillRoot(root, rows)
+      val (encRoot, provider, release) = dictionaryEncodeStrings(root, allocator)
+      try {
+        // close(), not just end(): the writer retains internal dictionary
+        // copies only close() releases — but close() also closes its
+        // channel, so shield the connection's stream behind a non-closing
+        // wrapper
+        val shield = new java.io.FilterOutputStream(out) {
+          override def write(b: Array[Byte], off: Int, len: Int): Unit =
+            out.write(b, off, len)
+          override def close(): Unit = out.flush()
+        }
+        val writer = new ArrowStreamWriter(encRoot, provider, shield)
+        try { writer.start(); writer.writeBatch(); writer.end() }
+        finally writer.close()
+      } finally release()
+    } finally root.close()
   }
 
   override def close(): Unit = {
@@ -1199,59 +1200,30 @@ object RemoteFixture {
   def port: Int = shared.boundPort
 }
 
-/** Spark-side integration: evaluate a remote function per partition. */
-object RemoteUdf {
-  /** The exchange is latency-bound (one synchronous round-trip per
-    * [[RemoteProtocol.BatchSize]] chunk), so parallelism across partitions is
-    * the throughput lever: a single-file parquet scan arrives as ONE
-    * partition and would serialize every chunk. Fan narrow inputs out to the
-    * scheduler's default parallelism before the exchange. */
-  private def fanOut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
+/** The raw Arrow-IPC wire for [[RemoteOp]]: one [[UdfClient]] per partition
+  * task, closed with it. With `dictEncodeStrings`, string argument columns
+  * travel dictionary-encoded (see [[UdfClient.call]]). */
+private[remote] final case class IpcWire(fname: String, shape: CallShape,
+    dictEncodeStrings: Boolean = false) extends RemoteWire {
+  def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession =
+    new RemoteSession {
+      private val client = new UdfClient(host, port)
+      private val cmd = s"${shape.verb} $fname\n"
+      def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] =
+        client.exchange(cmd, argTypes, rows, Nil, dictEncodeStrings)
+      def close(dead: Boolean): Unit = client.close()
+    }
+}
 
-  /** Append `value` computed remotely from `argCols` — ONE pooled connection
-    * per partition, batched Arrow transfer, closed at task completion (the
-    * reference client embedded in a `mapPartitions`, SURVEY §2.1 #26).
-    * `endpoints` may list several equivalent servers (e.g. a pool of CPython
-    * workers); partitions round-robin across them by partition id. */
+/** Spark-side integration over the raw Arrow-IPC wire: each entry point is
+  * [[RemoteOp]] with an [[IpcWire]]. `endpoints` may list several
+  * equivalent servers (e.g. a pool of CPython workers). */
+object RemoteUdf {
+  /** Append `value` computed remotely from `argCols`. */
   def withRemoteColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                        fname: String, argCols: Seq[String],
-                       retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        // close the connection when the task finishes (success or failure)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        // ONE wire batch per exchange — the no-deadlock invariant: the client
-        // writes the whole request before reading, so multi-batch exchanges
-        // with large rows could fill both socket directions and hang. Keep
-        // request+response bounded by a single batch.
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, argTypes, rows)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  def withRemoteColumn(df: org.apache.spark.sql.DataFrame, host: String, port: Int,
-                       fname: String, argCols: Seq[String],
                        retType: DataType): org.apache.spark.sql.DataFrame =
-    withRemoteColumn(df, Seq((host, port)), fname, argCols, retType)
+    RemoteOp(df, endpoints, argCols, retType)(IpcWire(fname, CallShape.Scalar))
 
   /** [[withRemoteColumn]] with STRING argument columns dictionary-encoded on
     * the wire (schema-declared encoding + DictionaryBatch per exchange) —
@@ -1262,30 +1234,9 @@ object RemoteUdf {
     * [[RemoteProtocol.batchCellReaders]] sites. */
   def withRemoteColumnDict(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                            fname: String, argCols: Seq[String],
-                           retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.call(fname, argTypes, rows, Nil, dictEncodeStrings = true)
-          chunk.zip(vals).map { case (r, v) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
+                           retType: DataType): org.apache.spark.sql.DataFrame =
+    RemoteOp(df, endpoints, argCols, retType)(
+      IpcWire(fname, CallShape.Scalar, dictEncodeStrings = true))
 
   /** Define a guest function from source on EVERY endpoint of a worker pool
     * (each process owns its own registry, so registration must fan out) —
@@ -1304,63 +1255,14 @@ object RemoteUdf {
   def withRemoteFallibleColumn(df: org.apache.spark.sql.DataFrame,
                                endpoints: Seq[(String, Int)], fname: String,
                                argCols: Seq[String],
-                               retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+
-      StructField("value", retType) :+ StructField("error", StringType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          val vals = client.callWithErrors(fname, argTypes, rows)
-          chunk.zip(vals).map { case (r, (v, e)) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v :+ e)
-          }
-        }
-      }
-    }(enc)
-  }
+                               retType: DataType): org.apache.spark.sql.DataFrame =
+    RemoteOp(df, endpoints, argCols, retType)(IpcWire(fname, CallShape.Fallible))
 
   /** Explode each input row into the remote table function's output rows —
     * result columns are the input columns plus `value` (generator semantics
     * over the wire, reference `call_table_function`). */
   def withRemoteTableColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                             fname: String, argCols: Seq[String],
-                            retType: DataType): org.apache.spark.sql.DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields :+ StructField("value", retType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val (host, port) = eps(pid % eps.size)
-        val client = new UdfClient(host, port)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => client.close()))
-        it.grouped(RemoteProtocol.BatchSize).flatMap { chunk =>
-          val rows = chunk.map(r => argIdx.map(r.get))
-          client.callTable(fname, argTypes, rows).map { case (rowIdx, v) =>
-            org.apache.spark.sql.Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  def withRemoteTableColumn(df: org.apache.spark.sql.DataFrame, host: String, port: Int,
-                            fname: String, argCols: Seq[String],
                             retType: DataType): org.apache.spark.sql.DataFrame =
-    withRemoteTableColumn(df, Seq((host, port)), fname, argCols, retType)
+    RemoteOp(df, endpoints, argCols, retType)(IpcWire(fname, CallShape.Table))
 }

@@ -70,7 +70,7 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
                          recvWindow: Int = 1 << 23,
                          maxRetries: Int = 1)
     extends AutoCloseable {
-  import RemoteProtocol.{batchCellReaders, cellWriter, dictionaryEncodeStrings, toArrowField, fromArrowField}
+  import RemoteProtocol.{argSchema, batchCellReaders, dictionaryEncodeStrings, fillRoot, fromArrowField}
 
   private val Service = "/arrow.flight.protocol.FlightService"
   private def dial(): GrpcConn = new GrpcConn(host, port, timeoutMs, tls,
@@ -211,28 +211,20 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
   private def exchangeOn(g: GrpcConn, fname: String, argTypes: Seq[DataType],
                          rows: Seq[Seq[Any]], argMeta: Seq[SMetadata],
                          dictEncodeStrings: Boolean): Seq[Seq[Any]] = {
-    val meta = if (argMeta.nonEmpty) argMeta else argTypes.map(_ => SMetadata.empty)
-    val schema = new ASchema(argTypes.zip(meta).zipWithIndex.map { case ((t, m), i) =>
-      toArrowField(s"a$i", t, m) }.asJava)
+    val schema = argSchema(argTypes, argMeta)
     val descriptor = Pb.descriptorPath(fname)
 
     // request messages: schema FlightData (carries the descriptor), then one
     // FlightData per bounded batch
     val requestMsgs: Iterator[Array[Byte]] =
-      if (dictEncodeStrings) dictEncodedRequest(descriptor, schema, argTypes, rows).iterator
+      if (dictEncodeStrings) dictEncodedRequest(descriptor, schema, rows).iterator
       else {
         val (schemaHeader, _) = encapsulated(ch => { MessageSerializer.serialize(ch, schema); () })
         val schemaMsg = Pb.flightData(Some(descriptor), schemaHeader, Pb.Empty)
         val batchMsgs = rows.grouped(RemoteProtocol.BatchSize).map { chunk =>
           val root = VectorSchemaRoot.create(schema, allocator)
           try {
-            root.allocateNew()
-            val writers = argTypes.indices.map(j => cellWriter(root.getVector(j)))
-            chunk.zipWithIndex.foreach { case (row, i) =>
-              var j = 0
-              while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-            }
-            root.setRowCount(chunk.size)
+            fillRoot(root, chunk)
             val batch = new VectorUnloader(root).getRecordBatch
             try {
               val (header, body) = encapsulated(ch => { MessageSerializer.serialize(ch, batch); () })
@@ -339,9 +331,7 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
    */
   final class ExchangeStream private[FlightClient] (fname: String,
       argTypes: Seq[DataType], argMeta: Seq[SMetadata]) extends AutoCloseable {
-    private val meta = if (argMeta.nonEmpty) argMeta else argTypes.map(_ => SMetadata.empty)
-    private val schema = new ASchema(argTypes.zip(meta).zipWithIndex.map { case ((t, m), i) =>
-      toArrowField(s"a$i", t, m) }.asJava)
+    private val schema = argSchema(argTypes, argMeta)
     // withRetry: a SHARED client ([[FlightClientCache]]) can hand out a
     // connection whose server has since restarted — opening the stream
     // reconnects and retries like any other RPC
@@ -357,13 +347,7 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
       require(rows.nonEmpty, "streamed exchange batches must be non-empty")
       val root = VectorSchemaRoot.create(schema, allocator)
       try {
-        root.allocateNew()
-        val writers = argTypes.indices.map(j => cellWriter(root.getVector(j)))
-        rows.zipWithIndex.foreach { case (row, i) =>
-          var j = 0
-          while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-        }
-        root.setRowCount(rows.size)
+        fillRoot(root, rows)
         val batch = new VectorUnloader(root).getRecordBatch
         try {
           val (header, body) = encapsulated(ch => { MessageSerializer.serialize(ch, batch); () })
@@ -411,16 +395,10 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
     * a `DictionaryProvider`, then re-split into FlightData framing. All
     * `rows` ride one batch (callers chunk at [[RemoteProtocol.BatchSize]]). */
   private def dictEncodedRequest(descriptor: Array[Byte], schema: ASchema,
-      argTypes: Seq[DataType], rows: Seq[Seq[Any]]): Seq[Array[Byte]] = {
+      rows: Seq[Seq[Any]]): Seq[Array[Byte]] = {
     val root = VectorSchemaRoot.create(schema, allocator)
     try {
-      root.allocateNew()
-      val writers = argTypes.indices.map(j => cellWriter(root.getVector(j)))
-      rows.zipWithIndex.foreach { case (row, i) =>
-        var j = 0
-        while (j < writers.length) { writers(j)(i, row(j)); j += 1 }
-      }
-      root.setRowCount(rows.size)
+      fillRoot(root, rows)
       // shared encoder with the plain wire ([[RemoteProtocol]]): distinct
       // non-null values in first-seen order, int32 indices
       val (encRoot, provider, release) = dictionaryEncodeStrings(root, allocator)

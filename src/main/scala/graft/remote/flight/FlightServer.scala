@@ -883,7 +883,7 @@ final class FlightServer(port: Int = 0,
       ex.bout.write(s"$verb ${ex.name}\n".getBytes(StandardCharsets.UTF_8))
       IpcFraming.write(ex.bout, schemaFd.dataHeader, schemaFd.dataBody)
       ex.bout.flush()
-      val status = readLine(ex.bin)
+      val status = RemoteProtocol.readLine(ex.bin)
       if (status == null) throw new EOFException("backend closed")
       if (!status.startsWith("OK")) {
         val msg = status.stripPrefix("ERR").trim
@@ -918,14 +918,6 @@ final class FlightServer(port: Int = 0,
       }
       ex.closeBackend()
       if (!req.reset) sendTrailers(sid, 0, "", trailersOnly = false)
-    }
-
-    private def readLine(in: DataInputStream): String = {
-      val sb = new java.lang.StringBuilder()
-      var b = in.read()
-      if (b < 0) return null
-      while (b >= 0 && b != '\n') { sb.append(b.toChar); b = in.read() }
-      sb.toString
     }
   }
 }

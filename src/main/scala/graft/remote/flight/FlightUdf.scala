@@ -1,35 +1,73 @@
 package graft.remote.flight
 
-import graft.remote.RemoteProtocol
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import graft.remote.{CallShape, RemoteOp, RemoteProtocol, RemoteSession, RemoteWire, Sidecar}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.DataType
+import scala.util.control.NonFatal
+
+/** The Flight per-chunk wire for [[graft.remote.RemoteOp]]: each partition
+  * task leases a shared multiplexed [[FlightClient]] from
+  * [[FlightClientCache]] (released at task end, evicted when its endpoint
+  * fails) and runs one DoExchange per bounded chunk, so the per-stream
+  * half-duplex exchange can never outgrow flow-control windows. */
+private[flight] final case class FlightChunkWire(fname: String, shape: CallShape,
+    dictEncodeStrings: Boolean = false) extends RemoteWire {
+  def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession =
+    new RemoteSession {
+      private val lease = FlightClientCache.acquire(host, port)
+      def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = shape match {
+        case CallShape.Scalar =>
+          lease.client.exchange(fname, argTypes, rows, Nil, dictEncodeStrings)
+        case CallShape.Fallible =>
+          lease.client.callWithErrors(fname, argTypes, rows).map { case (v, e) => Seq(v, e) }
+        case CallShape.Table =>
+          lease.client.callTable(fname, argTypes, rows).map { case (i, v) => Seq(i, v) }
+      }
+      def close(dead: Boolean): Unit = { if (dead) lease.markDead(); lease.release() }
+    }
+}
+
+/** The Flight streamed wire for [[graft.remote.RemoteOp]]: ONE long-lived
+  * DoExchange ([[FlightClient.ExchangeStream]]) per partition over a leased
+  * client, every chunk ping-ponged on it, so the per-exchange setup
+  * (HEADERS, descriptor, schema message, trailers) is paid once per
+  * PARTITION. A failover replays only the in-flight chunk on a fresh stream.
+  *
+  * Table functions stay on [[FlightChunkWire]] BY DESIGN: a
+  * reference-shaped server may emit 0..N result batches per input batch for
+  * a table function (yield chunking, empty-yield elision — e.g.
+  * `tools/flightudf_server.py` `Table.eval_batch`), so a half-duplex
+  * ping-pong client has no framing for "this input batch's results are
+  * done" short of end-of-stream. The bounded per-chunk exchange IS that
+  * framing. */
+private[flight] final case class FlightStreamWire(fname: String, shape: CallShape)
+    extends RemoteWire {
+  require(shape != CallShape.Table, "table functions run on the per-chunk Flight wire")
+  def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession = {
+    val lease = FlightClientCache.acquire(host, port)
+    val stream =
+      try lease.client.openExchange(fname, argTypes)
+      catch { case NonFatal(e) => lease.markDead(); lease.release(); throw e }
+    new RemoteSession {
+      def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = stream.call(rows)
+      def close(dead: Boolean): Unit = {
+        try stream.close() catch { case _: Exception => }
+        if (dead) lease.markDead()
+        lease.release()
+      }
+    }
+  }
+}
 
 /**
- * Spark-side Arrow Flight UDF integration — the partition-leased shape of
- * [[graft.remote.RemoteUdf]] (bounded batches per exchange, round-robin
- * across a server pool), but speaking the reference's ACTUAL wire: Arrow
- * Flight over gRPC (`arrow-udf-runtime/src/remote/mod.rs`). A user of the
- * reference can point these at their existing Java/Python `UdfServer`
- * deployments unchanged — this closes the one interop gap
- * `docs/FLIGHT_INTEROP.md` carried.
- *
- * Scale notes: parallelism rides Spark's partitioning (narrow inputs are
- * fanned to default parallelism first), but CONNECTIONS are multiplexed —
- * each partition leases a shared [[FlightClient]] from [[FlightClientCache]]
- * and its exchanges interleave as h2 streams with the other partitions', so
- * a 32-core executor holds a few sockets per UDF endpoint instead of 32
- * (per-executor sockets ≈ ⌈concurrent tasks / maxLeases⌉ — on a
- * 1000-executor cluster that's the difference between ~4k and ~32k
- * connections per endpoint). Each DoExchange carries one bounded batch so
- * the per-stream half-duplex exchange can never outgrow flow-control
- * windows.
+ * Spark-side Arrow Flight UDF integration: each entry point is
+ * [[graft.remote.RemoteOp]] over a Flight wire, speaking the reference's
+ * ACTUAL protocol — Arrow Flight over gRPC (`arrow-udf-runtime/src/remote/
+ * mod.rs`). A user of the reference can point these at their existing
+ * Java/Python `UdfServer` deployments unchanged. Connections are shared
+ * and multiplexed across partitions (see [[FlightClientCache]]).
  */
 object FlightUdf {
-  private def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
   /** Resolve the return type of `fname` from the server's FlightInfo —
     * discovery-driven typing, like the reference resolving `Function.returns`
     * before planning (`remote/mod.rs:79-86`). */
@@ -46,120 +84,12 @@ object FlightUdf {
     } finally c.close()
   }
 
-  /** The shared partition shape: fan narrow inputs out, one LEASED
-    * [[FlightClient]] per partition (a shared multiplexed client from
-    * [[FlightClientCache]] — concurrent partitions interleave their
-    * exchanges as h2 streams, so an executor holds a few sockets per
-    * endpoint, not one per core; released at task end, round-robin over
-    * `endpoints`), one bounded row chunk per exchange; `perChunk` maps each
-    * chunk + its extracted argument rows to output rows.
-    *
-    * Resilience (the [[graft.remote.UdfClient]] discipline on the Flight
-    * wire): each client replays an exchange on its own endpoint after a
-    * transient failure ([[FlightClient]] `maxRetries`); when that endpoint
-    * stays dead, the partition FAILS OVER to the next endpoint in the pool
-    * and replays the chunk there — exchanges are stateless and chunk-scoped,
-    * so a replay is idempotent and already-emitted chunks are untouched. A
-    * dead endpoint at connect time is skipped the same way. Only when every
-    * endpoint refuses does the task fail (and Spark's task retry takes
-    * over). Deadline timeouts and gRPC statuses are never failed over —
-    * those are answers, not blips. */
-  private def withPartitionClient(df: DataFrame, endpoints: Seq[(String, Int)],
-      argCols: Seq[String], extraFields: Seq[StructField],
-      batchRows: Int = RemoteProtocol.BatchSize)(
-      perChunk: (FlightClient, Seq[DataType], IndexedSeq[Row], Seq[Seq[Any]]) => Iterator[Row])
-      : DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields ++ extraFields)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        var epIdx = pid % eps.size
-        var lease: FlightClientCache.Lease = null
-        // lease epIdx (dials only when no shared client has stream headroom),
-        // skipping dead endpoints; a fully-dead ring is re-tried with
-        // exponential backoff (covers a restarting server's window — a
-        // single-endpoint pool mid-restart comes back within a few seconds)
-        // before the task fails and Spark-level retry takes over
-        def connect(): Unit = {
-          var pass = 0
-          var last: Throwable = null
-          while (lease == null && pass < 5) {
-            var tries = 0
-            while (lease == null && tries < eps.size) {
-              val (host, port) = eps((epIdx + tries) % eps.size)
-              try {
-                lease = FlightClientCache.acquire(host, port)
-                epIdx = (epIdx + tries) % eps.size
-              } catch {
-                case e: java.io.IOException => last = e; tries += 1
-              }
-            }
-            pass += 1
-            if (lease == null && pass < 5) Thread.sleep(250L << pass)
-          }
-          if (lease == null) throw last
-        }
-        connect()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => if (lease != null) lease.release()))
-        it.grouped(batchRows).flatMap { chunk0 =>
-          val chunk = chunk0.toIndexedSeq
-          val rows = chunk.map(r => argIdx.map(r.get))
-          var failedOver = 0
-          var res: Iterator[Row] = null
-          while (res == null) {
-            try res = perChunk(lease.client, argTypes, chunk, rows)
-            catch {
-              case e: GrpcStatusException => throw e // server answered
-              case e: java.net.SocketTimeoutException =>
-                // deadline: the task stays aborted (containment), but the
-                // endpoint just proved itself hung — evict the shared client
-                // so the next task dials fresh instead of inheriting a
-                // connection whose server sat on a read for timeoutMs
-                lease.markDead()
-                throw e
-              case e: java.io.IOException =>
-                // this endpoint is dead past its own retries: rotate (one
-                // full ring pass, plus one — a single-endpoint pool gets a
-                // reconnect-with-backoff shot at its restarted server).
-                // markDead evicts the shared client; other holders keep it
-                // until they release (their own retries may revive it).
-                failedOver += 1
-                if (failedOver > eps.size) throw e
-                lease.markDead()
-                lease.release()
-                lease = null
-                epIdx = (epIdx + 1) % eps.size
-                connect()
-            }
-          }
-          res
-        }
-      }
-    }(enc)
-  }
-
   /** Append `value` computed by the Flight server's scalar function.
     * `batchRows` bounds each exchange (default [[RemoteProtocol.BatchSize]]). */
   def withFlightColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
                        argCols: Seq[String], retType: DataType,
                        batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType)),
-        batchRows) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(client.call(fname, argTypes, rows).iterator).map {
-          case (r, v) => Row.fromSeq(r.toSeq :+ v)
-        }
-    }
-
-  def withFlightColumn(df: DataFrame, host: String, port: Int, fname: String,
-                       argCols: Seq[String], retType: DataType): DataFrame =
-    withFlightColumn(df, Seq((host, port)), fname, argCols, retType)
+    RemoteOp(df, endpoints, argCols, retType, batchRows)(FlightChunkWire(fname, CallShape.Scalar))
 
   /** [[withFlightColumn]] with STRING argument columns dictionary-encoded on
     * the wire (inline DictionaryBatch per exchange) — the batch shape a
@@ -170,153 +100,41 @@ object FlightUdf {
   def withFlightColumnDict(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
                            argCols: Seq[String], retType: DataType,
                            batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType)),
-        batchRows) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(
-          client.call(fname, argTypes, rows, Nil, dictEncodeStrings = true).iterator).map {
-          case (r, v) => Row.fromSeq(r.toSeq :+ v)
-        }
-    }
+    RemoteOp(df, endpoints, argCols, retType, batchRows)(
+      FlightChunkWire(fname, CallShape.Scalar, dictEncodeStrings = true))
 
   /** Explode each row into the Flight table function's yields (generator
     * semantics over the wire, reference `call_table_function`). */
   def withFlightTableColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
                             argCols: Seq[String], retType: DataType): DataFrame =
-    withPartitionClient(df, endpoints, argCols, Seq(StructField("value", retType))) {
-      (client, argTypes, chunk, rows) =>
-        client.callTable(fname, argTypes, rows).iterator.map {
-          case (rowIdx, v) => Row.fromSeq(chunk(rowIdx).toSeq :+ v)
-        }
-    }
+    RemoteOp(df, endpoints, argCols, retType)(FlightChunkWire(fname, CallShape.Table))
 
-  def withFlightTableColumn(df: DataFrame, host: String, port: Int, fname: String,
-                            argCols: Seq[String], retType: DataType): DataFrame =
-    withFlightTableColumn(df, Seq((host, port)), fname, argCols, retType)
-
-  /** Append `value` over ONE long-lived DoExchange per partition — the
-    * reference's multi-batch streaming shape ([[FlightClient.ExchangeStream]]):
-    * every bounded chunk ping-pongs over the same stream, so the per-exchange
-    * setup (HEADERS, descriptor, schema message, trailers) is paid once per
-    * PARTITION instead of once per [[RemoteProtocol.BatchSize]] rows. Wins
-    * grow as BatchSize shrinks (more chunks per partition). Requires an
-    * incrementally-evaluating server — the reference Java/Python servers,
-    * and graft's own [[FlightServer]] (per-batch passthrough dispatch).
-    * Failure parity: a transient failure closes the stream, fails over like
-    * [[withFlightColumn]], and replays ONLY the in-flight chunk on a fresh
-    * stream (prior chunks' results are already emitted; chunks are
-    * independent, so the replay is idempotent). */
+  /** Append `value` over ONE long-lived DoExchange per partition (see
+    * [[FlightStreamWire]]). Wins grow as `batchRows` shrinks (more chunks
+    * per partition). Requires an incrementally-evaluating server — the
+    * reference Java/Python servers, and graft's own [[FlightServer]]
+    * (per-batch passthrough dispatch). */
   def withFlightColumnStreamed(df: DataFrame, endpoints: Seq[(String, Int)],
       fname: String, argCols: Seq[String], retType: DataType,
       batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withStreamedClient(df, endpoints, fname, argCols,
-      Seq(StructField("value", retType)), batchRows)(
-      (r, v) => Row.fromSeq(r.toSeq :+ v.head))
+    RemoteOp(df, endpoints, argCols, retType, batchRows)(FlightStreamWire(fname, CallShape.Scalar))
 
   /** [[withFlightFallibleColumn]] over ONE long-lived DoExchange per
-    * partition: the fallible (value, error) column pair rides the streamed
-    * mode unchanged, because the error-column contract keeps results 1:1
-    * with input rows — each ping-ponged chunk returns exactly its row count,
-    * just with two result columns.
-    *
-    * Table functions, by contrast, stay on the per-chunk
-    * [[withFlightTableColumn]] path BY DESIGN: a reference-shaped server may
-    * emit 0..N result batches per input batch for a table function (yield
-    * chunking, empty-yield elision — e.g. `tools/flightudf_server.py`
-    * `Table.eval_batch`), so a half-duplex ping-pong client has no framing
-    * for "this input batch's results are done" short of end-of-stream. The
-    * bounded per-chunk exchange IS that framing. */
+    * partition: the error-column contract keeps results 1:1 with input
+    * rows, so each ping-ponged chunk returns exactly its row count, just
+    * with two result columns. */
   def withFlightFallibleColumnStreamed(df: DataFrame, endpoints: Seq[(String, Int)],
       fname: String, argCols: Seq[String], retType: DataType,
       batchRows: Int = RemoteProtocol.BatchSize): DataFrame =
-    withStreamedClient(df, endpoints, fname, argCols,
-      Seq(StructField("value", retType), StructField("error", StringType)), batchRows)(
-      (r, v) => Row.fromSeq(r.toSeq :+ v(0) :+ v(1)))
-
-  private def withStreamedClient(df: DataFrame, endpoints: Seq[(String, Int)],
-      fname: String, argCols: Seq[String], extraFields: Seq[StructField],
-      batchRows: Int)(rowOf: (Row, Seq[Any]) => Row): DataFrame = {
-    val argTypes = argCols.map(c => df.schema(c).dataType)
-    val argIdx = argCols.map(df.schema.fieldIndex)
-    val outSchema = StructType(df.schema.fields ++ extraFields)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val eps = endpoints.toIndexedSeq
-    fanOut(df).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        var epIdx = pid % eps.size
-        var lease: FlightClientCache.Lease = null
-        var stream: FlightClient#ExchangeStream = null
-        def closeAll(markDead: Boolean): Unit = {
-          if (stream != null) { try stream.close() catch { case _: Exception => }; stream = null }
-          if (lease != null) {
-            if (markDead) lease.markDead()
-            lease.release()
-            lease = null
-          }
-        }
-        def connect(): Unit = {
-          var pass = 0
-          var last: Throwable = null
-          while (stream == null && pass < 5) {
-            var tries = 0
-            while (stream == null && tries < eps.size) {
-              val (host, port) = eps((epIdx + tries) % eps.size)
-              try {
-                lease = FlightClientCache.acquire(host, port)
-                stream = lease.client.openExchange(fname, argTypes)
-                epIdx = (epIdx + tries) % eps.size
-              } catch {
-                case e: java.io.IOException => last = e; closeAll(markDead = true); tries += 1
-              }
-            }
-            pass += 1
-            if (stream == null && pass < 5) Thread.sleep(250L << pass)
-          }
-          if (stream == null) throw last
-        }
-        connect()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => closeAll(markDead = false)))
-        it.grouped(batchRows).flatMap { chunk0 =>
-          val chunk = chunk0.toIndexedSeq
-          val rows = chunk.map(r => argIdx.map(r.get))
-          var failedOver = 0
-          var vals: Seq[Seq[Any]] = null
-          while (vals == null) {
-            try vals = stream.call(rows)
-            catch {
-              case e: GrpcStatusException => throw e
-              case e: java.net.SocketTimeoutException =>
-                lease.markDead() // hung endpoint: evict (see non-streamed twin)
-                throw e
-              case e: java.io.IOException =>
-                failedOver += 1
-                if (failedOver > eps.size) throw e
-                closeAll(markDead = true)
-                epIdx = (epIdx + 1) % eps.size
-                connect()
-            }
-          }
-          chunk.iterator.zip(vals.iterator).map { case (r, v) => rowOf(r, v) }
-        }
-      }
-    }(enc)
-  }
+    RemoteOp(df, endpoints, argCols, retType, batchRows)(
+      FlightStreamWire(fname, CallShape.Fallible))
 
   /** Append `value` AND `error` columns computed over the Flight wire — the
     * fallible error-column surface served by a graft [[FlightServer]]
     * (mirrors [[graft.remote.RemoteUdf.withRemoteFallibleColumn]]). */
   def withFlightFallibleColumn(df: DataFrame, endpoints: Seq[(String, Int)], fname: String,
                                argCols: Seq[String], retType: DataType): DataFrame =
-    withPartitionClient(df, endpoints, argCols,
-        Seq(StructField("value", retType), StructField("error", StringType))) {
-      (client, argTypes, chunk, rows) =>
-        chunk.iterator.zip(client.callWithErrors(fname, argTypes, rows).iterator).map {
-          case (r, (v, e)) => Row.fromSeq(r.toSeq :+ v :+ e)
-        }
-    }
+    RemoteOp(df, endpoints, argCols, retType)(FlightChunkWire(fname, CallShape.Fallible))
 }
 
 /**
@@ -328,18 +146,13 @@ object FlightUdf {
  * how stock gRPC channels behave).
  *
  * Why a CAP at all: sockets are the fleet-level resource (per-endpoint
- * socket count = executors × MaxConns), streams are free. The default sat
- * at 32 through r14 because graft's own [[FlightServer]] was
- * thread-per-connection — stacked streams serialized behind each other's
- * backend round-trips (measured 0.31 s → 0.54 s at 8 streams/conn). The
- * r15 server dispatches streams in parallel (per-stream workers), which
- * removed that penalty (`x_flight_throughput_5m` at exact parity, 8 conns
- * vs 32), so the default dropped to 8: every supported server type — the
- * reference's grpc thread-pool servers and graft's own — now takes stacked
- * streams at full throughput, and a 1000-executor fleet holds ~8k sockets
- * per endpoint instead of ~32k. `GRAFT_FLIGHT_CONNS_PER_EP` still tunes it
- * either way; idle connections are reused across task waves, so the count
- * tracks peak CONCURRENCY, not partition count.
+ * socket count = executors × MaxConns), streams are free. The cap is 8:
+ * every supported server type — the reference's grpc thread-pool servers
+ * and graft's own stream-parallel [[FlightServer]] — takes stacked streams
+ * at full throughput (`x_flight_throughput_5m` min 0.498 s at 8 conns vs
+ * 0.498 s at 32 on the same host), and a 1000-executor fleet holds ~8k
+ * sockets per endpoint instead of ~32k. Idle connections are reused across
+ * task waves, so the count tracks peak CONCURRENCY, not partition count.
  *
  * Failure discipline: a partition that exhausts [[FlightClient]]'s own
  * reconnect/replay marks its lease DEAD — the client is evicted for new
@@ -349,15 +162,8 @@ object FlightUdf {
  */
 private[flight] object FlightClientCache {
   /** Connections per endpoint before leases start stacking as multiplexed
-    * streams. Default 8 (r15): graft's own [[FlightServer]] now dispatches
-    * streams in PARALLEL (per-stream workers), so stacked leases no longer
-    * serialize behind each other's backend round-trips on ANY supported
-    * server type — measured at throughput parity with the r14
-    * connection-per-task default (`x_flight_throughput_5m` min 0.498 s at 8
-    * conns vs 0.498 s at 32 on the same host). A 1000-executor fleet now
-    * holds ~8k sockets per endpoint instead of ~32k. */
-  def maxConns: Int =
-    sys.env.get("GRAFT_FLIGHT_CONNS_PER_EP").map(_.toInt).getOrElse(8)
+    * streams. */
+  val MaxConns = 8
 
   private final class Entry(val client: FlightClient) {
     var leases = 0
@@ -419,7 +225,7 @@ private[flight] object FlightClientCache {
             return new Lease(idle.client, idle, key)
           case None =>
             val live = list.filter(!_.dead)
-            if (live.size + dialing(key) < maxConns) {
+            if (live.size + dialing(key) < MaxConns) {
               dialing(key) += 1
               mustDial = true
             } else if (live.nonEmpty) {
@@ -466,45 +272,16 @@ object FlightFixture {
   * stack a reference `arrow_udf.UdfServer` deployment runs) and exposes its
   * bound port. The interop proof: graft's from-scratch gRPC/Flight client
   * calling a stock Flight server it shares zero code with. */
-final class FlightWorker extends AutoCloseable {
-  private val script: java.io.File = {
-    val fromCwd = new java.io.File(sys.props("user.dir"), "tools/flightudf_server.py")
-    val fromEnv = sys.env.get("GRAFT_FLIGHTUDF").map(new java.io.File(_))
-    fromEnv.filter(_.isFile).orElse(Some(fromCwd).filter(_.isFile)).getOrElse(
-      throw new IllegalStateException(
-        s"tools/flightudf_server.py not found from ${sys.props("user.dir")} (set GRAFT_FLIGHTUDF)"))
-  }
-
-  private val proc: Process = new ProcessBuilder("python3", script.getAbsolutePath)
-    .redirectError(ProcessBuilder.Redirect.INHERIT)
-    .start()
-
-  lazy val boundPort: Int = {
-    val br = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
-    val line = br.readLine()
-    if (line == null || !line.startsWith("PORT "))
-      throw new IllegalStateException(s"flight udf server failed to start (got: $line)")
-    line.stripPrefix("PORT ").trim.toInt
-  }
-
-  override def close(): Unit = proc.destroy()
-}
+final class FlightWorker
+    extends Sidecar("flightudf_server.py", "GRAFT_FLIGHTUDF", f => Seq("python3", f))
 
 /** Shared lazily-started Flight server pool (one grpc-core server is
   * GIL-bound on the python side for CPU work, but its grpc threads keep
   * several exchanges in flight; a small pool matches the CPython worker
   * pool's local-mode shape). */
 object FlightWorker {
-  private val poolSize: Int =
-    sys.env.get("GRAFT_FLIGHTUDF_WORKERS").map(_.toInt).getOrElse(
-      math.min(4, Runtime.getRuntime.availableProcessors()))
-
-  lazy val shared: Seq[FlightWorker] = {
-    val ws = (1 to poolSize).map(_ => new FlightWorker())
-    sys.addShutdownHook(ws.foreach(_.close()))
-    ws.foreach(_.boundPort)
-    ws
-  }
+  lazy val shared: Seq[FlightWorker] =
+    Sidecar.pool("GRAFT_FLIGHTUDF_WORKERS", 4)(new FlightWorker())
   def endpoints: Seq[(String, Int)] = shared.map(w => ("127.0.0.1", w.boundPort))
   def port: Int = shared.head.boundPort
 }

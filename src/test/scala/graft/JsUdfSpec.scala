@@ -355,4 +355,44 @@ class JsUdfSpec extends AnyFunSuite {
       assert(e.getMessage.contains("Error: no scalar function no_such_fn"), e.getMessage)
     } finally client.close()
   }
+
+  /** A listener that answers nothing: each accepted connection has its write
+    * side shut at once (the client reads EOF) and closes when the client
+    * hangs up. */
+  private def closingListener(): java.net.ServerSocket = {
+    val ss = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val t = new Thread(() => {
+      try while (true) {
+        val s = ss.accept()
+        s.shutdownOutput()
+        val drain = new Thread(() =>
+          try { val in = s.getInputStream; while (in.read() >= 0) {} }
+          catch { case _: java.io.IOException => }
+          finally s.close())
+        drain.setDaemon(true)
+        drain.start()
+      } catch { case _: java.io.IOException => } // listener closed
+    })
+    t.setDaemon(true)
+    t.start()
+    ss
+  }
+
+  test("a peer-closed connection is an EOFException, and the pool fails over past it") {
+    val ss = closingListener()
+    try {
+      val c = new JsUdfClient("127.0.0.1", ss.getLocalPort)
+      try {
+        intercept[java.io.EOFException](c.version())
+        intercept[java.io.EOFException](c.call("gcd", IntegerType, Seq(Seq(12, 8))))
+      } finally c.close()
+      import spark.implicits._
+      val df = (1 to 500).map(i => (i, i * 6, i * 4)).toDF("id", "a", "b").repartition(4)
+      val out = JsUdf.withJsColumn(df, ("127.0.0.1", ss.getLocalPort) +: JsWorker.endpoints,
+        "gcd", Seq("a", "b"), IntegerType)
+      val rows = out.select("id", "value").as[(Int, Int)].collect().toMap
+      assert(rows.size == 500)
+      assert((1 to 500).forall(i => rows(i) == 2 * i))
+    } finally ss.close()
+  }
 }

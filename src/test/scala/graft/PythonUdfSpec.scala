@@ -133,13 +133,13 @@ class PythonUdfSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1 to 500).map(i => (i, i * 6, i * 4)).toDF("id", "a", "b")
       .repartition(4)
-    val out = RemoteUdf.withRemoteColumn(df, "127.0.0.1", port, "gcd",
+    val out = RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", port)), "gcd",
       Seq("a", "b"), IntegerType)
     val rows = out.select("id", "value").as[(Int, Int)].collect().toMap
     assert(rows.size == 500)
     assert((1 to 500).forall(i => rows(i) == 2 * i))
     val small = Seq(3, 1, 4).toDF("id")
-    val tbl = RemoteUdf.withRemoteTableColumn(small, "127.0.0.1", port,
+    val tbl = RemoteUdf.withRemoteTableColumn(small, Seq(("127.0.0.1", port)),
       "py_series", Seq("id"), IntegerType)
     assert(tbl.count() == 8) // 3 + 1 + 4 generated rows
   }

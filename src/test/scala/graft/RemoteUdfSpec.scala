@@ -1,6 +1,6 @@
 package graft
 
-import graft.remote.{RemoteUdf, UdfClient, UdfServer}
+import graft.remote.{RemoteProtocol, RemoteUdf, UdfClient, UdfServer}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -392,7 +392,7 @@ class RemoteUdfSpec extends AnyFunSuite {
     val server = new UdfServer()
     try {
       val df = spark.range(4).selectExpr("CAST(id AS INT) AS n")
-      val out = RemoteUdf.withRemoteTableColumn(df, "127.0.0.1", server.boundPort,
+      val out = RemoteUdf.withRemoteTableColumn(df, Seq(("127.0.0.1", server.boundPort)),
         "range_setof", Seq("n"), IntegerType)
       val rows = out.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
       assert(rows == Seq((1, 0), (2, 0), (2, 1), (3, 0), (3, 1), (3, 2)))
@@ -404,7 +404,7 @@ class RemoteUdfSpec extends AnyFunSuite {
     val server = new UdfServer()
     try {
       val df = spark.range(100).selectExpr("CAST(id AS INT) AS a", "CAST(id % 7 AS INT) AS b")
-      val out = RemoteUdf.withRemoteColumn(df, "127.0.0.1", server.boundPort,
+      val out = RemoteUdf.withRemoteColumn(df, Seq(("127.0.0.1", server.boundPort)),
         "add", Seq("a", "b"), IntegerType)
       val rows = out.collect()
       assert(rows.length == 100)
@@ -497,5 +497,98 @@ class RemoteUdfSpec extends AnyFunSuite {
       assert(line() == "")
       alloc.close()
     } finally { sock.close(); server.close() }
+  }
+
+  private def freePort(): Int = {
+    val s = new java.net.ServerSocket(0)
+    try s.getLocalPort finally s.close()
+  }
+
+  private def gcdRows(df: org.apache.spark.sql.DataFrame, eps: Seq[(String, Int)],
+                      fname: String): Seq[(Int, Int, Int)] = {
+    import spark.implicits._
+    RemoteUdf.withRemoteColumn(df, eps, fname, Seq("a", "b"), IntegerType)
+      .as[(Int, Int, Int)].collect().toSeq.sorted
+  }
+
+  test("a response cut off after its schema is an EOFException, not a short result") {
+    // a server that answers OK and the result schema, then hangs up (write
+    // side shut, request drained so the close is a FIN, not a reset)
+    val ss = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val head = new java.io.ByteArrayOutputStream()
+    val root = org.apache.arrow.vector.VectorSchemaRoot.create(
+      RemoteProtocol.argSchema(Seq(IntegerType)), alloc)
+    new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, head).start()
+    root.close(); alloc.close()
+    val t = new Thread(() => {
+      try while (true) {
+        val s = ss.accept()
+        s.getOutputStream.write("OK\n".getBytes("UTF-8") ++ head.toByteArray)
+        s.shutdownOutput()
+        val drain = new Thread(() =>
+          try { val in = s.getInputStream; while (in.read() >= 0) {} }
+          catch { case _: java.io.IOException => }
+          finally s.close())
+        drain.setDaemon(true)
+        drain.start()
+      } catch { case _: java.io.IOException => } // listener closed
+    })
+    t.setDaemon(true)
+    t.start()
+    try {
+      val client = new UdfClient("127.0.0.1", ss.getLocalPort)
+      try intercept[java.io.EOFException](
+        client.call("add", Seq(IntegerType, IntegerType), Seq(Seq(1, 2))))
+      finally client.close()
+    } finally ss.close()
+  }
+
+  test("raw-wire failover: a dead endpoint in the pool is skipped at connect time") {
+    Graft.install(spark)
+    val server = new UdfServer()
+    try {
+      val df = spark.range(0, 20000, 1, 8)
+        .selectExpr("CAST(id * 6 AS INT) AS a", "CAST(id % 97 + 1 AS INT) AS b")
+      val live = ("127.0.0.1", server.boundPort)
+      val single = gcdRows(df, Seq(live), "gcd")
+      assert(single.length == 20000)
+      assert(gcdRows(df, Seq(("127.0.0.1", freePort()), live), "gcd") == single)
+    } finally server.close()
+  }
+
+  test("raw-wire failover: a server closed mid-query fails over to the rest of the pool") {
+    Graft.install(spark)
+    // a slowed gcd, so the query is still running when one server closes
+    val served = new java.util.concurrent.atomic.AtomicLong()
+    graft.functions.Udf.scalar2[Int, Int, Int]("failover_gcd(int, int) -> int") { (x, y) =>
+      if (served.incrementAndGet() % 256 == 0) Thread.sleep(1)
+      graft.functions.Kernels.gcd(x, y)
+    }
+    Graft.install(spark)
+    val s1 = new UdfServer()
+    val s2 = new UdfServer()
+    try {
+      val rows = 16L * 2 * RemoteProtocol.BatchSize
+      val df = spark.range(0, rows, 1, 16)
+        .selectExpr("CAST(id * 6 AS INT) AS a", "CAST(id % 97 + 1 AS INT) AS b")
+      val eps = Seq(("127.0.0.1", s1.boundPort), ("127.0.0.1", s2.boundPort))
+      @volatile var servedAtClose = -1L
+      val closer = new Thread(() => {
+        // both servers get tasks from the first wave; close s1 once a few
+        // chunks have been answered
+        while (served.get() < 4L * RemoteProtocol.BatchSize) Thread.sleep(5)
+        servedAtClose = served.get()
+        s1.close()
+      })
+      closer.start()
+      val got = gcdRows(df, eps, "failover_gcd")
+      closer.join(60000)
+      assert(!closer.isAlive)
+      // non-vacuous: s1 closed with most of the query still to run
+      assert(servedAtClose > 0 && servedAtClose < rows / 2, s"served $servedAtClose of $rows")
+      assert(got.length == rows)
+      assert(got == gcdRows(df, Seq(("127.0.0.1", s2.boundPort)), "failover_gcd"))
+    } finally { s1.close(); s2.close() }
   }
 }
