@@ -2053,19 +2053,24 @@ object Bench {
     val famSecJson = famSec
       .map { case (f, s) => s""""$f":${f"$s%.2f"}""" }.mkString("{", ",", "}")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCHFULL_prev.json")
+    // Never compare across CPU counts: an 8-core run diffed against a
+    // 32-core prev would print a bogus ~0.3-0.5 "regression" in the summary
+    // line. The prev capture must match on both the session's cores
+    // ("cpus") and the host's ("ncpus"); a capture missing either field is
+    // not compared, and the line says so with "prev_cpus_assumed":true.
+    var prevCpusAssumed = false
     val (geoStr, nCommon, nImp, nReg, famGeoJson) = try {
       val prevTxt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(prevPath)))
+      def intField(name: String): Option[Int] =
+        raw""""$name":(\d+)""".r.findFirstMatchIn(prevTxt).map(_.group(1).toInt)
+      val (prevCpus, prevNcpus) = (intField("cpus"), intField("ncpus"))
+      prevCpusAssumed = prevCpus.isEmpty || prevNcpus.isEmpty
       // extract the "queries" object of our own one-line format
-      // Never compare across CPU counts: the driver benches at 32 AND 8
-      // cores, and an 8-core run diffed against a 32-core prev would print
-      // a bogus ~0.3-0.5 "regression" in exactly the stdout tail the
-      // driver keeps. Prev captures written before the "cpus" field existed
-      // are all 32-core artifacts.
-      val prevCpus = """"cpus":(\d+)""".r.findFirstMatchIn(prevTxt)
-        .map(_.group(1).toInt).getOrElse(32)
       val qStart = prevTxt.indexOf("\"queries\":{")
-      if (qStart < 0 || prevCpus != cpusNum) ("null", 0, 0, 0, "null") else {
+      if (qStart < 0 || prevCpus != Some(cpusNum) || prevNcpus != Some(ncpus))
+        ("null", 0, 0, 0, "null")
+      else {
         val body = prevTxt.substring(qStart + 11, prevTxt.indexOf('}', qStart))
         val pair = """"([^"]+)":(-?[0-9.]+)""".r
         val prevMap = pair.findAllMatchIn(body)
@@ -2093,7 +2098,7 @@ object Bench {
       }
     } catch { case _: Throwable => ("null", 0, 0, 0, "null") }
     val summaryLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"load_gate":"$loadGate","budget_hit":$budgetHit,"rep_floor_met":$repFloorMet,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"load_gate":"$loadGate","budget_hit":$budgetHit,"rep_floor_met":$repFloorMet,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"prev_cpus_assumed":$prevCpusAssumed,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
     println(summaryLine)
     spark.stop()
   }

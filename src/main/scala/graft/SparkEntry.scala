@@ -33,12 +33,28 @@ object SparkEntry {
     case _ => df.withColumn("ts", expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000"))
   }
 
-  private def registerTables(s: SparkSession, dir: String): Unit =
+  /** The testdata dir whose tables are bound as temp views in each session.
+    * Each `spark.read.parquet` runs a schema-inference Spark job, so the 10
+    * reads happen once per (session, dir), not once per query. The views
+    * live in the session's own catalog and the memo holds only the dir
+    * string, so a stopped session stays collectable (a cache of DataFrames
+    * would pin it: every DataFrame references its session). */
+  private val registeredAt = new java.util.WeakHashMap[SparkSession, String]()
+
+  /** Bind the 10 testdata tables of `dir` as temp views in `s` (`events.ts`
+    * normalized by [[eventsTsNs]]). Idempotent per (session, dir): a new
+    * session or a new dir re-registers all 10, any other call is a lookup. */
+  private[graft] def registerTables(s: SparkSession, dir: String): Unit = {
+    registeredAt.synchronized {
+      if (registeredAt.get(s) == dir) return
+    }
     tables.foreach { n =>
       val raw = s.read.parquet(s"$dir/$n.parquet")
       val df = if (n == "events") eventsTsNs(raw) else raw
       df.createOrReplaceTempView(n)
     }
+    registeredAt.synchronized { registeredAt.put(s, dir); () }
+  }
 
   /** Register the testdata tables + graft functions, run `sql`. */
   private def q(sql: String)(s: SparkSession, dir: String): DataFrame = {

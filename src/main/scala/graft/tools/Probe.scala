@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Graft
-import org.apache.spark.sql.SparkSession
+import graft.{Graft, SparkEntry}
 
-/** Ad-hoc SQL probe against the installed engine + testdata tables:
+/** Ad-hoc SQL probe against the installed engine + testdata tables, bound
+  * exactly as the [[SparkEntry]] queries see them (`events.ts` as ns Long):
   * `sbt "runMain graft.tools.Probe <sfDir> <sql> [explain]"`. */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -11,10 +11,7 @@ object Probe {
     val sql = args(1)
     val spark = Graft.session(master = "local[8]", appName = "graft-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-      "events", "documents", "embeddings").foreach { n =>
-      spark.read.parquet(s"$sfDir/$n.parquet").createOrReplaceTempView(n)
-    }
+    SparkEntry.registerTables(spark, sfDir)
     val df = spark.sql(sql)
     if (args.length > 2 && args(2) == "explain") df.explain("formatted")
     if (args.length > 2 && args(2) == "time") {
