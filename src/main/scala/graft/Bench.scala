@@ -134,18 +134,13 @@ object Bench {
   private def curateFunnel(s: SparkSession, nDocs: Long, tag: String): Unit = {
     Graft.install(s)
     import org.apache.spark.sql.functions._
-    // SPARK_GRAFT_STAGE_TIMES=1: per-stage wall-clock attribution to stderr
-    // (optimization-round instrumentation; the marks sit on the funnel's
-    // existing EAGER boundaries — checkpoints/collects — so each delta is
-    // one stage's real cost). Off by default: zero output, two nanoTime
-    // reads per stage.
-    val stageTimes = sys.env.contains("SPARK_GRAFT_STAGE_TIMES")
-    val stageT0 = System.nanoTime()
-    var stageLast = stageT0
-    def mark(stage: String): Unit = if (stageTimes) {
-      val now = System.nanoTime()
-      System.err.println(f"[bench] $tag stage $stage%-16s +${(now - stageLast) / 1e9}%8.3f s (cum ${(now - stageT0) / 1e9}%8.3f)")
-      stageLast = now
+    // per-stage wall-clock marks (ops.StageTimer) on the funnel's existing
+    // EAGER boundaries — checkpoints/collects — so each delta is one
+    // stage's real cost
+    var stageLast = System.nanoTime()
+    def mark(stage: String): Unit = {
+      graft.ops.StageTimer.mark(s"$tag stage $stage", stageLast)
+      stageLast = System.nanoTime()
     }
         // every planted condition keys off the dup base `b` (NOT the id) so
         // the ÷20 duplicate pairs stay byte-identical: ÷11 of b gets a

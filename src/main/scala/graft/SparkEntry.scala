@@ -612,7 +612,7 @@ object SparkEntry {
 
     // §2.1 #19 aggregate: the five-phase lifecycle with the state held as a
     // JS value — Spark hash aggregation drives create/accumulate/merge/finish
-    // in V8 through the shared AggTransport.
+    // in V8 through the remote operator's FailoverSession.
     "q_js_sum_udaf" -> dfq { s =>
       graft.remote.JsUdf.registerAggregate(s, "js_sum",
         graft.remote.JsWorker.endpoints, "js_sum",

@@ -33,7 +33,7 @@ object AsofJoinNative {
            tiebreakR: String,
            payloadCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    installStrategy(spark)
+    Shim.installStrategy(spark, AsofJoinStrategy)
     val lPlan = Shim.logicalPlan(left)
     val rPlan0 = Shim.logicalPlan(right)
     def attr(p: LogicalPlan, n: String): Attribute =
@@ -49,12 +49,6 @@ object AsofJoinNative {
       payloadCols.map(attr(rPlan, _)),
       lPlan, rPlan)
     Shim.ofRows(spark, node)
-  }
-
-  def installStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = Shim.experimental(spark)
-    if (!exp.extraStrategies.exists(_.isInstanceOf[AsofJoinStrategy.type]))
-      exp.extraStrategies = exp.extraStrategies :+ AsofJoinStrategy
   }
 }
 

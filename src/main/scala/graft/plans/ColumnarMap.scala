@@ -45,16 +45,10 @@ object ColumnarMap {
   def withBatchColumn(df: DataFrame, outName: String, inCols: Seq[String],
                       dt: DataType, kernel: BatchKernel): DataFrame = {
     val spark = df.sparkSession
-    installStrategy(spark)
+    Shim.installStrategy(spark, ColumnarMapStrategy)
     val child = Shim.logicalPlan(df)
     val attr = AttributeReference(outName, dt, nullable = true)()
     Shim.ofRows(spark, ColumnarMapNode(attr, inCols, kernel, child))
-  }
-
-  def installStrategy(spark: SparkSession): Unit = {
-    val exp = Shim.experimental(spark)
-    if (!exp.extraStrategies.exists(_.isInstanceOf[ColumnarMapStrategy.type]))
-      exp.extraStrategies = exp.extraStrategies :+ ColumnarMapStrategy
   }
 
   /** Generic lowering kernel for boxed [[graft.functions.ScalarImpl]]

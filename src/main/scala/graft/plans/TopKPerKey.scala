@@ -43,7 +43,7 @@ object TopKPerKey {
              k: Int): DataFrame = {
     require(orders.nonEmpty, "topKBy needs at least one order column")
     val spark = df.sparkSession
-    installStrategy(spark)
+    Shim.installStrategy(spark, TopKPerKeyStrategy)
     val child = Shim.logicalPlan(df)
     val keyAttrs = keyCols.map(c => resolveAttr(child, c))
     val sortOrders = orders.map { case (c, asc) =>
@@ -56,12 +56,6 @@ object TopKPerKey {
     plan.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"column $name not in ${plan.output.map(_.name).mkString(", ")}"))
-
-  def installStrategy(spark: SparkSession): Unit = {
-    val exp = Shim.experimental(spark)
-    if (!exp.extraStrategies.exists(_.isInstanceOf[TopKPerKeyStrategy.type]))
-      exp.extraStrategies = exp.extraStrategies :+ TopKPerKeyStrategy
-  }
 }
 
 case class TopKPerKeyNode(k: Int, keys: Seq[Attribute], order: Seq[SortOrder],

@@ -132,7 +132,7 @@ class JsUdfClient(host: String, port: Int, timeoutMs: Int = 120000) extends Auto
     val status = readLine()
     if (!status.startsWith("OK"))
       throw new RuntimeException(s"js request failed: ${renderErr(status)}")
-    Iterator.continually(in.readLine()).takeWhile(l => l != null && l.nonEmpty).toSeq
+    Iterator.continually(readLine()).takeWhile(_.nonEmpty).toSeq
   }
 
   def version(): Int = textExchange("VERSION").head.toInt
@@ -208,46 +208,10 @@ class JsUdfClient(host: String, port: Int, timeoutMs: Int = 120000) extends Auto
   override def close(): Unit = sock.close()
 }
 
-/** Thread-pinned JS connections (same lifecycle as [[ClientCache]]). */
-private[remote] object JsClientCache {
-  private val tl = new ThreadLocal[scala.collection.mutable.Map[(String, Int), JsUdfClient]] {
-    override def initialValue() = scala.collection.mutable.Map.empty[(String, Int), JsUdfClient]
-  }
-  def withClient[A](host: String, port: Int)(f: JsUdfClient => A): A = {
-    val m = tl.get()
-    val c = m.getOrElseUpdate((host, port), new JsUdfClient(host, port))
-    try f(c)
-    catch {
-      case e: Throwable =>
-        m.remove((host, port)).foreach(c => scala.util.Try(c.close()))
-        throw e
-    }
-  }
-}
-
-/** Five-phase transport over the JS worker pool: state is the guest's JSON
-  * value, threaded as opaque bytes. `resultType` travels with the transport
-  * because the JSON body carries no type tags. */
-case class JsAggTransport(endpoints: Seq[(String, Int)], resultType: DataType)
-  extends graft.remote.AggTransport {
-  private def withClient[A](pid: Int)(f: JsUdfClient => A): A = {
-    val (h, p) = endpoints(pid % endpoints.size)
-    JsClientCache.withClient(h, p)(f)
-  }
-  override def create(pid: Int, fname: String): Array[Byte] =
-    withClient(pid)(_.accCreate(fname))
-  override def accumulate(pid: Int, fname: String, state: Array[Byte],
-                          dts: Seq[DataType], rows: Seq[Seq[Any]]): Array[Byte] =
-    withClient(pid)(_.accumulate(fname, state, rows))
-  override def merge(pid: Int, fname: String, a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    withClient(pid)(_.accMerge(fname, a, b))
-  override def finish(pid: Int, fname: String, state: Array[Byte]): Any =
-    withClient(pid)(_.accFinish(fname, state, resultType))
-}
-
-/** The JSON wire for [[RemoteOp]]: one [[JsUdfClient]] per partition task,
-  * closed with it. `retType` travels with the wire because the JSON body
-  * carries no type tags. */
+/** The JSON wire for [[RemoteOp]] and [[RemoteAggExpr]]: one
+  * [[JsUdfClient]] per session. `retType` travels with the wire because the
+  * JSON body carries no type tags; aggregate state is the guest's JSON
+  * value, threaded as opaque bytes. */
 private[remote] final case class JsWire(fname: String, shape: CallShape, retType: DataType)
     extends RemoteWire {
   def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession =
@@ -260,13 +224,20 @@ private[remote] final case class JsWire(fname: String, shape: CallShape, retType
         case CallShape.Table =>
           client.callTable(fname, retType, rows).map { case (i, v) => Seq(i, v) }
       }
+      override def accCreate(): Array[Byte] = client.accCreate(fname)
+      override def accumulate(state: Array[Byte], rows: Seq[Seq[Any]]): Array[Byte] =
+        client.accumulate(fname, state, rows)
+      override def accMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+        client.accMerge(fname, a, b)
+      override def accFinish(state: Array[Byte]): Any = client.accFinish(fname, state, retType)
       def close(dead: Boolean): Unit = client.close()
     }
 }
 
 /** Spark-side integration over the JS worker pool: each entry point is the
   * one remote operator, [[RemoteOp]], with the [[JsWire]] adapter (its other
-  * adapters are the Arrow-IPC [[IpcWire]] and the two Flight wires). */
+  * adapters are the Arrow-IPC [[IpcWire]] and the two Flight wires);
+  * aggregates run [[RemoteAggExpr]] over the same wire. */
 object JsUdf {
   def withJsColumn(df: org.apache.spark.sql.DataFrame, endpoints: Seq[(String, Int)],
                    fname: String, argCols: Seq[String],
@@ -299,5 +270,6 @@ object JsUdf {
   def registerAggregate(spark: org.apache.spark.sql.SparkSession, name: String,
                         endpoints: Seq[(String, Int)], fname: String,
                         resultType: DataType): Unit =
-    RemoteAgg.register(spark, name, JsAggTransport(endpoints, resultType), fname, resultType)
+    RemoteAgg.registerWire(spark, name, endpoints, resultType,
+      JsWire(fname, CallShape.Scalar, resultType))
 }

@@ -7,64 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.DataType
 
-/** Thread-pinned remote connections: aggregate exchanges happen from
-  * executor task threads at unpredictable points (update/merge/eval), so a
-  * per-task connection lifecycle would reconnect constantly. One connection
-  * per (thread, endpoint) persists across tasks — bounded by the executor
-  * pool size times the endpoint count, and reset on failure so the next
-  * exchange reconnects. */
-private[remote] object ClientCache {
-  private val tl = new ThreadLocal[scala.collection.mutable.Map[(String, Int), UdfClient]] {
-    override def initialValue() = scala.collection.mutable.Map.empty[(String, Int), UdfClient]
-  }
-  def withClient[A](host: String, port: Int)(f: UdfClient => A): A = {
-    val m = tl.get()
-    val c = m.getOrElseUpdate((host, port), new UdfClient(host, port))
-    try f(c)
-    catch {
-      case e: Throwable =>
-        // connection state is unknown mid-exchange: drop it so the next
-        // call reconnects cleanly rather than desynchronizing the framing
-        m.remove((host, port)).foreach(c => scala.util.Try(c.close()))
-        throw e
-    }
-  }
-}
-
 /** One partial-aggregation buffer: the guest's opaque state blob plus rows
   * not yet shipped. Rows batch up to [[RemoteProtocol.BatchSize]] before an
   * `ACC` exchange, so wire round-trips amortize over many input rows. */
 private[remote] final class RemoteAggBuf(
     var state: Array[Byte],
     val pending: scala.collection.mutable.ArrayBuffer[Seq[Any]])
-
-/** Transport for the five-phase aggregate exchange — the Arrow-IPC servers
-  * and the JSON-framed Node worker carry the same verbs over different body
-  * encodings; [[RemoteAggExpr]] only threads opaque state blobs through. */
-trait AggTransport extends Serializable {
-  def create(pid: Int, fname: String): Array[Byte]
-  def accumulate(pid: Int, fname: String, state: Array[Byte],
-                 dts: Seq[DataType], rows: Seq[Seq[Any]]): Array[Byte]
-  def merge(pid: Int, fname: String, a: Array[Byte], b: Array[Byte]): Array[Byte]
-  def finish(pid: Int, fname: String, state: Array[Byte]): Any
-}
-
-/** Arrow-IPC transport: the JVM server or the CPython worker pool. */
-case class ArrowAggTransport(endpoints: Seq[(String, Int)]) extends AggTransport {
-  private def withClient[A](pid: Int)(f: UdfClient => A): A = {
-    val (h, p) = endpoints(pid % endpoints.size)
-    ClientCache.withClient(h, p)(f)
-  }
-  override def create(pid: Int, fname: String): Array[Byte] =
-    withClient(pid)(_.accCreate(fname))
-  override def accumulate(pid: Int, fname: String, state: Array[Byte],
-                          dts: Seq[DataType], rows: Seq[Seq[Any]]): Array[Byte] =
-    withClient(pid)(_.accumulate(fname, state, dts, rows))
-  override def merge(pid: Int, fname: String, a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    withClient(pid)(_.accMerge(fname, a, b))
-  override def finish(pid: Int, fname: String, state: Array[Byte]): Any =
-    withClient(pid)(_.accFinish(fname, state))
-}
 
 /**
  * A guest-evaluated aggregate: Spark's hash aggregation drives the
@@ -78,12 +26,15 @@ case class ArrowAggTransport(endpoints: Seq[(String, Int)]) extends AggTransport
  *  - `eval` runs `ACCFINISH` (guest `finish`) and converts the typed result.
  *
  * The state blob is never interpreted engine-side — the `arrowudf.pickle`
- * contract (SURVEY §2.1 #17) extended over the wire.
+ * contract (SURVEY §2.1 #17) extended over the wire. Every exchange runs on
+ * this executor thread's pinned [[FailoverSession]] over `endpoints`
+ * (starting at partition id mod pool size), so a dead endpoint is skipped
+ * and a failed exchange is replayed on the next one, as for remote calls.
  */
 case class RemoteAggExpr(
     name: String,
-    transport: AggTransport,
-    fname: String,
+    wire: RemoteWire,
+    endpoints: IndexedSeq[(String, Int)],
     resultType: DataType,
     children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
@@ -91,7 +42,8 @@ case class RemoteAggExpr(
   extends TypedImperativeAggregate[RemoteAggBuf] {
 
   @transient private lazy val proj = UnsafeProjection.create(children)
-  @transient private lazy val dts = children.map(_.dataType).toArray
+  @transient private lazy val argTypes = children.map(_.dataType)
+  @transient private lazy val dts = argTypes.toArray
   @transient private lazy val toScala = dts.map(CatalystTypeConverters.createToScalaConverter)
   @transient private lazy val toCatalyst =
     CatalystTypeConverters.createToCatalystConverter(resultType)
@@ -99,10 +51,14 @@ case class RemoteAggExpr(
   private def pid: Int =
     Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
 
+  private def exchange[A](f: RemoteSession => A): A =
+    FailoverSession.pinned(wire, endpoints, argTypes, pid)(f)
+
   private def flush(buf: RemoteAggBuf): Unit = {
-    if (buf.state == null) buf.state = transport.create(pid, fname)
+    if (buf.state == null) buf.state = exchange(_.accCreate())
     if (buf.pending.nonEmpty) {
-      buf.state = transport.accumulate(pid, fname, buf.state, dts.toSeq, buf.pending.toSeq)
+      val rows = buf.pending.toSeq
+      buf.state = exchange(_.accumulate(buf.state, rows))
       buf.pending.clear()
     }
   }
@@ -125,13 +81,13 @@ case class RemoteAggExpr(
 
   override def merge(buf: RemoteAggBuf, other: RemoteAggBuf): RemoteAggBuf = {
     flush(buf); flush(other)
-    buf.state = transport.merge(pid, fname, buf.state, other.state)
+    buf.state = exchange(_.accMerge(buf.state, other.state))
     buf
   }
 
   override def eval(buf: RemoteAggBuf): Any = {
     flush(buf)
-    toCatalyst(transport.finish(pid, fname, buf.state))
+    toCatalyst(exchange(_.accFinish(buf.state)))
   }
 
   override def serialize(buf: RemoteAggBuf): Array[Byte] = {
@@ -155,19 +111,19 @@ case class RemoteAggExpr(
 
 object RemoteAgg {
   /** Register `name` as a session temp function evaluating aggregate `fname`
-    * on the given transport (the analyzer wraps the bare AggregateFunction
-    * exactly as it does builtin registry aggregates). */
-  def register(spark: org.apache.spark.sql.SparkSession, name: String,
-               transport: AggTransport, fname: String,
-               resultType: DataType): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      children => RemoteAggExpr(name, transport, fname, resultType, children),
-      "scala_udf")
-
-  /** Arrow-IPC endpoints convenience (JVM server / CPython worker pool). */
+    * on Arrow-IPC endpoints (the JVM server or the CPython worker pool). */
   def register(spark: org.apache.spark.sql.SparkSession, name: String,
                endpoints: Seq[(String, Int)], fname: String,
                resultType: DataType): Unit =
-    register(spark, name, ArrowAggTransport(endpoints), fname, resultType)
+    registerWire(spark, name, endpoints, resultType, IpcWire(fname, CallShape.Scalar))
+
+  /** Register `name` as the aggregate `wire` carries (its call shape is
+    * unused). The analyzer wraps the bare AggregateFunction exactly as it
+    * does builtin registry aggregates. */
+  private[remote] def registerWire(spark: org.apache.spark.sql.SparkSession, name: String,
+      endpoints: Seq[(String, Int)], resultType: DataType, wire: RemoteWire): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name,
+      children => RemoteAggExpr(name, wire, endpoints.toIndexedSeq, resultType, children),
+      "scala_udf")
 }

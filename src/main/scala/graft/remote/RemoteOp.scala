@@ -19,14 +19,24 @@ object CallShape {
   case object Table extends CallShape("CALLTABLE")
 }
 
-/** One partition task's connection to one endpoint. */
+/** One connection to one endpoint, for the wire's function. Every verb
+  * throws as [[FailoverSession]] expects. */
 trait RemoteSession {
   /** Evaluate one bounded chunk of argument rows. Answers `Seq(value)` or
     * `Seq(value, error)` per input row, or `Seq(rowIndex, value)` per yield
-    * of a [[CallShape.Table]] call. Throws as [[FailoverSession]] expects. */
+    * of a [[CallShape.Table]] call. */
   def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]]
+  /** The aggregate lifecycle (create_state, accumulate, merge, finish).
+    * Every request carries the guest's opaque state blob, so any endpoint
+    * can serve any exchange. Wires without aggregates keep these defaults. */
+  def accCreate(): Array[Byte] = noAggregates
+  def accumulate(state: Array[Byte], rows: Seq[Seq[Any]]): Array[Byte] = noAggregates
+  def accMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] = noAggregates
+  def accFinish(state: Array[Byte]): Any = noAggregates
   /** Release the connection; `dead` evicts it, since its endpoint failed. */
   def close(dead: Boolean): Unit
+  private def noAggregates: Nothing =
+    throw new UnsupportedOperationException("this wire carries no aggregates")
 }
 
 /** A wire adapter: how a partition task opens a [[RemoteSession]] with one
@@ -37,16 +47,17 @@ trait RemoteWire extends Serializable {
   def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession
 }
 
-/** A partition's session with endpoint rotation, backoff and failover.
+/** A session over an endpoint pool with rotation, backoff and failover.
   *
   * Connect: starting at `start`, endpoints that refuse are skipped; a fully
   * dead ring is re-tried with exponential backoff (covering a restarting
   * server's window) before the task fails and Spark's task retry takes over.
   *
-  * Call: an `IOException` (past the client's own reconnect/replay) rotates
-  * to the next endpoint and replays only the in-flight chunk there — chunks
-  * are stateless and independent, so a replay is idempotent and emitted
-  * chunks are untouched. One full ring pass plus one is allowed, so a
+  * Exchange ([[run]], any verb): an `IOException` (past the client's own
+  * reconnect/replay) rotates to the next endpoint and replays only the
+  * in-flight exchange there — chunks and aggregate requests are stateless
+  * and independent, so a replay is idempotent and emitted chunks are
+  * untouched. One full ring pass plus one is allowed, so a
   * single-endpoint pool gets a reconnect-with-backoff shot at its restarted
   * server. A `SocketTimeoutException` evicts the session and rethrows
   * (containment: a hung server stays aborted). A gRPC status or any other
@@ -77,10 +88,11 @@ private[remote] final class FailoverSession(wire: RemoteWire, eps: IndexedSeq[(S
     if (session == null) throw last
   }
 
-  def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = {
+  /** Run one exchange on the current session, failing over as above. */
+  def run[A](exchange: RemoteSession => A): A = {
     var failedOver = 0
     while (true) {
-      try return session.call(rows)
+      try return exchange(session)
       catch {
         case e: graft.remote.flight.GrpcStatusException => throw e
         case e: java.net.SocketTimeoutException => close(dead = true); throw e
@@ -95,10 +107,33 @@ private[remote] final class FailoverSession(wire: RemoteWire, eps: IndexedSeq[(S
     throw new IllegalStateException("unreachable")
   }
 
+  def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = run(_.call(rows))
+
   def close(dead: Boolean): Unit = if (session != null) {
     val s = session
     session = null
     try s.close(dead) catch { case scala.util.control.NonFatal(_) if dead => }
+  }
+}
+
+private[remote] object FailoverSession {
+  private type Key = (RemoteWire, IndexedSeq[(String, Int)], Seq[DataType], Int)
+  private val sessions =
+    ThreadLocal.withInitial(() => scala.collection.mutable.Map.empty[Key, FailoverSession])
+
+  /** Run `exchange` on this thread's session for `wire` over `eps`, which
+    * starts at endpoint `start` mod pool size. The session outlives the
+    * task: aggregate exchanges happen at unpredictable points (update,
+    * merge, eval), so a per-task session would reconnect constantly. Any
+    * failure drops it, so a half-written exchange never desynchronizes the
+    * next one. */
+  def pinned[A](wire: RemoteWire, eps: IndexedSeq[(String, Int)], argTypes: Seq[DataType],
+      start: Int)(exchange: RemoteSession => A): A = {
+    val m = sessions.get()
+    val key = (wire, eps, argTypes, start % eps.size)
+    val s = m.getOrElseUpdate(key, new FailoverSession(wire, eps, argTypes, start))
+    try s.run(exchange)
+    catch { case e: Throwable => m.remove(key); s.close(dead = true); throw e }
   }
 }
 

@@ -993,10 +993,7 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
     out.write(cmd.getBytes(StandardCharsets.UTF_8))
     out.flush()
     expectOk()
-    val lines = Seq.newBuilder[String]
-    var l = readLine(in)
-    while (l != null && l.nonEmpty) { lines += l; l = readLine(in) }
-    lines.result()
+    Iterator.continually(nextLine()).takeWhile(_.nonEmpty).toSeq
   }
 
   /** Call a remote scalar function over rows of (typed) argument tuples.
@@ -1093,9 +1090,15 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
     }
   }
 
+  /** The next line; a hang-up is an `EOFException`, never an answer. */
+  private def nextLine(): String = {
+    val l = readLine(in)
+    if (l == null) throw new java.io.EOFException("connection closed by server")
+    l
+  }
+
   private def expectOk(): Unit = {
-    val status = readLine(in)
-    if (status == null) throw new java.io.EOFException("connection closed by server")
+    val status = nextLine()
     if (!status.startsWith("OK"))
       throw new RuntimeException(s"remote call failed: $status")
   }
@@ -1200,9 +1203,9 @@ object RemoteFixture {
   def port: Int = shared.boundPort
 }
 
-/** The raw Arrow-IPC wire for [[RemoteOp]]: one [[UdfClient]] per partition
-  * task, closed with it. With `dictEncodeStrings`, string argument columns
-  * travel dictionary-encoded (see [[UdfClient.call]]). */
+/** The raw Arrow-IPC wire for [[RemoteOp]] and [[RemoteAggExpr]]: one
+  * [[UdfClient]] per session. With `dictEncodeStrings`, string argument
+  * columns travel dictionary-encoded (see [[UdfClient.call]]). */
 private[remote] final case class IpcWire(fname: String, shape: CallShape,
     dictEncodeStrings: Boolean = false) extends RemoteWire {
   def open(host: String, port: Int, argTypes: Seq[DataType]): RemoteSession =
@@ -1211,6 +1214,12 @@ private[remote] final case class IpcWire(fname: String, shape: CallShape,
       private val cmd = s"${shape.verb} $fname\n"
       def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] =
         client.exchange(cmd, argTypes, rows, Nil, dictEncodeStrings)
+      override def accCreate(): Array[Byte] = client.accCreate(fname)
+      override def accumulate(state: Array[Byte], rows: Seq[Seq[Any]]): Array[Byte] =
+        client.accumulate(fname, state, argTypes, rows)
+      override def accMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+        client.accMerge(fname, a, b)
+      override def accFinish(state: Array[Byte]): Any = client.accFinish(fname, state)
       def close(dead: Boolean): Unit = client.close()
     }
 }

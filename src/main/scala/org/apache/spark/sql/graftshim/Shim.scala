@@ -15,8 +15,17 @@ object Shim {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .logicalPlan
 
-  def experimental(spark: SparkSession): org.apache.spark.sql.ExperimentalMethods =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+  /** Plan a custom node in `spark`: appends `strategy` to the session's
+    * extra strategies unless it is there already. Plain sessions plan these
+    * nodes too, so this cannot live in `GraftExtensions` alone. */
+  def installStrategy(spark: SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    exp.synchronized {
+      if (!exp.extraStrategies.contains(strategy))
+        exp.extraStrategies = exp.extraStrategies :+ strategy
+    }
+  }
 
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)

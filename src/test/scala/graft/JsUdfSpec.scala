@@ -356,30 +356,8 @@ class JsUdfSpec extends AnyFunSuite {
     } finally client.close()
   }
 
-  /** A listener that answers nothing: each accepted connection has its write
-    * side shut at once (the client reads EOF) and closes when the client
-    * hangs up. */
-  private def closingListener(): java.net.ServerSocket = {
-    val ss = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
-    val t = new Thread(() => {
-      try while (true) {
-        val s = ss.accept()
-        s.shutdownOutput()
-        val drain = new Thread(() =>
-          try { val in = s.getInputStream; while (in.read() >= 0) {} }
-          catch { case _: java.io.IOException => }
-          finally s.close())
-        drain.setDaemon(true)
-        drain.start()
-      } catch { case _: java.io.IOException => } // listener closed
-    })
-    t.setDaemon(true)
-    t.start()
-    ss
-  }
-
   test("a peer-closed connection is an EOFException, and the pool fails over past it") {
-    val ss = closingListener()
+    val ss = HangUpServer()
     try {
       val c = new JsUdfClient("127.0.0.1", ss.getLocalPort)
       try {
@@ -393,6 +371,17 @@ class JsUdfSpec extends AnyFunSuite {
       val rows = out.select("id", "value").as[(Int, Int)].collect().toMap
       assert(rows.size == 500)
       assert((1 to 500).forall(i => rows(i) == 2 * i))
+      // aggregates: the peer at slot 0 accepts, so the first exchange fails
+      // over to the real workers
+      def sums(eps: Seq[(String, Int)]): Map[Int, Long] = {
+        JsUdf.registerAggregate(spark, "js_failover_sum", eps, "js_sum", LongType)
+        df.groupBy(($"id" % 7).as("k"))
+          .agg(org.apache.spark.sql.functions.call_function("js_failover_sum", $"a"))
+          .as[(Int, Long)].collect().toMap
+      }
+      val single = sums(JsWorker.endpoints.take(1))
+      assert(single.size == 7)
+      assert(sums(("127.0.0.1", ss.getLocalPort) +: JsWorker.endpoints) == single)
     } finally ss.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.remote.{RemoteProtocol, RemoteUdf, UdfClient, UdfServer}
+import graft.remote.{JsUdfClient, RemoteAgg, RemoteProtocol, RemoteUdf, UdfClient, UdfServer}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -512,35 +512,41 @@ class RemoteUdfSpec extends AnyFunSuite {
   }
 
   test("a response cut off after its schema is an EOFException, not a short result") {
-    // a server that answers OK and the result schema, then hangs up (write
-    // side shut, request drained so the close is a FIN, not a reset)
-    val ss = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    // a server that answers OK and the result schema, then hangs up
     val alloc = new org.apache.arrow.memory.RootAllocator()
     val head = new java.io.ByteArrayOutputStream()
     val root = org.apache.arrow.vector.VectorSchemaRoot.create(
       RemoteProtocol.argSchema(Seq(IntegerType)), alloc)
     new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, head).start()
     root.close(); alloc.close()
-    val t = new Thread(() => {
-      try while (true) {
-        val s = ss.accept()
-        s.getOutputStream.write("OK\n".getBytes("UTF-8") ++ head.toByteArray)
-        s.shutdownOutput()
-        val drain = new Thread(() =>
-          try { val in = s.getInputStream; while (in.read() >= 0) {} }
-          catch { case _: java.io.IOException => }
-          finally s.close())
-        drain.setDaemon(true)
-        drain.start()
-      } catch { case _: java.io.IOException => } // listener closed
-    })
-    t.setDaemon(true)
-    t.start()
+    val ss = HangUpServer("OK\n".getBytes("UTF-8") ++ head.toByteArray)
     try {
       val client = new UdfClient("127.0.0.1", ss.getLocalPort)
       try intercept[java.io.EOFException](
         client.call("add", Seq(IntegerType, IntegerType), Seq(Seq(1, 2))))
       finally client.close()
+    } finally ss.close()
+  }
+
+  test("a discovery answer cut off by a hang-up is an EOFException, not a short list") {
+    // OK and one signature line, then the server hangs up before the blank
+    // line that ends the list; both line-framed clients must see EOF
+    val ss = HangUpServer("OK\nadd(int32, int32) -> int32\n".getBytes("UTF-8"))
+    def ipc[A](f: UdfClient => A): A = {
+      val c = new UdfClient("127.0.0.1", ss.getLocalPort)
+      try f(c) finally c.close()
+    }
+    def js[A](f: JsUdfClient => A): A = {
+      val c = new JsUdfClient("127.0.0.1", ss.getLocalPort)
+      try f(c) finally c.close()
+    }
+    try {
+      intercept[java.io.EOFException](ipc(_.list()))
+      intercept[java.io.EOFException](ipc(_.get("add")))
+      intercept[java.io.EOFException](ipc(_.version()))
+      intercept[java.io.EOFException](js(_.list()))
+      intercept[java.io.EOFException](js(_.get("add")))
+      intercept[java.io.EOFException](js(_.version()))
     } finally ss.close()
   }
 
@@ -551,9 +557,21 @@ class RemoteUdfSpec extends AnyFunSuite {
       val df = spark.range(0, 20000, 1, 8)
         .selectExpr("CAST(id * 6 AS INT) AS a", "CAST(id % 97 + 1 AS INT) AS b")
       val live = ("127.0.0.1", server.boundPort)
+      val pool = Seq(("127.0.0.1", freePort()), live)
       val single = gcdRows(df, Seq(live), "gcd")
       assert(single.length == 20000)
-      assert(gcdRows(df, Seq(("127.0.0.1", freePort()), live), "gcd") == single)
+      assert(gcdRows(df, pool, "gcd") == single)
+      // aggregates: partitions whose start slot is the dead endpoint skip it
+      def sums(eps: Seq[(String, Int)]): Map[Int, Long] = {
+        import spark.implicits._
+        RemoteAgg.register(spark, "failover_sum", eps, "sum_udaf", LongType)
+        df.groupBy(($"b" % 5).as("k"))
+          .agg(org.apache.spark.sql.functions.call_function("failover_sum", $"a"))
+          .as[(Int, Long)].collect().toMap
+      }
+      val singleSums = sums(Seq(live))
+      assert(singleSums.size == 5)
+      assert(sums(pool) == singleSums)
     } finally server.close()
   }
 

@@ -8,7 +8,8 @@ import scala.collection.mutable.ArrayBuffer
   * no Spark — every open, call and close is logged per endpoint port. */
 class RemoteOpSpec extends AnyFunSuite {
   /** Endpoints in `down` refuse to connect; `fail(port, firstArg)` scripts a
-    * failure for a call. A call answers its first argument column. */
+    * failure for a call or a merge. A call answers its first argument
+    * column; a merge answers its two states concatenated. */
   private final class FakeWire(down: Set[Int] = Set.empty,
       fail: (Int, Any) => Option[Throwable] = (_, _) => None) extends RemoteWire {
     val log = ArrayBuffer.empty[String]
@@ -21,6 +22,11 @@ class RemoteOpSpec extends AnyFunSuite {
           log += s"call $port ${rows.head.head}"
           fail(port, rows.head.head).foreach(e => throw e)
           rows.map(r => Seq(r.head))
+        }
+        override def accMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+          log += s"merge $port ${a.head}"
+          fail(port, a.head).foreach(e => throw e)
+          a ++ b
         }
         def close(dead: Boolean): Unit = log += s"close $port $dead"
       }
@@ -79,5 +85,25 @@ class RemoteOpSpec extends AnyFunSuite {
     intercept[graft.remote.flight.GrpcStatusException](s.call(Seq(Seq("status"))))
     assert(s.call(Seq(Seq(4))) == Seq(Seq(4)))
     assert(w.log == Seq("open 1", "call 1 err", "call 1 status", "call 1 4"))
+  }
+
+  test("an aggregate verb fails over like a call: the exchange is replayed on the next endpoint") {
+    val w = new FakeWire(fail = (port, _) =>
+      if (port == 1) Some(new java.io.EOFException("connection closed")) else None)
+    val s = session(w)
+    assert(s.run(_.accMerge(Array[Byte](4), Array[Byte](5))).toSeq == Seq[Byte](4, 5))
+    assert(w.log == Seq("open 1", "merge 1 4", "close 1 true", "open 2", "merge 2 4"))
+  }
+
+  test("a pinned session is kept across exchanges and dropped on any failure") {
+    val w = new FakeWire(fail = (_, v) =>
+      if (v == "bad") Some(new IllegalArgumentException("unsupported value")) else None)
+    def pinned(v: Any) = FailoverSession.pinned(w, eps, Seq(IntegerType), 4)(_.call(Seq(Seq(v))))
+    assert(pinned(1) == Seq(Seq(1)))
+    assert(pinned(2) == Seq(Seq(2)))
+    intercept[IllegalArgumentException](pinned("bad"))
+    assert(pinned(3) == Seq(Seq(3)))
+    assert(w.log == Seq("open 2", "call 2 1", "call 2 2", "call 2 bad", "close 2 true",
+      "open 2", "call 2 3"))
   }
 }
