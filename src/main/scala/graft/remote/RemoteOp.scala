@@ -53,15 +53,16 @@ trait RemoteWire extends Serializable {
   * dead ring is re-tried with exponential backoff (covering a restarting
   * server's window) before the task fails and Spark's task retry takes over.
   *
-  * Exchange ([[run]], any verb): an `IOException` (past the client's own
-  * reconnect/replay) rotates to the next endpoint and replays only the
-  * in-flight exchange there — chunks and aggregate requests are stateless
-  * and independent, so a replay is idempotent and emitted chunks are
-  * untouched. One full ring pass plus one is allowed, so a
-  * single-endpoint pool gets a reconnect-with-backoff shot at its restarted
-  * server. A `SocketTimeoutException` evicts the session and rethrows
-  * (containment: a hung server stays aborted). A gRPC status or any other
-  * exception is the server's answer and is rethrown as is. */
+  * Exchange ([[run]], any verb): this is the only place a remote exchange
+  * is retried. Clients are one connection each and never revive it, so an
+  * `IOException` closes the session dead, rotates to the next endpoint and
+  * replays only the in-flight exchange there — chunks and aggregate
+  * requests are stateless and independent, so a replay is idempotent and
+  * emitted chunks are untouched. One full ring pass plus one is allowed, so
+  * a single-endpoint pool gets a fresh connection (with connect backoff) to
+  * its restarted server. A `SocketTimeoutException` evicts the session and
+  * rethrows (containment: a hung server stays aborted). A gRPC status or
+  * any other exception is the server's answer and is rethrown as is. */
 private[remote] final class FailoverSession(wire: RemoteWire, eps: IndexedSeq[(String, Int)],
     argTypes: Seq[DataType], start: Int) {
   private var epIdx = start % eps.size
@@ -124,7 +125,7 @@ private[remote] object FailoverSession {
   /** Run `exchange` on this thread's session for `wire` over `eps`, which
     * starts at endpoint `start` mod pool size. The session outlives the
     * task: aggregate exchanges happen at unpredictable points (update,
-    * merge, eval), so a per-task session would reconnect constantly. Any
+    * merge, eval), so a per-task session would dial constantly. Any
     * failure drops it, so a half-written exchange never desynchronizes the
     * next one. */
   def pinned[A](wire: RemoteWire, eps: IndexedSeq[(String, Int)], argTypes: Seq[DataType],

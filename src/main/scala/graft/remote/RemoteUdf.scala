@@ -593,11 +593,9 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
         line = readLine(in)
       }
     } catch {
-      case _: java.io.EOFException =>
-      case _: java.net.SocketException =>
-      // refused/failed TLS handshakes (certificate-less probe, wrong trust)
-      // are ordinary disconnects, not handler-thread crashes
-      case _: javax.net.ssl.SSLException =>
+      // any I/O failure is a gone peer: a hang-up (also between a command
+      // line and its Arrow stream), a reset, or a refused TLS handshake
+      case _: java.io.IOException =>
     } finally {
       allocator.close()
       sock.close()
@@ -888,9 +886,9 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
     }
   }
 
-  /** Sever every live connection (clients see EOF/reset and their retry
-    * policy takes over) without stopping the listener — the shape of a
-    * transient network blip, also used at shutdown. */
+  /** Sever every live connection (clients see EOF/reset and their
+    * [[FailoverSession]] replays) without stopping the listener — the shape
+    * of a transient network blip, also used at shutdown. */
   def dropConnections(): Unit = {
     active.forEach(s => try s.close() catch { case _: Exception => })
     active.clear()
@@ -912,82 +910,51 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
   * the reference JS runtime's per-call timeout semantics
   * (`arrow-udf-runtime/src/javascript/mod.rs:229-260`).
   *
-  * Resilience: a TRANSIENT connection failure (reset, broken pipe, server
-  * restart) reconnects and replays the exchange up to `maxRetries` times —
-  * exchanges are stateless request/response, so a replay is idempotent.
-  * Deliberately NOT retried: SO_TIMEOUT deadlines (a hung server stays
-  * aborted — retrying would defeat containment) and ERR responses (semantic
-  * failures). At 1000-executor scale transient resets are routine; without
-  * in-protocol retry every blip costs a whole Spark task re-run.
+  * A failed connection is not revived: the client is dead, and
+  * [[FailoverSession]] (the one retry site) opens a new one and replays.
   *
   * Auth: `authToken` (off by default) sends an AUTH handshake after connect;
   * the server refuses every other verb until it succeeds. */
 class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
                 authToken: Option[String] = None,
-                maxRetries: Int = 1,
                 tls: Option[javax.net.ssl.SSLContext] = None) extends AutoCloseable {
   import RemoteProtocol._
 
-  private var sock: Socket = _
-  private var out: DataOutputStream = _
-  private var in: DataInputStream = _
+  private val sock: Socket = tls match {
+    case Some(ctx) =>
+      val s = ctx.getSocketFactory.createSocket(host, port)
+        .asInstanceOf[javax.net.ssl.SSLSocket]
+      // endpoint identification: the server cert must actually name this
+      // host (SAN) — without it, ANY cert the trust store chains to would
+      // be accepted for any endpoint, silently weaker than the leaf-pinned
+      // contract Tls.context documents
+      val params = s.getSSLParameters
+      params.setEndpointIdentificationAlgorithm("HTTPS")
+      s.setSSLParameters(params)
+      s
+    case None => new Socket(host, port)
+  }
+  sock.setTcpNoDelay(true) // latency-bound write-write-read exchange; see UdfServer
+  sock.setSoTimeout(timeoutMs)
+  private val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+  private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
   private val allocator = new RootAllocator()
-  connect()
-
-  private def connect(): Unit = {
-    sock = tls match {
-      case Some(ctx) =>
-        val s = ctx.getSocketFactory.createSocket(host, port)
-          .asInstanceOf[javax.net.ssl.SSLSocket]
-        // endpoint identification: the server cert must actually name this
-        // host (SAN) — without it, ANY cert the trust store chains to would
-        // be accepted for any endpoint, silently weaker than the leaf-pinned
-        // contract Tls.context documents
-        val params = s.getSSLParameters
-        params.setEndpointIdentificationAlgorithm("HTTPS")
-        s.setSSLParameters(params)
-        s
-      case None => new Socket(host, port)
-    }
-    sock.setTcpNoDelay(true) // latency-bound write-write-read exchange; see UdfServer
-    sock.setSoTimeout(timeoutMs)
-    out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-    in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    authToken.foreach { tok =>
-      out.write(s"AUTH $tok\n".getBytes(StandardCharsets.UTF_8))
-      out.flush()
-      val status = readLine(in)
-      if (status == null || !status.startsWith("OK"))
-        throw new SecurityException(s"remote auth failed: $status")
-    }
-  }
-
-  private def reconnect(): Unit = {
-    try sock.close() catch { case _: Exception => }
-    connect()
-  }
-
-  /** Replay `f` on a fresh connection after a transient I/O failure. */
-  private def withRetry[T](f: => T): T = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      try return f
-      catch {
-        case e: java.net.SocketTimeoutException => throw e // deadline: no retry
-        case _: java.io.IOException => attempt += 1; reconnect()
-      }
-    }
-    f
+  authToken.foreach { tok =>
+    out.write(s"AUTH $tok\n".getBytes(StandardCharsets.UTF_8))
+    out.flush()
+    val status = readLine(in)
+    if (status == null || !status.startsWith("OK"))
+      throw new SecurityException(s"remote auth failed: $status")
   }
 
   /** Handshake: the server's wire protocol version. */
-  def version(): Int = withRetry(textExchange("VERSION\n")).head.toInt
+  def version(): Int = textExchange("VERSION\n").head.toInt
 
   /** Discovery: all remote signatures (reference `Client::list`). */
-  def list(): Seq[String] = withRetry(textExchange("LIST\n"))
+  def list(): Seq[String] = textExchange("LIST\n")
 
   /** Discovery: signatures registered under `fname` (reference `Client::get`). */
-  def get(fname: String): Seq[String] = withRetry(textExchange(s"GET $fname\n"))
+  def get(fname: String): Seq[String] = textExchange(s"GET $fname\n")
 
   private def textExchange(cmd: String): Seq[String] = {
     out.write(cmd.getBytes(StandardCharsets.UTF_8))
@@ -1105,12 +1072,7 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
 
   private[remote] def exchange(cmd: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
                                argMeta: Seq[SMetadata],
-                               dictEncodeStrings: Boolean = false): Seq[Seq[Any]] =
-    withRetry(exchangeOnce(cmd, argTypes, rows, argMeta, dictEncodeStrings))
-
-  private def exchangeOnce(cmd: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
-                           argMeta: Seq[SMetadata],
-                           dictEncodeStrings: Boolean): Seq[Seq[Any]] = {
+                               dictEncodeStrings: Boolean = false): Seq[Seq[Any]] = {
     out.write(cmd.getBytes(StandardCharsets.UTF_8))
     if (dictEncodeStrings) writeDictEncoded(argSchema(argTypes, argMeta), rows)
     else writeStream(argSchema(argTypes, argMeta), rows)
@@ -1152,7 +1114,7 @@ class UdfClient(host: String, port: Int, timeoutMs: Int = 120000,
 
   /** Write `rows` as one Arrow IPC stream of [[RemoteProtocol.BatchSize]]
     * batches. The root is closed even when a write fails: buffers must not
-    * outlive a failed (retried) attempt. */
+    * outlive a failed exchange. */
   private def writeStream(schema: ASchema, rows: Seq[Seq[Any]]): Unit = {
     val root = VectorSchemaRoot.create(schema, allocator)
     try {

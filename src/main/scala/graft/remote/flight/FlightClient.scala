@@ -57,85 +57,50 @@ final case class FlightFunction(name: String,
   *   connection top-up). The 8 MiB default never back-pressures a bounded
   *   exchange; shrink it to cap per-connection buffering (the peer then
   *   waits on our credit, which the read loop returns as it consumes).
-  * @param maxRetries transient-failure replays per RPC (the
-  *   [[graft.remote.UdfClient]] resilience discipline): a connection-level
-  *   I/O failure (reset, broken pipe, server restart, GOAWAY) reconnects and
-  *   replays the whole RPC — exchanges are stateless request/response, so a
-  *   replay is idempotent. Deliberately NOT retried: SO_TIMEOUT deadlines
-  *   (a hung server stays aborted — retrying would defeat containment) and
-  *   non-OK gRPC statuses (semantic failures the server actually answered). */
+  *
+  * One connection: once it fails, every later RPC on this client fails too.
+  * [[graft.remote.FailoverSession]] is the one retry site; it drops the
+  * client's lease and replays on a fresh one. */
 final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
                          tls: Option[javax.net.ssl.SSLContext] = None,
                          authToken: Option[String] = None,
-                         recvWindow: Int = 1 << 23,
-                         maxRetries: Int = 1)
+                         recvWindow: Int = 1 << 23)
     extends AutoCloseable {
   import RemoteProtocol.{argSchema, batchCellReaders, dictionaryEncodeStrings, fillRoot, fromArrowField}
 
   private val Service = "/arrow.flight.protocol.FlightService"
-  private def dial(): GrpcConn = new GrpcConn(host, port, timeoutMs, tls,
-    // caller identity rides gRPC call metadata — the standard bearer-token
-    // convention (graft's AUTH wire verb, expressed the Flight way)
-    authToken.map(t => "authorization" -> s"Bearer $t").toSeq,
-    recvWindow)
   // THREAD-SAFE: concurrent calls multiplex as h2 streams on the shared
   // connection ([[GrpcConn]] is concurrent), so one client can serve many
   // partition tasks ([[FlightClientCache]]); the allocator is Arrow's
   // thread-safe RootAllocator.
-  private val connLock = new Object
-  @volatile private var grpc = dial()
+  private val grpc = new GrpcConn(host, port, timeoutMs, tls,
+    // caller identity rides gRPC call metadata — the standard bearer-token
+    // convention (graft's AUTH wire verb, expressed the Flight way)
+    authToken.map(t => "authorization" -> s"Bearer $t").toSeq,
+    recvWindow)
   private val allocator = new RootAllocator()
-
-  /** Swap in a fresh connection — only if `failed` is still the live one,
-    * so concurrent failures reconnect ONCE instead of racing each other. */
-  private def reconnect(failed: GrpcConn): Unit = connLock.synchronized {
-    if (grpc eq failed) {
-      try failed.close() catch { case _: Exception => }
-      grpc = dial()
-    }
-  }
-
-  /** Replay `f` on a fresh connection after a transient I/O failure (the
-    * [[graft.remote.UdfClient.withRetry]] policy on the Flight wire). Note
-    * [[GrpcStatusException]] extends IOException, so order matters: a
-    * status the server delivered is semantic, never replayed. */
-  private def withRetry[T](f: GrpcConn => T): T = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val g = grpc
-      try return f(g)
-      catch {
-        case e: GrpcStatusException => throw e // server answered: no retry
-        case e: java.net.SocketTimeoutException => throw e // deadline: no retry
-        case _: java.io.IOException => attempt += 1; reconnect(g)
-      }
-    }
-    f(grpc)
-  }
 
   /** Server protocol version; any failure (e.g. UNIMPLEMENTED DoAction) means
     * a version-1 server, exactly like the reference (`remote/mod.rs:53-65`). */
   def protocolVersion(): Int =
     try {
-      val results = withRetry { g =>
-        val rs = g.call(s"$Service/DoAction",
-          Iterator(Pb.action("protocol_version", Pb.Empty)))
-        try rs.toSeq finally rs.close()
-      }
+      val rs = grpc.call(s"$Service/DoAction",
+        Iterator(Pb.action("protocol_version", Pb.Empty)))
+      val results = try rs.toSeq finally rs.close()
       results.headOption.map(Pb.parseResultBody).filter(_.nonEmpty)
         .map(_.head.toInt).getOrElse(1)
     } catch { case _: GrpcStatusException => 1 }
 
   /** Discovery: one function's signature (`Client::get`). */
-  def get(name: String): FlightFunction = withRetry { g =>
-    val rs = g.call(s"$Service/GetFlightInfo", Iterator(Pb.descriptorPath(name)))
+  def get(name: String): FlightFunction = {
+    val rs = grpc.call(s"$Service/GetFlightInfo", Iterator(Pb.descriptorPath(name)))
     val infos = try rs.toSeq finally rs.close()
     parseFunction(Pb.parseFlightInfo(infos.head))
   }
 
   /** Discovery: every function on the server (`Client::list`). */
-  def list(): Seq[FlightFunction] = withRetry { g =>
-    val rs = g.call(s"$Service/ListFlights", Iterator(Pb.criteria(Pb.Empty)))
+  def list(): Seq[FlightFunction] = {
+    val rs = grpc.call(s"$Service/ListFlights", Iterator(Pb.criteria(Pb.Empty)))
     try rs.map(b => parseFunction(Pb.parseFlightInfo(b))).toSeq
     finally rs.close()
   }
@@ -194,23 +159,15 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
     }
 
   /** One DoExchange: write the argument rows as schema + record-batch
-    * `FlightData` messages, read back every result row. Replayed whole on a
-    * fresh connection after a transient failure (request messages are
-    * rebuilt per attempt — the exchange is a pure function of `rows`).
-    * With `dictEncodeStrings`, string argument columns travel
-    * DICTIONARY-ENCODED (schema declares the encoding; a DictionaryBatch per
-    * string column precedes the record batch) — the inline-dictionary shape
-    * a dictionary-preserving producer emits, exercising the server's
+    * `FlightData` messages, read back every result row. With
+    * `dictEncodeStrings`, string argument columns travel DICTIONARY-ENCODED
+    * (schema declares the encoding; a DictionaryBatch per string column
+    * precedes the record batch) — the inline-dictionary shape a
+    * dictionary-preserving producer emits, exercising the server's
     * DictionaryBatch pass-through end to end. */
   def exchange(fname: String, argTypes: Seq[DataType], rows: Seq[Seq[Any]],
                argMeta: Seq[SMetadata] = Nil,
-               dictEncodeStrings: Boolean = false): Seq[Seq[Any]] = withRetry { g =>
-    exchangeOn(g, fname, argTypes, rows, argMeta, dictEncodeStrings)
-  }
-
-  private def exchangeOn(g: GrpcConn, fname: String, argTypes: Seq[DataType],
-                         rows: Seq[Seq[Any]], argMeta: Seq[SMetadata],
-                         dictEncodeStrings: Boolean): Seq[Seq[Any]] = {
+               dictEncodeStrings: Boolean = false): Seq[Seq[Any]] = {
     val schema = argSchema(argTypes, argMeta)
     val descriptor = Pb.descriptorPath(fname)
 
@@ -235,7 +192,7 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
         Iterator(schemaMsg) ++ batchMsgs
       }
 
-    val responses = g.call(s"$Service/DoExchange", requestMsgs)
+    val responses = grpc.call(s"$Service/DoExchange", requestMsgs)
 
     // reassemble the response FlightData messages into one Arrow IPC stream
     // (close() releases the h2 stream if a parse throws mid-drain — a no-op
@@ -332,10 +289,10 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
   final class ExchangeStream private[FlightClient] (fname: String,
       argTypes: Seq[DataType], argMeta: Seq[SMetadata]) extends AutoCloseable {
     private val schema = argSchema(argTypes, argMeta)
-    // withRetry: a SHARED client ([[FlightClientCache]]) can hand out a
-    // connection whose server has since restarted — opening the stream
-    // reconnects and retries like any other RPC
-    private val rpc = withRetry(g => g.bidi(s"$Service/DoExchange"))
+    // a failure here (say, a cached client whose server has restarted)
+    // reaches the wire's open, which marks the lease dead; the session
+    // fails over to a fresh client
+    private val rpc = grpc.bidi(s"$Service/DoExchange")
     locally {
       val (schemaHeader, _) = encapsulated(ch => { MessageSerializer.serialize(ch, schema); () })
       rpc.send(Pb.flightData(Some(Pb.descriptorPath(fname)), schemaHeader, Pb.Empty))

@@ -352,8 +352,6 @@ final class FlightServer(port: Int = 0,
           }) ()
         }
       } catch {
-        case _: EOFException =>
-        case _: java.net.SocketException =>
         case _: IOException =>
       } finally {
         // wake + unblock every exchange worker: closing ends their waits,

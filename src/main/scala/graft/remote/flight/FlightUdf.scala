@@ -154,11 +154,15 @@ object FlightUdf {
  * sockets per endpoint instead of ~32k. Idle connections are reused across
  * task waves, so the count tracks peak CONCURRENCY, not partition count.
  *
- * Failure discipline: a partition that exhausts [[FlightClient]]'s own
- * reconnect/replay marks its lease DEAD — the client is evicted for new
- * acquisitions and closed when its last lease releases (holders in flight
- * keep it; their own retries may still revive its internal connection).
- * Healthy clients persist for the executor lifetime, like the worker pools.
+ * Failure discipline: a client is one connection and is never revived.
+ * When an exchange on it fails, [[graft.remote.FailoverSession]] (the one
+ * retry site) marks its lease DEAD: the client is evicted for new
+ * acquisitions and closed when its last lease releases. The endpoint's
+ * IDLE clients are retired with it, since a transport failure on one
+ * connection makes its idle siblings suspect (a restarted server leaves
+ * every cached connection stale; leasing them one by one would spend the
+ * session's failover budget on corpses). Healthy clients persist for the
+ * executor lifetime, like the worker pools.
  */
 private[flight] object FlightClientCache {
   /** Connections per endpoint before leases start stacking as multiplexed
@@ -179,11 +183,16 @@ private[flight] object FlightClientCache {
       if (entry.dead && entry.leases == 0)
         try entry.client.close() catch { case _: Exception => }
     }
-    /** Evict this client for future acquisitions (endpoint judged dead). */
+    /** Evict this client for future acquisitions (endpoint judged dead),
+      * and close the endpoint's idle clients. */
     def markDead(): Unit = FlightClientCache.synchronized {
-      if (!entry.dead) {
-        entry.dead = true
-        cache.get(key).foreach(_ -= entry)
+      entry.dead = true
+      cache.get(key).foreach { list =>
+        list.filter(_.leases == 0).foreach { idle =>
+          idle.dead = true
+          try idle.client.close() catch { case _: Exception => }
+        }
+        list.filterInPlace(!_.dead)
       }
     }
   }

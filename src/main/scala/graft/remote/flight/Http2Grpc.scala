@@ -140,12 +140,12 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     * reader thread that hit it): always a plain IOException, even when the
     * latched cause was a read deadline. The deadline is an ANSWER only for
     * the RPC whose read hit it (containment: a hung server stays aborted,
-    * [[FlightClient]] never retries STE); for every other stream — and for
-    * any later RPC on a cached shared connection — it just means "this
-    * connection is dead", which the retry layer reconnects from. Without
-    * this split, one deadline permanently poisoned a [[FlightClientCache]]
-    * client: every future startRpc rethrew STE, nothing retried it, and the
-    * idle-preferred cache kept handing the corpse out. */
+    * [[graft.remote.FailoverSession]] evicts and rethrows STE); for every
+    * other stream on the connection it just means "this connection is
+    * dead", which the session fails over from. Without this split, every
+    * stream sharing a [[FlightClientCache]] client with one hung RPC would
+    * inherit its deadline verdict and abort its task instead of failing
+    * over. */
   private def deadEx(): IOException =
     new IOException(s"connection dead: ${dead.getMessage}", dead)
 

@@ -234,20 +234,33 @@ class FlightUdfSpec extends AnyFunSuite {
   }
 
   test("transient connection loss: client reconnects and replays the exchange") {
+    // A restart behind idle cached clients: a 4-partition query leaves up to
+    // four idle clients, all stale once the server restarts on the same
+    // port. The next single-task query leases one, fails, and gets one
+    // replay on a one-endpoint pool; that replay must get a fresh client,
+    // not the next stale one.
+    import spark.implicits._
+    def gcd(a: Int, b: Int): Int = if (b == 0) a else gcd(b, a % b)
     val port = freePort()
+    val ep = Seq(("127.0.0.1", port))
     var proc = startFixture(port)
-    val c = new FlightClient("127.0.0.1", port)
     try {
-      assert(c.call("flight_gcd", Seq(IntegerType, IntegerType), Seq(Seq(12, 8))) == Seq(4))
-      // kill the server under the established connection, restart SAME port
-      proc.destroyForcibly().waitFor()
-      proc = startFixture(port)
-      // the EOF/reset is absorbed by withRetry: reconnect + replay, no task loss
-      assert(c.call("flight_gcd", Seq(IntegerType, IntegerType), Seq(Seq(54, 24))) == Seq(6))
-    } finally {
-      c.close()
-      proc.destroyForcibly()
-    }
+      val wide = spark.range(0, 40000, 1, 4)
+        .selectExpr("CAST(id * 21 AS INT) AS x", "CAST(id % 14 + 1 AS INT) AS y")
+      val one = Seq((54, 24)).toDF("x", "y") // one non-empty partition
+      val wires: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+        "per-chunk" -> (FlightUdf.withFlightColumn(_, ep, "flight_gcd", Seq("x", "y"), IntegerType)),
+        "streamed" -> (FlightUdf.withFlightColumnStreamed(_, ep, "flight_gcd", Seq("x", "y"), IntegerType)))
+      wires.foreach { case (name, query) =>
+        val warm = FlightUdf.withFlightColumn(wide, ep, "flight_gcd", Seq("x", "y"), IntegerType)
+          .collect()
+        assert(warm.length == 40000)
+        proc.destroyForcibly().waitFor()
+        proc = startFixture(port)
+        val got = query(one).collect()
+        assert(got.map(_.getInt(2)).toSeq == Seq(gcd(54, 24)), name)
+      }
+    } finally proc.destroyForcibly()
   }
 
   test("endpoint failover: a dead endpoint in the pool is skipped at connect time") {

@@ -68,7 +68,7 @@ class RemoteUdfSpec extends AnyFunSuite {
         ctx
       }
       intercept[Exception] {
-        val c = new UdfClient("127.0.0.1", server.boundPort, maxRetries = 0,
+        val c = new UdfClient("127.0.0.1", server.boundPort,
           tls = Some(anonCtx))
         try c.call("add", Seq(IntegerType, IntegerType), Seq(Seq(1, 2)))
         finally c.close()
@@ -77,7 +77,7 @@ class RemoteUdfSpec extends AnyFunSuite {
       val wrongTrust = Tls.context(Tls.loadKeyStore(s"$dir/client.p12", pwc), pwc,
         Tls.loadKeyStore(s"$dir/trust-client.p12", pwc))
       intercept[Exception] {
-        val c = new UdfClient("127.0.0.1", server.boundPort, maxRetries = 0,
+        val c = new UdfClient("127.0.0.1", server.boundPort,
           tls = Some(wrongTrust))
         try c.call("add", Seq(IntegerType, IntegerType), Seq(Seq(1, 2)))
         finally c.close()
@@ -122,7 +122,7 @@ class RemoteUdfSpec extends AnyFunSuite {
     val server = new UdfServer(authToken = Some("s3cret"))
     try {
       // no token: connection opens but every verb is refused
-      val anon = new UdfClient("127.0.0.1", server.boundPort, maxRetries = 0)
+      val anon = new UdfClient("127.0.0.1", server.boundPort)
       try {
         val e = intercept[RuntimeException] { anon.list() }
         assert(e.getMessage.contains("unauthorized"), e.getMessage)
@@ -140,17 +140,69 @@ class RemoteUdfSpec extends AnyFunSuite {
   }
 
   test("transient connection loss: client reconnects and replays the exchange") {
+    // one server: the failover session's only way past a dropped connection
+    // is a fresh connection to the same endpoint, replaying the in-flight chunk
+    Graft.install(spark)
+    val served = new java.util.concurrent.atomic.AtomicLong()
+    graft.functions.Udf.scalar2[Int, Int, Int]("blip_gcd(int, int) -> int") { (x, y) =>
+      if (served.incrementAndGet() % 256 == 0) Thread.sleep(1)
+      graft.functions.Kernels.gcd(x, y)
+    }
+    val server = new UdfServer()
+    try {
+      val rows = 16L * 2 * RemoteProtocol.BatchSize
+      val df = spark.range(0, rows, 1, 16)
+        .selectExpr("CAST(id * 6 AS INT) AS a", "CAST(id % 97 + 1 AS INT) AS b")
+      @volatile var servedAtDrop = -1L
+      val dropper = new Thread(() => {
+        while (served.get() < 4L * RemoteProtocol.BatchSize) Thread.sleep(5)
+        servedAtDrop = served.get()
+        server.dropConnections()
+      })
+      dropper.start()
+      val got = gcdRows(df, Seq(("127.0.0.1", server.boundPort)), "blip_gcd")
+      dropper.join(60000)
+      assert(!dropper.isAlive)
+      // non-vacuous: the connections dropped with most of the query to run
+      assert(servedAtDrop > 0 && servedAtDrop < rows / 2, s"served $servedAtDrop of $rows")
+      assert(got.length == rows)
+      got.foreach { case (a, b, g) => assert(g == graft.functions.Kernels.gcd(a, b), s"gcd($a, $b)") }
+    } finally server.close()
+  }
+
+  test("a client hanging up before its Arrow stream leaves the server handler alive") {
     graft.functions.Builtins.ensureRegistered()
     val server = new UdfServer()
-    val client = new UdfClient("127.0.0.1", server.boundPort)
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler { (_, e) => uncaught.add(e); () }
     try {
-      assert(client.call("add", Seq(IntegerType, IntegerType), Seq(Seq(1, 2))) == Seq(3))
-      // a transient blip kills the established connection under the client
-      server.dropConnections()
-      // the broken-pipe/EOF is absorbed by withRetry: reconnect + replay
-      assert(client.call("add", Seq(IntegerType, IntegerType), Seq(Seq(20, 22))) == Seq(42))
+      def client[A](f: UdfClient => A): A = {
+        val c = new UdfClient("127.0.0.1", server.boundPort)
+        try f(c) finally c.close()
+      }
+      val state = client(_.accCreate("sum_udaf"))
+      // send a command (and for ACC its state blob), then close before the
+      // Arrow stream: the handler reads end of input where a schema belongs
+      def hangUp(write: java.io.DataOutputStream => Unit): Unit = {
+        val s = new java.net.Socket("127.0.0.1", server.boundPort)
+        try {
+          val out = new java.io.DataOutputStream(s.getOutputStream)
+          write(out)
+          out.flush()
+        } finally s.close()
+      }
+      hangUp(_.write("CALL gcd\n".getBytes("UTF-8")))
+      hangUp { out =>
+        out.write("ACC sum_udaf\n".getBytes("UTF-8"))
+        RemoteProtocol.writeBlob(out, state)
+      }
+      // the same server still answers the next client
+      assert(client(_.call("gcd", Seq(IntegerType, IntegerType), Seq(Seq(12, 18)))) == Seq(6))
+      Thread.sleep(500) // let both hang-up handlers finish
+      assert(uncaught.isEmpty, s"uncaught in a handler thread: ${uncaught.peek()}")
     } finally {
-      client.close()
+      Thread.setDefaultUncaughtExceptionHandler(prev)
       server.close()
     }
   }
@@ -504,6 +556,18 @@ class RemoteUdfSpec extends AnyFunSuite {
     try s.getLocalPort finally s.close()
   }
 
+  /** A new server on `port`. The closed server's orphaned connections can
+    * hold the port for a moment (FIN-WAIT-1, their FIN not yet acked), and
+    * a bind then fails with `BindException`, so retry it for up to 5 s. */
+  private def rebind(port: Int): UdfServer = {
+    val deadline = System.nanoTime() + 5000L * 1000 * 1000
+    while (true) {
+      try return new UdfServer(port)
+      catch { case _: java.net.BindException if System.nanoTime() < deadline => Thread.sleep(50) }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   private def gcdRows(df: org.apache.spark.sql.DataFrame, eps: Seq[(String, Int)],
                       fname: String): Seq[(Int, Int, Int)] = {
     import spark.implicits._
@@ -562,16 +626,25 @@ class RemoteUdfSpec extends AnyFunSuite {
       assert(single.length == 20000)
       assert(gcdRows(df, pool, "gcd") == single)
       // aggregates: partitions whose start slot is the dead endpoint skip it
+      import spark.implicits._
       def sums(eps: Seq[(String, Int)]): Map[Int, Long] = {
-        import spark.implicits._
         RemoteAgg.register(spark, "failover_sum", eps, "sum_udaf", LongType)
         df.groupBy(($"b" % 5).as("k"))
           .agg(org.apache.spark.sql.functions.call_function("failover_sum", $"a"))
           .as[(Int, Long)].collect().toMap
       }
-      val singleSums = sums(Seq(live))
-      assert(singleSums.size == 5)
-      assert(sums(pool) == singleSums)
+      val builtin = df.groupBy(($"b" % 5).as("k"))
+        .agg(org.apache.spark.sql.functions.sum($"a")).as[(Int, Long)].collect().toMap
+      assert(builtin.size == 5)
+      assert(sums(Seq(live)) == builtin)
+      assert(sums(pool) == builtin)
+      // pinned aggregate sessions outlive the query: after a restart on the
+      // same port, their first exchange fails over to a fresh connection
+      val fixed = Seq(("127.0.0.1", freePort()))
+      val first = new UdfServer(fixed.head._2)
+      try assert(sums(fixed) == builtin) finally first.close()
+      val restarted = rebind(fixed.head._2)
+      try assert(sums(fixed) == builtin) finally restarted.close()
     } finally server.close()
   }
 

@@ -6,15 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Shared-client lifecycle gates for [[FlightClientCache]] / [[Http2Conn]]:
  *
- *  1. A read DEADLINE must not permanently poison a shared client: the RPC
- *     whose read hit the deadline sees SocketTimeoutException (containment —
- *     never retried), but every LATER use of the same client sees a plain
- *     IOException from the latched-dead connection and reconnects through
- *     the normal retry path. (Regression: STE was latched and rethrown from
- *     every future startRpc, nothing treated it as retryable, and the cache
- *     preferred the poisoned idle client for the executor lifetime.)
- *  2. Concurrent streams wedged behind the hung one fail over too, rather
- *     than inheriting the deadline verdict.
+ *  1. A read DEADLINE is an answer only for the RPC whose read hit it: that
+ *     RPC sees SocketTimeoutException (containment: the failover session
+ *     evicts and rethrows it), while every LATER use of the same client
+ *     sees a plain IOException from the latched-dead connection, which the
+ *     session fails over from. After `markDead`, the cache hands out a
+ *     fresh client that answers. (Regression: STE was latched and rethrown
+ *     from every future startRpc, so every task that leased the client
+ *     aborted instead of failing over.)
+ *  2. Concurrent streams wedged behind the hung one see the plain
+ *     IOException too, rather than inheriting the deadline verdict.
  *  3. [[FlightClientCache.acquire]] dials OUTSIDE the global cache monitor:
  *     a stalled connect to one endpoint must not block leases to healthy
  *     endpoints or lease release.
@@ -34,53 +35,83 @@ class FlightCacheSpec extends AnyFunSuite
     }
   }
 
-  test("a read deadline aborts only its own RPC; the same client recovers on the next call") {
+  private val ints = Seq(IntegerType, IntegerType)
+
+  /** Run `f` against a fresh [[FlightServer]] whose cached clients carry a
+    * 700 ms read deadline. */
+  private def withDeadlineCache(f: Int => Unit): Unit = {
     ensureSleepy()
     val server = new FlightServer()
+    FlightClientCache.dialOverride = Some((h, p) => new FlightClient(h, p, timeoutMs = 700))
+    try failAfter(60.seconds)(f(server.boundPort))
+    finally {
+      FlightClientCache.dialOverride = None
+      server.close(0L)
+    }
+  }
+
+  /** A plain IOException: the connection is dead, not this RPC's deadline. */
+  private def assertPlainIo(e: Throwable): Unit =
+    assert(e.isInstanceOf[java.io.IOException] &&
+      !e.isInstanceOf[java.net.SocketTimeoutException], s"expected a plain IOException: $e")
+
+  /** After `markDead` on a lease of the failed client, the next acquire for
+    * the endpoint dials a fresh client, and it answers. */
+  private def assertFreshClientAnswers(port: Int, failed: FlightClient): Unit = {
+    val fresh = FlightClientCache.acquire("127.0.0.1", port)
     try {
-      failAfter(60.seconds) {
-        val c = new FlightClient("127.0.0.1", server.boundPort, timeoutMs = 700)
-        try {
-          // server sleeps 3s > 700ms deadline: this RPC's own read times out
-          intercept[java.net.SocketTimeoutException] {
-            c.call("sleepy_add", Seq(IntegerType, IntegerType), Seq(Seq(3000, 1)))
-          }
-          // the SAME client object (what FlightClientCache would hand the
-          // next task) must recover: the latched-dead connection surfaces as
-          // a retryable IOException internally and withRetry re-dials
-          val got = c.call("sleepy_add", Seq(IntegerType, IntegerType), Seq(Seq(0, 41)))
-          assert(got == Seq(41))
-        } finally c.close()
-      }
-    } finally server.close(0L)
+      assert(!(fresh.client eq failed))
+      assert(fresh.client.call("sleepy_add", ints, Seq(Seq(0, 41))) == Seq(41))
+    } finally { fresh.markDead(); fresh.release() }
+  }
+
+  test("a read deadline aborts only its own RPC; a later RPC sees a dead connection, and the cache dials afresh") {
+    withDeadlineCache { port =>
+      val lease = FlightClientCache.acquire("127.0.0.1", port)
+      try {
+        // server sleeps 3s > 700ms deadline: this RPC's own read times out
+        intercept[java.net.SocketTimeoutException] {
+          lease.client.call("sleepy_add", ints, Seq(Seq(3000, 1)))
+        }
+        // a later RPC on the SAME client is told the connection is dead
+        assertPlainIo(intercept[java.io.IOException] {
+          lease.client.call("sleepy_add", ints, Seq(Seq(0, 41)))
+        })
+        lease.markDead()
+      } finally lease.release()
+      assertFreshClientAnswers(port, lease.client)
+    }
   }
 
   test("a concurrent stream wedged behind the hung RPC reconnects instead of inheriting the deadline") {
-    ensureSleepy()
-    val server = new FlightServer()
-    try {
-      failAfter(60.seconds) {
-        val c = new FlightClient("127.0.0.1", server.boundPort, timeoutMs = 700)
-        try {
-          @volatile var slow: Throwable = null
-          val t = new Thread(() => {
-            try c.call("sleepy_add", Seq(IntegerType, IntegerType), Seq(Seq(3000, 1)))
-            catch { case e: Throwable => slow = e }
-          })
+    withDeadlineCache { port =>
+      val lease = FlightClientCache.acquire("127.0.0.1", port)
+      try {
+        // two RPCs whose answers both come after the deadline: exactly one
+        // read hits it (the baton holder's), so exactly one RPC sees STE;
+        // the other observes the latched-dead connection
+        val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        def slow(ms: Int): Thread = {
+          val t = new Thread(() =>
+            try lease.client.call("sleepy_add", ints, Seq(Seq(ms, 1)))
+            catch { case e: Throwable => outcomes.add(e) })
           t.start()
-          Thread.sleep(250) // the slow RPC holds the reader baton by now
-          // this fast call shares the connection; when the slow RPC's read
-          // deadline latches it dead, this one must NOT see STE — it gets
-          // the retryable IOException path and replays on a fresh connection
-          val got = c.call("gcd", Seq(IntegerType, IntegerType), Seq(Seq(12, 8)))
-          assert(got == Seq(4))
-          t.join()
-          assert(slow != null, "slow RPC should have failed")
-          assert(slow.isInstanceOf[java.net.SocketTimeoutException]
-            || slow.isInstanceOf[java.io.IOException], s"unexpected: $slow")
-        } finally c.close()
-      }
-    } finally server.close(0L)
+          t
+        }
+        val a = slow(3000)
+        Thread.sleep(200) // the first RPC holds the reader baton by now
+        val b = slow(2000)
+        a.join(); b.join()
+        import scala.jdk.CollectionConverters._
+        val es = outcomes.asScala.toSeq
+        assert(es.size == 2, s"both RPCs must fail: $es")
+        val (ste, rest) = es.partition(_.isInstanceOf[java.net.SocketTimeoutException])
+        assert(ste.size == 1, s"exactly one RPC owns the deadline: $es")
+        rest.foreach(assertPlainIo)
+        lease.markDead()
+      } finally lease.release()
+      assertFreshClientAnswers(port, lease.client)
+    }
   }
 
   test("acquire dials outside the cache lock: a stalled dial blocks neither healthy leases nor release") {
