@@ -488,12 +488,13 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
       },
       // the SAME 5M-row gcd exchange over the Arrow Flight wire (from-scratch
-      // gRPC/HTTP2 client → FlightServer adapter → in-process UdfServer):
+      // gRPC/HTTP2 client → FlightServer, which evaluates in-process):
       // measures the full h2-framing + re-framing overhead vs the raw wire
-      // above — the two probes share workload, registry tier, and batch size.
+      // above — the two probes share workload, registry tier, evaluator and
+      // batch size.
       "x_flight_throughput_5m" -> { s: SparkSession =>
         Graft.install(s)
-        val server = flightBenchServer() // shared across reps; adapter → RemoteFixture
+        val server = flightBenchServer() // shared across reps
         val df = s.range(5000000L)
           .selectExpr("CAST(id % 1000003 AS INT) AS a", "CAST(id % 999983 AS INT) AS b")
         graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", server)),
@@ -567,10 +568,10 @@ object Bench {
             batchRows = 512)
           .write.format("noop").mode("overwrite").save()
       },
-      // same streamed shape, but graft→graft: the r13 incremental
-      // FlightServer dispatch ping-ponging against graft's own client —
-      // prices the whole from-scratch stack (client + server + backend
-      // passthrough) for the long-lived mode
+      // same streamed shape, but graft→graft: the incremental FlightServer
+      // evaluation ping-ponging against graft's own client — prices the
+      // whole from-scratch stack (client + server + in-process evaluator)
+      // for the long-lived mode
       "x_flight_srv_stream_1m_b512" -> { s: SparkSession =>
         graft.functions.Builtins.ensureRegistered()
         val port = graft.remote.flight.FlightFixture.port

@@ -39,16 +39,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val filters = args.drop(1)
-    // same session shape as Verify (honors SPARK_GRAFT_CPUS) — an audit
-    // under different parallelism could show different exchanges than the
-    // plan the gate actually executes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Verify.session()
     val interesting = Seq("Exchange", "Join", "Scan", "TopK", "Broadcast",
       "Cartesian", "Sort", "Aggregate", "Window", "Asof", "Columnar")
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -12,16 +12,7 @@ object Verify {
     val filters = args.drop(2)
     def selected(name: String): Boolean =
       filters.isEmpty || filters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // drop dead checkpoint/cache blocks between queries (see Bench)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))
@@ -48,5 +39,22 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** The gate's session (honors SPARK_GRAFT_CPUS); [[PlanAudit]] audits
+    * plans on the same shape, since different parallelism could plan
+    * different exchanges than the ones the gate executes. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // drop dead checkpoint/cache blocks between queries (see Bench)
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -2,7 +2,7 @@ package graft.remote
 
 import graft.sig.{FunctionDef, Registry}
 import graft.functions.{ScalarImpl, TableImpl}
-import org.apache.arrow.memory.RootAllocator
+import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.ListVector
 import org.apache.arrow.vector.complex.StructVector
@@ -10,7 +10,8 @@ import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
 import org.apache.spark.sql.types.{Metadata => SMetadata, _}
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream,
+  InputStream, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
@@ -483,6 +484,7 @@ object RemoteProtocol {
 class UdfServer(port: Int = 0, authToken: Option[String] = None,
                 tls: Option[javax.net.ssl.SSLContext] = None) extends AutoCloseable {
   import RemoteProtocol._
+  import UdfServer.serveCall
 
   private val server = tls match {
     case Some(ctx) =>
@@ -573,12 +575,12 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
           // fallible scalar call: per-row failures surface as an `error`
           // column instead of nulls (reference `python/mod.rs:382-390`
           // build_error_array / append_error_to_schema)
-          serveCall(line.substring(8).trim, isTable = false, in, out, allocator,
-            withErrors = true)
+          serveCall(line.substring(8).trim, isTable = false, withErrors = true,
+            in, out, allocator, statusLine(out))
         } else if (line.startsWith("CALL ") || line.startsWith("CALLTABLE ")) {
           val isTable = line.startsWith("CALLTABLE ")
           val fname = line.substring(if (isTable) 10 else 5).trim
-          serveCall(fname, isTable, in, out, allocator)
+          serveCall(fname, isTable, withErrors = false, in, out, allocator, statusLine(out))
         } else if (line.startsWith("ACC")) {
           // aggregate lifecycle verbs (reference create_state/accumulate/
           // retract/merge/finish, `python/mod.rs:229-309,456-656`)
@@ -597,208 +599,14 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
       // line and its Arrow stream), a reset, or a refused TLS handshake
       case _: java.io.IOException =>
     } finally {
-      allocator.close()
-      sock.close()
+      try allocator.close() finally sock.close()
     }
   }
 
-  /** Evaluate one CALL/CALLTABLE exchange, streaming one result batch per
-    * input batch as it is evaluated (reference `UdfProducer.java:103-139`) —
-    * no server-side buffering of the result set. */
-  private def serveCall(fname: String, isTable: Boolean, in: DataInputStream,
-                        out: DataOutputStream, allocator: RootAllocator,
-                        withErrors: Boolean = false): Unit = {
-    val reader = new ArrowStreamReader(in, allocator)
-    val root = reader.getVectorSchemaRoot
-    // overload resolution sees the LOGICAL types: a dictionary-encoded
-    // string column resolves string signatures, not the index int's
-    val argTypes = root.getSchema.getFields.asScala.map { f =>
-      val (dt, md) = fromArrowField(logicalField(f, reader)); (dt, md)
-    }.toSeq
-    // Native-expression functions (the codegen tier) are served too: bind the
-    // expression to positional references once, evaluate per row through the
-    // catalyst converters — the server-side analogue of the reference's Java
-    // server evaluating compiled kernels.
-    def scalarFn(fd: FunctionDef): Option[Seq[Any] => Any] = fd.impl match {
-      case ScalarImpl(f) => Some(f)
-      case graft.functions.ExprImpl(build) =>
-        import org.apache.spark.sql.catalyst.CatalystTypeConverters
-        import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
-        val argDts = argTypes.map(_._1)
-        val expr = build(argDts.zipWithIndex.map { case (dt, i) =>
-          BoundReference(i, dt, nullable = true) })
-        val toCat = argDts.map(CatalystTypeConverters.createToCatalystConverter).toArray
-        val fromCat = CatalystTypeConverters.createToScalaConverter(fd.signature.returns.dataType)
-        // one reusable catalyst row per connection — serve loops are
-        // single-threaded per socket, so no per-row InternalRow allocation
-        val rowBuf = new GenericInternalRow(argDts.length)
-        Some { (args: Seq[Any]) =>
-          var i = 0
-          while (i < argDts.length) {
-            val a = args(i)
-            rowBuf.update(i, if (a == null) null else toCat(i)(a))
-            i += 1
-          }
-          fromCat(expr.eval(rowBuf))
-        }
-      case _ => None
-    }
-    val resolved = Registry.global.resolve(fname, argTypes)
-    val resolvedScalar = resolved.flatMap(fd => scalarFn(fd).map(f => (fd, f)))
-    (resolved, resolvedScalar) match {
-      case (_, Some((fd @ FunctionDef(sigDef, _, _, _, _), f))) if !isTable =>
-        // honor the registered CallMode over the wire: CalledOnNullInput
-        // functions (e.g. option_add) see their NULL arguments
-        val callOnNull = fd.callMode == graft.sig.CallMode.CalledOnNullInput
-        // guest-SPI functions expose a column-at-a-time evaluator: pool and
-        // compiled-handle lookups amortize per BATCH (LanguageRuntime
-        // .callBatch) instead of repeating per row. Signature must match —
-        // the per-name override doesn't cover overloads — and the row loop
-        // keeps per-row error capture and CalledOnNullInput semantics.
-        val batchFn: Option[(Seq[Array[Any]], Int) => Array[Any]] =
-          if (withErrors || callOnNull) None
-          else graft.functions.BatchEval.overrides.get(fname.toLowerCase).collect {
-            case (sig, bf) if sig == sigDef.toString => bf
-          }
-        out.write("OK\n".getBytes(StandardCharsets.UTF_8))
-        val valueField = toArrowField("value", sigDef.returns.dataType, sigDef.returns.metadata)
-        val outSchema = new ASchema(
-          (if (withErrors) Seq(valueField, toArrowField("error", StringType))
-           else Seq(valueField)).asJava)
-        val outRoot = VectorSchemaRoot.create(outSchema, allocator)
-        val writer = new ArrowStreamWriter(outRoot, null, out)
-        writer.start()
-        // flushed per message so a LONG-LIVED caller (the Flight adapter's
-        // incremental DoExchange, or any client streaming many batches over
-        // one CALL) can ping-pong: read each result batch as soon as its
-        // input batch is evaluated, instead of waiting for end-of-request
-        out.flush()
-        while (reader.loadNextBatch()) {
-          val n = root.getRowCount
-          // column-at-a-time binding: dispatch per COLUMN, not per cell
-          // (dictionary-encoded columns decode to value vectors here)
-          val (readers, doneBatch) = batchCellReaders(root, reader)
-          val nArgs = readers.length
-          outRoot.allocateNew()
-          val write = cellWriter(outRoot.getVector(0))
-          val writeErr = if (withErrors) cellWriter(outRoot.getVector(1)) else null
-          if (batchFn.isDefined) {
-            val cols = Array.tabulate(nArgs) { j =>
-              val col = new Array[Any](n)
-              val rd = readers(j)
-              var i = 0
-              while (i < n) { col(i) = rd(i); i += 1 }
-              col
-            }
-            val vals = batchFn.get(scala.collection.immutable.ArraySeq
-              .unsafeWrapArray(cols), n)
-            var i = 0
-            while (i < n) { write(i, vals(i)); i += 1 }
-            outRoot.setRowCount(n)
-            writer.writeBatch()
-            out.flush()
-            doneBatch()
-          } else {
-          var i = 0
-          while (i < n) {
-            val argsArr = new Array[Any](nArgs)
-            var j = 0
-            var hasNull = false
-            while (j < nArgs) {
-              val a = readers(j)(i)
-              if (a == null) hasNull = true
-              argsArr(j) = a
-              j += 1
-            }
-            if (!callOnNull && hasNull) {
-              write(i, null)
-              if (withErrors) writeErr(i, null)
-            } else if (withErrors) {
-              // per-row containment: a throwing row yields (null, message) —
-              // the SAME message convention as the in-process fallible tier
-              // (FallibleScalarInvoke), so local and remote error columns agree
-              try { write(i, f(scala.collection.immutable.ArraySeq.unsafeWrapArray(argsArr)))
-                    writeErr(i, null) }
-              catch { case e: Exception =>
-                write(i, null)
-                writeErr(i, if (e.getMessage == null) e.getClass.getSimpleName else e.getMessage)
-              }
-            } else {
-              write(i, f(scala.collection.immutable.ArraySeq.unsafeWrapArray(argsArr)))
-            }
-            i += 1
-          }
-          outRoot.setRowCount(n)
-          writer.writeBatch() // streamed per input batch
-          out.flush()
-          doneBatch()
-          }
-        }
-        writer.end()
-        outRoot.close()
-      case (Some(fd @ FunctionDef(sigDef, TableImpl(f), _, _, _)), _) if isTable =>
-        // table function: result rows are (row, value) — the input-row index
-        // column materialized exactly like the reference's `row: Int32`.
-        val callOnNull = fd.callMode == graft.sig.CallMode.CalledOnNullInput
-        out.write("OK\n".getBytes(StandardCharsets.UTF_8))
-        val outSchema = new ASchema(Seq(
-          toArrowField("row", IntegerType),
-          toArrowField("value", sigDef.returns.dataType, sigDef.returns.metadata)).asJava)
-        val outRoot = VectorSchemaRoot.create(outSchema, allocator)
-        val writer = new ArrowStreamWriter(outRoot, null, out)
-        writer.start()
-        out.flush() // see the scalar branch: enables incremental ping-pong
-        var rowBase = 0
-        while (reader.loadNextBatch()) {
-          val n = root.getRowCount
-          val (readers, doneBatch) = batchCellReaders(root, reader)
-          val nArgs = readers.length
-          val rowVec = outRoot.getVector(0).asInstanceOf[IntVector]
-          val valVec = outRoot.getVector(1)
-          outRoot.allocateNew()
-          val writeVal = cellWriter(valVec)
-          var outIdx = 0
-          var i = 0
-          while (i < n) {
-            val argsArr = new Array[Any](nArgs)
-            var j = 0
-            var hasNull = false
-            while (j < nArgs) {
-              val a = readers(j)(i)
-              if (a == null) hasNull = true
-              argsArr(j) = a
-              j += 1
-            }
-            val it = if (!callOnNull && hasNull) Iterator.empty
-                     else f(scala.collection.immutable.ArraySeq.unsafeWrapArray(argsArr))
-            it.foreach { v =>
-              rowVec.setSafe(outIdx, rowBase + i)
-              writeVal(outIdx, v)
-              outIdx += 1
-            }
-            i += 1
-          }
-          outRoot.setRowCount(outIdx)
-          writer.writeBatch() // streamed per input batch
-          out.flush()
-          doneBatch()
-          rowBase += n
-        }
-        writer.end()
-        outRoot.close()
-      case _ =>
-        // report BEFORE draining, so an incremental caller reading the
-        // status line after sending only the schema isn't deadlocked waiting
-        // for a drain of batches it will never send (it closes its socket on
-        // ERR, which ends the drain); a bounded-exchange caller reads the
-        // same bytes after its EOS exactly as before
-        val kind = if (isTable) "table function" else "scalar function"
-        out.write(s"ERR no $kind $fname\n".getBytes(StandardCharsets.UTF_8))
-        out.flush()
-        while (reader.loadNextBatch()) {} // drain: keep the wire parseable
-    }
-    reader.close(false)
-  }
+  /** A call's status on this wire: an `OK` or `ERR msg` line ahead of the
+    * result stream. */
+  private def statusLine(out: DataOutputStream)(err: Option[String]): Unit =
+    out.write(s"${err.fold("OK")(e => s"ERR $e")}\n".getBytes(StandardCharsets.UTF_8))
 
   /** Aggregate lifecycle over the wire — the five verbs of the reference's
     * Python runtime aggregate protocol (`python/mod.rs:229-309,456-656`):
@@ -826,31 +634,39 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
       }
       case "ACC" | "ACCRETRACT" =>
         val state = readBlob(in)
+        // closed on every path: a peer gone mid-stream must not leak the
+        // loaded batch into the connection's allocator
         val reader = new ArrowStreamReader(in, allocator)
-        val root = reader.getVectorSchemaRoot
-        agg match {
-          case None =>
-            while (reader.loadNextBatch()) {} // drain, then report
-            reader.close(false)
-            fail(s"no aggregate $fname")
-          case Some(a) =>
-            var s = javaDeserialize(state)
-            val retract = verb == "ACCRETRACT"
-            while (reader.loadNextBatch()) {
-              val n = root.getRowCount
-              val (readers, doneBatch) = batchCellReaders(root, reader)
-              var i = 0
-              while (i < n) {
-                val row = org.apache.spark.sql.Row.fromSeq(
-                  scala.collection.immutable.ArraySeq.unsafeWrapArray(readers.map(_(i))))
-                s = if (retract) a.retract(s, row) else a.accumulate(s, row)
-                i += 1
+        val folded = try {
+          val root = reader.getVectorSchemaRoot
+          agg match {
+            case None =>
+              while (reader.loadNextBatch()) {} // drain, then report
+              None
+            case Some(a) =>
+              var s = javaDeserialize(state)
+              val retract = verb == "ACCRETRACT"
+              while (reader.loadNextBatch()) {
+                val n = root.getRowCount
+                val (readers, doneBatch) = batchCellReaders(root, reader)
+                try {
+                  var i = 0
+                  while (i < n) {
+                    val row = org.apache.spark.sql.Row.fromSeq(
+                      scala.collection.immutable.ArraySeq.unsafeWrapArray(readers.map(_(i))))
+                    s = if (retract) a.retract(s, row) else a.accumulate(s, row)
+                    i += 1
+                  }
+                } finally doneBatch()
               }
-              doneBatch()
-            }
-            reader.close(false)
+              Some(s)
+          }
+        } finally reader.close(false)
+        folded match {
+          case Some(s) =>
             out.write("OK\n".getBytes(StandardCharsets.UTF_8))
             writeBlob(out, javaSerialize(s))
+          case None => fail(s"no aggregate $fname")
         }
       case "ACCMERGE" =>
         val sa = readBlob(in)
@@ -872,14 +688,15 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
             val outSchema = new ASchema(Seq(
               toArrowField("value", ret.dataType, ret.metadata)).asJava)
             val outRoot = VectorSchemaRoot.create(outSchema, allocator)
-            val writer = new ArrowStreamWriter(outRoot, null, out)
-            writer.start()
-            outRoot.allocateNew()
-            setCell(outRoot.getVector(0), 0, result)
-            outRoot.setRowCount(1)
-            writer.writeBatch()
-            writer.end()
-            outRoot.close()
+            try {
+              val writer = new ArrowStreamWriter(outRoot, null, out)
+              writer.start()
+              outRoot.allocateNew()
+              setCell(outRoot.getVector(0), 0, result)
+              outRoot.setRowCount(1)
+              writer.writeBatch()
+              writer.end()
+            } finally outRoot.close()
           case _ => fail(s"no aggregate $fname")
         }
       case other => fail(s"bad agg verb $other")
@@ -898,6 +715,200 @@ class UdfServer(port: Int = 0, authToken: Option[String] = None,
     running = false
     server.close()
     dropConnections()
+  }
+}
+
+object UdfServer {
+  import RemoteProtocol._
+
+  /** Evaluate one CALL/CALLTABLE/CALLERR exchange: read the argument IPC
+    * stream from `in`, resolve `fname` against its schema, and stream one
+    * result batch per input batch to `out` as it is evaluated (reference
+    * `UdfProducer.java:103-139`) — no server-side buffering of the result
+    * set. `out` is flushed after every IPC message, so a caller streaming
+    * many batches over one call can ping-pong: each result batch leaves
+    * before the next input batch is read.
+    *
+    * `status` is called once, before any result bytes: with None when the
+    * call resolved, or with the error when no function serves it. The
+    * input is then drained to keep the wire parseable, unless `status`
+    * throws. Reader, result root and decoded dictionary copies are closed
+    * on every path, so a peer that goes away mid-stream leaks nothing from
+    * `allocator`. Shared by [[UdfServer]] and
+    * [[graft.remote.flight.FlightServer]]. */
+  def serveCall(fname: String, isTable: Boolean, withErrors: Boolean,
+                in: InputStream, out: OutputStream, allocator: BufferAllocator,
+                status: Option[String] => Unit): Unit = {
+    val reader = new ArrowStreamReader(in, allocator)
+    try {
+      val root = reader.getVectorSchemaRoot
+      // overload resolution sees the LOGICAL types: a dictionary-encoded
+      // string column resolves string signatures, not the index int's
+      val argTypes = root.getSchema.getFields.asScala.map { f =>
+        val (dt, md) = fromArrowField(logicalField(f, reader)); (dt, md)
+      }.toSeq
+      // Native-expression functions (the codegen tier) are served too: bind the
+      // expression to positional references once, evaluate per row through the
+      // catalyst converters — the server-side analogue of the reference's Java
+      // server evaluating compiled kernels.
+      def scalarFn(fd: FunctionDef): Option[Seq[Any] => Any] = fd.impl match {
+        case ScalarImpl(f) => Some(f)
+        case graft.functions.ExprImpl(build) =>
+          import org.apache.spark.sql.catalyst.CatalystTypeConverters
+          import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+          val argDts = argTypes.map(_._1)
+          val expr = build(argDts.zipWithIndex.map { case (dt, i) =>
+            BoundReference(i, dt, nullable = true) })
+          val toCat = argDts.map(CatalystTypeConverters.createToCatalystConverter).toArray
+          val fromCat = CatalystTypeConverters.createToScalaConverter(fd.signature.returns.dataType)
+          // one reusable catalyst row per call — a call is evaluated on one
+          // thread, so no per-row InternalRow allocation
+          val rowBuf = new GenericInternalRow(argDts.length)
+          Some { (args: Seq[Any]) =>
+            var i = 0
+            while (i < argDts.length) {
+              val a = args(i)
+              rowBuf.update(i, if (a == null) null else toCat(i)(a))
+              i += 1
+            }
+            fromCat(expr.eval(rowBuf))
+          }
+        case _ => None
+      }
+      /** Start the result stream with `outSchema`, then feed each input
+        * batch's column readers and row count to `evalBatch`, which fills
+        * `outRoot` and sets its row count; one result batch per input. */
+      def streamResults(outSchema: ASchema)(
+          evalBatch: (VectorSchemaRoot, Array[Int => Any], Int) => Unit): Unit = {
+        status(None)
+        val outRoot = VectorSchemaRoot.create(outSchema, allocator)
+        try {
+          // no dictionary provider: the writer holds no buffers of its own
+          val writer = new ArrowStreamWriter(outRoot, null, out)
+          writer.start()
+          out.flush()
+          while (reader.loadNextBatch()) {
+            // column-at-a-time binding: dispatch per COLUMN, not per cell
+            // (dictionary-encoded columns decode to value vectors here)
+            val (readers, doneBatch) = batchCellReaders(root, reader)
+            try {
+              outRoot.allocateNew()
+              evalBatch(outRoot, readers, root.getRowCount)
+              writer.writeBatch() // streamed per input batch
+              out.flush()
+            } finally doneBatch()
+          }
+          writer.end()
+        } finally outRoot.close()
+      }
+      /** Row `i`'s arguments; null when one of them is NULL and the
+        * function is not called on NULL input (its result is NULL). */
+      def rowArgs(readers: Array[Int => Any], i: Int, callOnNull: Boolean): Seq[Any] = {
+        val argsArr = new Array[Any](readers.length)
+        var j = 0
+        var hasNull = false
+        while (j < readers.length) {
+          val a = readers(j)(i)
+          if (a == null) hasNull = true
+          argsArr(j) = a
+          j += 1
+        }
+        if (hasNull && !callOnNull) null
+        else scala.collection.immutable.ArraySeq.unsafeWrapArray(argsArr)
+      }
+      val resolved = Registry.global.resolve(fname, argTypes)
+      val resolvedScalar = resolved.flatMap(fd => scalarFn(fd).map(f => (fd, f)))
+      (resolved, resolvedScalar) match {
+        case (_, Some((fd @ FunctionDef(sigDef, _, _, _, _), f))) if !isTable =>
+          // honor the registered CallMode over the wire: CalledOnNullInput
+          // functions (e.g. option_add) see their NULL arguments
+          val callOnNull = fd.callMode == graft.sig.CallMode.CalledOnNullInput
+          // guest-SPI functions expose a column-at-a-time evaluator: pool and
+          // compiled-handle lookups amortize per BATCH (LanguageRuntime
+          // .callBatch) instead of repeating per row. Signature must match —
+          // the per-name override doesn't cover overloads — and the row loop
+          // keeps per-row error capture and CalledOnNullInput semantics.
+          val batchFn: Option[(Seq[Array[Any]], Int) => Array[Any]] =
+            if (withErrors || callOnNull) None
+            else graft.functions.BatchEval.overrides.get(fname.toLowerCase).collect {
+              case (sig, bf) if sig == sigDef.toString => bf
+            }
+          val valueField = toArrowField("value", sigDef.returns.dataType, sigDef.returns.metadata)
+          streamResults(new ASchema(
+            (if (withErrors) Seq(valueField, toArrowField("error", StringType))
+             else Seq(valueField)).asJava)) { (outRoot, readers, n) =>
+            val write = cellWriter(outRoot.getVector(0))
+            val writeErr = if (withErrors) cellWriter(outRoot.getVector(1)) else null
+            if (batchFn.isDefined) {
+              val cols = readers.map { rd =>
+                val col = new Array[Any](n)
+                var i = 0
+                while (i < n) { col(i) = rd(i); i += 1 }
+                col
+              }
+              val vals = batchFn.get(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols), n)
+              var i = 0
+              while (i < n) { write(i, vals(i)); i += 1 }
+            } else {
+              var i = 0
+              while (i < n) {
+                val args = rowArgs(readers, i, callOnNull)
+                if (args == null) {
+                  write(i, null)
+                  if (withErrors) writeErr(i, null)
+                } else if (withErrors) {
+                  // per-row containment: a throwing row yields (null, message) —
+                  // the SAME message convention as the in-process fallible tier
+                  // (FallibleScalarInvoke), so local and remote error columns agree
+                  try { write(i, f(args)); writeErr(i, null) }
+                  catch { case e: Exception =>
+                    write(i, null)
+                    writeErr(i, if (e.getMessage == null) e.getClass.getSimpleName else e.getMessage)
+                  }
+                } else write(i, f(args))
+                i += 1
+              }
+            }
+            outRoot.setRowCount(n)
+          }
+        case (Some(fd @ FunctionDef(sigDef, TableImpl(f), _, _, _)), _) if isTable =>
+          // table function: result rows are (row, value) — the input-row index
+          // column materialized exactly like the reference's `row: Int32`.
+          val callOnNull = fd.callMode == graft.sig.CallMode.CalledOnNullInput
+          var rowBase = 0
+          streamResults(new ASchema(Seq(
+            toArrowField("row", IntegerType),
+            toArrowField("value", sigDef.returns.dataType, sigDef.returns.metadata)).asJava)) {
+            (outRoot, readers, n) =>
+              val rowVec = outRoot.getVector(0).asInstanceOf[IntVector]
+              val writeVal = cellWriter(outRoot.getVector(1))
+              var outIdx = 0
+              var i = 0
+              while (i < n) {
+                val args = rowArgs(readers, i, callOnNull)
+                val it = if (args == null) Iterator.empty else f(args)
+                it.foreach { v =>
+                  rowVec.setSafe(outIdx, rowBase + i)
+                  writeVal(outIdx, v)
+                  outIdx += 1
+                }
+                i += 1
+              }
+              outRoot.setRowCount(outIdx)
+              rowBase += n
+          }
+        case _ =>
+          // report BEFORE draining, so an incremental caller waiting for the
+          // status after sending only the schema isn't deadlocked waiting
+          // for a drain of batches it will never send (it closes its stream
+          // on the error, which ends the drain); a bounded-exchange caller
+          // reads the same bytes after its EOS exactly as before
+          val kind = if (isTable) "table function" else "scalar function"
+          status(Some(s"no $kind $fname"))
+          out.flush()
+          while (reader.loadNextBatch()) {} // drain: keep the wire parseable
+      }
+    } finally reader.close(false)
   }
 }
 

@@ -229,46 +229,6 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
 
   // ---- long-lived DoExchange (reference multi-batch streaming mode) ---------
 
-  /** Pull-based InputStream over a bidi call's response `FlightData`
-    * messages, re-encapsulated as one Arrow IPC stream (EOS appended when
-    * the server closes) — feeds a stock [[ArrowStreamReader]] batch by
-    * batch without buffering the whole response. */
-  private final class FlightDataStream(rpc: GrpcConn#BidiCall)
-      extends java.io.InputStream {
-    private var cur: Array[Byte] = Array.emptyByteArray
-    private var pos = 0
-    private var sawEos = false
-    private def refill(): Boolean = {
-      if (pos < cur.length) return true
-      if (sawEos) return false
-      rpc.recv() match {
-        case Some(msg) =>
-          val fd = Pb.parseFlightData(msg)
-          if (fd.dataHeader.isEmpty) refill() // metadata-only message: skip
-          else {
-            val bos = new ByteArrayOutputStream()
-            IpcFraming.write(bos, fd.dataHeader, fd.dataBody)
-            cur = bos.toByteArray; pos = 0
-            true
-          }
-        case None => // status already verified by recv()
-          sawEos = true
-          cur = IpcFraming.Eos; pos = 0
-          true
-      }
-    }
-    override def read(): Int =
-      if (!refill()) -1 else { val b = cur(pos) & 0xff; pos += 1; b }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (len == 0) return 0
-      if (!refill()) return -1
-      val n = math.min(len, cur.length - pos)
-      System.arraycopy(cur, pos, b, off, n)
-      pos += n
-      n
-    }
-  }
-
   /**
    * One LONG-LIVED DoExchange carrying many batches — the reference server's
    * native shape (`UdfProducer.java:104-139` loops the inbound stream; the
@@ -281,10 +241,10 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
    *
    * Requires a server that evaluates batches INCREMENTALLY as they arrive —
    * the reference Java/Python servers do, and so does graft's own
-   * [[FlightServer]] (per-batch passthrough dispatch), so graft→graft runs
-   * this mode too. A server that buffered the whole request before
-   * responding would deadlock the ping-pong — the read deadline
-   * (`timeoutMs`) bounds that failure.
+   * [[FlightServer]] (per-batch evaluation), so graft→graft runs this mode
+   * too. A server that buffered the whole request before responding would
+   * deadlock the ping-pong — the read deadline (`timeoutMs`) bounds that
+   * failure.
    */
   final class ExchangeStream private[FlightClient] (fname: String,
       argTypes: Seq[DataType], argMeta: Seq[SMetadata]) extends AutoCloseable {
@@ -297,7 +257,10 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
       val (schemaHeader, _) = encapsulated(ch => { MessageSerializer.serialize(ch, schema); () })
       rpc.send(Pb.flightData(Some(Pb.descriptorPath(fname)), schemaHeader, Pb.Empty))
     }
-    private val reader = new ArrowStreamReader(new FlightDataStream(rpc), allocator)
+    // recv() verifies grpc-status when the server ends the stream
+    private val reader = new ArrowStreamReader(new FlightDataStream(
+      Iterator.continually(rpc.recv()).takeWhile(_.isDefined).flatten.map(Pb.parseFlightData)),
+      allocator)
 
     /** Send one bounded batch of rows, read back exactly its result rows. */
     def call(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = {
@@ -328,16 +291,16 @@ final class FlightClient(host: String, port: Int, timeoutMs: Int = 120000,
     }
 
     /** Half-close, drain the end-of-stream (verifying grpc-status), release.
-      * The h2 stream is released even when the half-close or drain throws
-      * (dead connection, decode failure, non-OK status) — an abandoned
-      * stream on the long-lived shared connection would otherwise leak. */
-    override def close(): Unit = {
+      * The reader and the h2 stream are released even when the half-close or
+      * drain throws (dead connection, decode failure, non-OK status) — an
+      * abandoned stream would otherwise leak its result buffers into the
+      * client's allocator and its stream on the long-lived shared
+      * connection. */
+    override def close(): Unit =
       try {
-        rpc.finishSending()
-        try while (reader.loadNextBatch()) {}
+        try { rpc.finishSending(); while (reader.loadNextBatch()) {} }
         finally reader.close()
       } finally rpc.close()
-    }
   }
 
   /** Open a long-lived multi-batch DoExchange (see [[ExchangeStream]]). */

@@ -1,18 +1,28 @@
 package graft.remote.flight
 
-import graft.remote.RemoteProtocol
+import graft.remote.{RemoteProtocol, UdfServer}
 import graft.sig.{FunctionDef, FunctionKind, Registry}
 import io.netty.buffer.Unpooled
 import io.netty.handler.codec.http2.{DefaultHttp2Headers, DefaultHttp2HeadersDecoder, DefaultHttp2HeadersEncoder}
+import org.apache.arrow.flatbuf.MessageHeader
+import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.WriteChannel
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.arrow.vector.types.pojo.{Schema => ASchema}
 import org.apache.spark.sql.types.IntegerType
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, IOException}
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, EOFException, IOException}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+
+/** A request the client framed wrongly — mapped to INVALID_ARGUMENT (3), so
+  * reference clients distinguish their own bad input from server faults
+  * (INTERNAL, 13). */
+private[flight] final class BadRequest(msg: String) extends IOException(msg)
+
+/** No function serves the request — mapped to NOT_FOUND (5). */
+private[flight] final class NotFound(msg: String) extends IOException(msg)
 
 /**
  * Arrow Flight UDF SERVER — graft's function registry exposed over the
@@ -31,67 +41,45 @@ import scala.jdk.CollectionConverters._
  *  - `DoExchange` → evaluate each input record batch, stream one result
  *    batch per input batch; table functions yield (row, value) rows
  *
- * Architecture: a WIRE ADAPTER, not a second evaluator. The HTTP/2 + gRPC
- * layer is handled here (same from-scratch stack as the client side, HPACK
- * via the shipped netty jar); `DoExchange` bodies pass through BYTE-FOR-BYTE
- * to the in-process [[graft.remote.UdfServer]] wire (`CALL`/`CALLTABLE` + raw
- * IPC) — Flight's `FlightData` and graft's wire carry the identical
- * encapsulated Arrow IPC messages, so bridging is pure re-framing
- * ([[IpcFraming]]) and the proven registry dispatch (overload resolution by
- * input schema, CallMode, batched guest dispatch, native-expression tier,
- * per-batch streamed results) is inherited, not duplicated.
+ * Architecture: the HTTP/2 + gRPC layer is handled here (same from-scratch
+ * stack as the client side, HPACK via the shipped netty jar), and each
+ * `DoExchange` is EVALUATED IN-PROCESS by the same call evaluator the raw
+ * Arrow-IPC wire serves ([[graft.remote.UdfServer.serveCall]]): overload
+ * resolution by input schema, CallMode, batched guest dispatch, the
+ * native-expression tier and per-batch streamed results. Flight's
+ * `FlightData` carries encapsulated Arrow IPC messages, so inbound messages
+ * feed the evaluator's reader as one IPC stream ([[FlightDataStream]]) and
+ * every result message it flushes leaves as one `FlightData`
+ * ([[FlightDataSink]]) — re-framing only, no re-encoding.
  *
  * Scale shape: one READER thread per connection plus one WORKER per active
- * DoExchange stream (r15 — the shape grpc thread-pool servers have): the
- * reader owns the socket and frame dispatch, each exchange evaluates on its
- * own worker, so concurrent multiplexed streams no longer serialize behind
- * one another's backend round-trips (this is what let the client default
- * drop to 8 sockets per endpoint at throughput parity). DoExchange is
- * evaluated INCREMENTALLY — each record batch is forwarded and answered as
- * it arrives (the reference `UdfProducer` loop), so an exchange of any
- * length runs in bounded memory (the per-stream cap applies to unprocessed
- * BACKLOG, not request size), and a ping-ponging streamed client
- * ([[FlightClient.ExchangeStream]]) gets each result before sending the
- * next batch. Concurrent exchanges each hold a dedicated backend
- * connection, so their batches never interleave on a shared socket.
- * A deployment fronts many engine JVMs with ordinary TCP load balancing,
- * exactly like the reference's UdfServer fleet.
+ * DoExchange stream (the shape grpc thread-pool servers have): the reader
+ * owns the socket and frame dispatch, each exchange evaluates on its own
+ * worker, so concurrent multiplexed streams never serialize behind one
+ * another's evaluation. DoExchange is evaluated INCREMENTALLY — each record
+ * batch is answered as it arrives (the reference `UdfProducer` loop), so an
+ * exchange of any length runs in bounded memory (the per-stream cap applies
+ * to unprocessed BACKLOG, not request size), and a ping-ponging streamed
+ * client ([[FlightClient.ExchangeStream]]) gets each result before sending
+ * the next batch. A deployment fronts many engine JVMs with ordinary TCP
+ * load balancing, exactly like the reference's UdfServer fleet.
+ *
+ * @param authToken when set, every RPC must carry
+ *   `authorization: Bearer <token>` call metadata or is refused with
+ *   UNAUTHENTICATED (16) — the Flight-wire expression of the graft wire's
+ *   AUTH verb (constant-time compare, per-RPC like gRPC interceptors).
+ *   The check runs at HEADERS time, before any request body is buffered,
+ *   so an unauthenticated peer cannot stream bytes into server memory.
+ * @param bindHost listen address. Defaults to loopback for the in-process
+ *   fixture shape; a deployment fronting engine JVMs behind TCP load
+ *   balancing binds "0.0.0.0" (pair with `tls` + `authToken` — a non-local
+ *   bind without them serves the registry to anyone who can reach the port).
+ * @param maxBuffered per-stream cap on UNPROCESSED request backlog (bytes);
+ *   past it the stream is refused with RESOURCE_EXHAUSTED. The 64 MiB
+ *   default is far above any legitimate bounded exchange; tests shrink it
+ *   to force the overflow paths.
  */
-/** @param backendPort the in-process graft wire to dispatch exchanges to.
-  *   CONTRACT (since the r13 incremental dispatch): the backend must emit
-  *   EXACTLY ONE result IPC message per forwarded input RecordBatch — the
-  *   ping-pong credits result N to input N ([[graft.remote.UdfServer]] holds
-  *   this for every verb, including 0-row table results). A backend that
-  *   emits 0 or >1 messages per input desynchronizes the pairing; the
-  *   dispatch detects unsolicited buffered backend bytes before the next
-  *   forward and fails the exchange with a clear INTERNAL error rather than
-  *   mis-crediting results.
-  * @param authToken when set, every RPC must carry
-  *   `authorization: Bearer <token>` call metadata or is refused with
-  *   UNAUTHENTICATED (16) — the Flight-wire expression of the graft wire's
-  *   AUTH verb (constant-time compare, per-RPC like gRPC interceptors).
-  *   The check runs at HEADERS time, before any request body is buffered,
-  *   so an unauthenticated peer cannot stream bytes into server memory.
-  * @param bindHost listen address. Defaults to loopback for the in-process
-  *   fixture shape; a deployment fronting engine JVMs behind TCP load
-  *   balancing binds "0.0.0.0" (pair with `tls` + `authToken` — a non-local
-  *   bind without them serves the registry to anyone who can reach the port). */
-/** A request the client framed wrongly — mapped to INVALID_ARGUMENT (3), so
-  * reference clients distinguish their own bad input from server faults
-  * (INTERNAL, 13). */
-private[flight] final class BadRequest(msg: String) extends IOException(msg)
-
-/** A refusal with a specific gRPC status (NOT_FOUND for unknown functions,
-  * backend-reported codes) — thrown from exchange steps, mapped to trailers
-  * in one place. */
-private[flight] final class Refuse(val code: Int, msg: String) extends IOException(msg)
-
-/** @param maxBuffered per-stream cap on UNPROCESSED request backlog (bytes);
-  *   past it the stream is refused with RESOURCE_EXHAUSTED. The 64 MiB
-  *   default is far above any legitimate bounded exchange; tests shrink it
-  *   to force the overflow paths. */
 final class FlightServer(port: Int = 0,
-                         backendPort: () => Int = () => graft.remote.RemoteFixture.port,
                          tls: Option[javax.net.ssl.SSLContext] = None,
                          authToken: Option[String] = None,
                          bindHost: String = "127.0.0.1",
@@ -257,11 +245,10 @@ final class FlightServer(port: Int = 0,
       var reset = false
       var headersSent = false
       /** Non-null ⇔ this stream is a DoExchange, handled INCREMENTALLY on
-        * its OWN worker thread (r15): each inbound record batch is evaluated
-        * and answered as it arrives (the reference `UdfProducer.java:104-139`
+        * its OWN worker thread: each inbound record batch is evaluated and
+        * answered as it arrives (the reference `UdfProducer.java:104-139`
         * loop), never buffered to end-of-request — and concurrent exchanges
-        * on one connection no longer serialize behind each other's backend
-        * round-trips (each stream's worker blocks only on its own backend). */
+        * on one connection never serialize behind each other's evaluation. */
       var exch: Exch = null
       var ended = false
       /** Set by the handler when this stream blew the backlog cap; its
@@ -272,15 +259,10 @@ final class FlightServer(port: Int = 0,
     /** Incremental DoExchange session: gRPC message reassembly (bytes are
       * consumed as messages complete, so the [[MaxBuffered]] cap applies to
       * BACKLOG, not request length — exchanges of any total size run in
-      * bounded memory) + a DEDICATED backend wire connection, so concurrent
-      * multiplexed exchanges on one h2 connection never interleave their
-      * batches on a shared socket. */
+      * bounded memory). */
     private final class Exch {
       var name: String = ""
-      var started = false // backend OK read; response headers + schema sent
-      var sock: Socket = null
-      var bin: DataInputStream = null
-      var bout: DataOutputStream = null
+      var sawSchema = false
       private var mbuf = new Array[Byte](8192)
       private var mstart = 0
       private var mend = 0
@@ -316,14 +298,6 @@ final class FlightServer(port: Int = 0,
         mstart += 5 + n
         Some(m)
       }
-      def connectBackend(): Unit = {
-        sock = new Socket("127.0.0.1", backendPort())
-        sock.setTcpNoDelay(true)
-        bin = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-        bout = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-      }
-      def closeBackend(): Unit =
-        if (sock != null) { try sock.close() catch { case _: Exception => }; sock = null }
     }
 
     private val streams = mutable.LinkedHashMap.empty[Int, Req]
@@ -354,11 +328,9 @@ final class FlightServer(port: Int = 0,
       } catch {
         case _: IOException =>
       } finally {
-        // wake + unblock every exchange worker: closing ends their waits,
-        // closed backends end their blocking backend reads
+        // wake every exchange worker: closing ends their waits
         writeLock.synchronized {
           closing = true
-          streams.values.foreach(r => if (r.exch != null) r.exch.closeBackend())
           writeLock.notifyAll()
         }
         try sock.close() catch { case _: Exception => }
@@ -464,9 +436,9 @@ final class FlightServer(port: Int = 0,
             register(sid, req)
             if (endStream) req.ended = true
             if (req.exch != null) {
-              // STREAM-PARALLEL dispatch (r15): every exchange gets its own
-              // worker, so stacked h2 streams from a multiplexed client no
-              // longer serialize behind one another's backend round-trips
+              // STREAM-PARALLEL dispatch: every exchange gets its own
+              // worker, so stacked h2 streams from a multiplexed client
+              // never serialize behind one another's evaluation
               val t = new Thread(() => runExchange(sid, req, req.exch),
                 s"graft-flight-exch-$sid")
               t.setDaemon(true)
@@ -488,10 +460,8 @@ final class FlightServer(port: Int = 0,
               // the worker emit the refusal (trailersOnly decided there,
               // where headersSent is stable).
               req.reset = true
-              if (req.exch != null) {
-                req.overflowed = true
-                req.exch.closeBackend() // unblock a worker mid-backend-read
-              } else {
+              if (req.exch != null) req.overflowed = true
+              else {
                 sendTrailers(sid, 8, "request body exceeds per-stream limit",
                   trailersOnly = !req.headersSent)
                 writeFrame(FrameRst, 0, sid, u32(8L)); flushOut()
@@ -543,10 +513,7 @@ final class FlightServer(port: Int = 0,
           if (sid == 0) connSend += inc
           else streams.get(sid).foreach(_.sendWindow += inc)
         case FrameRst =>
-          streams.get(sid).foreach { r =>
-            r.reset = true
-            if (r.exch != null) r.exch.closeBackend() // unblock its worker
-          }
+          streams.get(sid).foreach(_.reset = true)
           unregister(sid)
         case FrameGoaway => closing = true
         case _ => // PRIORITY etc: ignore
@@ -723,62 +690,50 @@ final class FlightServer(port: Int = 0,
     }
 
     // ---- incremental DoExchange ------------------------------------------------
-    // Byte-level passthrough to the in-process graft wire, evaluated AS
-    // BATCHES ARRIVE (the reference `UdfProducer.java:104-139` loop): the
-    // schema message opens a dedicated backend connection, each inbound
-    // record batch forwards + answers with its result batch immediately, and
-    // END_STREAM closes with the backend's end-of-stream. This serves both
+    // Evaluated AS BATCHES ARRIVE (the reference `UdfProducer.java:104-139`
+    // loop): the worker hands the exchange's inbound messages to the call
+    // evaluator as one Arrow IPC stream, and every result message the
+    // evaluator flushes goes out as FlightData at once. This serves both
     // client shapes — a write-everything-then-read client sees the same
     // bytes (just earlier), and a ping-ponging streamed client
     // ([[FlightClient.ExchangeStream]], the reference's multi-batch mode)
     // gets each result before sending the next batch.
 
-    /** One exchange stream's WORKER loop (r15 stream-parallel dispatch):
-      * waits on [[writeLock]] for bytes the handler appended, evaluates each
-      * complete message with backend I/O OUTSIDE the lock, finishes on
-      * END_STREAM. Owns every write for its stream — trailers, refusals and
-      * RSTs for this stream are emitted here (frame-atomic under the lock),
-      * so two streams' responses interleave at frame granularity, exactly
-      * what h2 multiplexing permits. */
+    /** One exchange stream's WORKER (stream-parallel dispatch): pulls the
+      * schema message, which names the function and so picks the call shape
+      * [[infoFor]] advertised, then runs the evaluator over the rest of the
+      * stream. Owns every write for its stream — headers, results,
+      * trailers, refusals and RSTs are emitted here (frame-atomic under the
+      * lock), so two streams' responses interleave at frame granularity,
+      * exactly what h2 multiplexing permits. */
     private def runExchange(sid: Int, req: Req, ex: Exch): Unit = {
+      val allocator = new RootAllocator()
       try {
-        var finished = false
-        while (!finished) {
-          var msg: Option[Array[Byte]] = None
-          var mode = 0 // 1 = evaluate msg, 2 = finish, 3 = abort
-          writeLock.synchronized {
-            while (mode == 0) {
-              if (req.reset || closing) mode = 3
-              else {
-                msg = ex.tryParse()
-                if (msg.isDefined) mode = 1
-                else if (req.ended) mode = 2
-                else writeLock.wait()
-              }
-            }
-          }
-          mode match {
-            case 1 => exchangeMsg(sid, req, ex, msg.get)
-            case 2 =>
-              if (ex.unconsumed > 0)
-                throw new BadRequest(s"truncated gRPC message (${ex.unconsumed} trailing bytes)")
-              finishExchange(sid, req, ex)
-              finished = true
-            case _ =>
-              emitOverflowRefusal(sid, req)
-              finished = true
-          }
-        }
+        // the first data message is the schema, or nextData throws
+        val schema = nextData(req, ex)
+        val fd = Registry.global.lookup(ex.name).head
+        val isTable = fd.signature.kind == FunctionKind.Table
+        val input = new FlightDataStream(schema.iterator ++
+          Iterator.continually(nextData(req, ex)).takeWhile(_.isDefined).flatten)
+        val output = new FlightDataSink((header, body) =>
+          sendData(sid, req, grpcFrame(Pb.flightData(None, header, body))))
+        UdfServer.serveCall(ex.name, isTable, withErrors = !isTable && fd.fallible,
+          input, output, allocator, {
+            case None => sendResponseHeaders(sid, req)
+            // fail BEFORE the evaluator drains: a ping-ponging client is
+            // waiting for this answer, not sending the rest of its stream
+            case Some(err) => throw new NotFound(err)
+          })
+        if (!req.reset) sendTrailers(sid, 0, "", trailersOnly = false)
       } catch {
         case e: Exception =>
-          // the overflow reset can land while this worker is mid-sendData or
-          // mid-backend-I/O — it then surfaces here (aborted write, closed
-          // backend) rather than in the wait loop, and the refusal must
-          // still go out; a plain client reset stays silent
+          // an overflow resets the stream while this worker evaluates; the
+          // evaluator's next read throws, and the refusal must still go
+          // out; a plain client reset stays silent
           if (req.overflowed) emitOverflowRefusal(sid, req)
           else if (!req.reset) {
             val code = e match {
-              case r: Refuse => r.code
+              case _: NotFound => 5
               case _: BadRequest => 3
               case _ => 13
             }
@@ -792,8 +747,8 @@ final class FlightServer(port: Int = 0,
             }
           }
       } finally {
-        ex.closeBackend()
         unregister(sid)
+        allocator.close()
       }
     }
 
@@ -801,121 +756,80 @@ final class FlightServer(port: Int = 0,
       * the stream's writes; the handler only flags `overflowed`). The
       * stream's Req is already reset, so sendTrailers/RST race nothing;
       * trailersOnly reflects whether response HEADERS went out. */
-    private def emitOverflowRefusal(sid: Int, req: Req): Unit =
-      if (req.overflowed) {
-        try sendTrailers(sid, 8, "request body exceeds per-stream limit",
-          trailersOnly = !req.headersSent)
-        catch { case _: Exception => }
-        try { writeFrame(FrameRst, 0, sid, u32(8L)); flushOut() }
-        catch { case _: Exception => }
+    private def emitOverflowRefusal(sid: Int, req: Req): Unit = {
+      try sendTrailers(sid, 8, "request body exceeds per-stream limit",
+        trailersOnly = !req.headersSent)
+      catch { case _: Exception => }
+      try { writeFrame(FrameRst, 0, sid, u32(8L)); flushOut() }
+      catch { case _: Exception => }
+    }
+
+    /** The next complete gRPC message of this exchange, waiting on
+      * [[writeLock]] for the handler to append it; None once the client
+      * half-closed. A reset, an overflow or a closing connection throws, so
+      * the evaluator ends at its next read of exchange input. */
+    private def awaitMessage(req: Req, ex: Exch): Option[Array[Byte]] =
+      writeLock.synchronized {
+        var msg: Option[Array[Byte]] = None
+        while (msg.isEmpty) {
+          if (req.reset) throw new IOException("stream reset")
+          if (closing) throw new IOException("connection closing")
+          msg = ex.tryParse()
+          if (msg.isEmpty && req.ended) {
+            if (ex.unconsumed > 0)
+              throw new BadRequest(s"truncated gRPC message (${ex.unconsumed} trailing bytes)")
+            return None
+          }
+          if (msg.isEmpty) writeLock.wait()
+        }
+        msg
       }
 
-    /** One inbound FlightData message: latch the descriptor name, validate
-      * the IPC header, then schema → begin / batch → forward + answer. */
-    private def exchangeMsg(sid: Int, req: Req, ex: Exch, msg: Array[Byte]): Unit = {
-      val fd = parsed("FlightData")(Pb.parseFlightData(msg))
-      if (ex.name.isEmpty) fd.descriptorPath.headOption.foreach(n => ex.name = n)
-      if (fd.dataHeader.isEmpty) return // descriptor/app-metadata-only message
-      // malformed IPC fails as the CLIENT's error before touching the
-      // backend: the data_header must be a structurally valid flatbuffer
-      // Message of kind Schema/RecordBatch/DictionaryBatch
-      val ht = parsed("Arrow IPC message header") {
-        val m = org.apache.arrow.flatbuf.Message.getRootAsMessage(
-          java.nio.ByteBuffer.wrap(fd.dataHeader))
-        val t = m.headerType()
-        if (t != org.apache.arrow.flatbuf.MessageHeader.Schema &&
-            t != org.apache.arrow.flatbuf.MessageHeader.RecordBatch &&
-            t != org.apache.arrow.flatbuf.MessageHeader.DictionaryBatch)
-          throw new IOException(s"unexpected IPC header type $t")
-        if (m.bodyLength() < 0 || m.bodyLength() > Int.MaxValue)
-          throw new IOException(s"bad IPC body length ${m.bodyLength()}")
-        t
-      }
-      if (!ex.started) {
-        if (ht != org.apache.arrow.flatbuf.MessageHeader.Schema)
-          throw new BadRequest("DoExchange record batch before schema message")
-        beginExchange(sid, req, ex, fd)
-      } else ht match {
-        case org.apache.arrow.flatbuf.MessageHeader.Schema =>
-          throw new BadRequest("duplicate schema message on DoExchange")
-        case org.apache.arrow.flatbuf.MessageHeader.DictionaryBatch =>
-          // consumed inline by the backend reader's next loadNextBatch; no
-          // result message of its own
-          IpcFraming.write(ex.bout, fd.dataHeader, fd.dataBody)
-          ex.bout.flush()
-        case _ => // RecordBatch: one result batch per input batch
-          // backend-contract check (see the backendPort scaladoc): after the
-          // previous batch's single result was read, NOTHING may be buffered
-          // from the backend until we forward the next input. Unsolicited
-          // bytes mean a >1-results-per-batch backend whose extra message
-          // would otherwise be silently credited to THIS batch.
-          if (ex.started && ex.bin.available() > 0)
-            throw new Refuse(13, "backend emitted an unsolicited result message — " +
-              "FlightServer's incremental dispatch requires exactly one result " +
-              "batch per input RecordBatch (see FlightServer backendPort contract)")
-          IpcFraming.write(ex.bout, fd.dataHeader, fd.dataBody)
-          ex.bout.flush()
-          IpcFraming.readMessage(ex.bin) match {
-            case Some((header, body)) =>
-              sendData(sid, req, grpcFrame(Pb.flightData(None, header, body)))
-            case None => throw new EOFException("backend ended the result stream early")
+    /** The exchange's next Arrow IPC message, checked before the
+      * evaluator's reader sees it: latches the descriptor name, skips
+      * metadata-only messages, and requires a structurally valid header of
+      * a known type, the schema first and only once, and — at the schema —
+      * a function of that name. None once the client half-closed after its
+      * schema. */
+    @scala.annotation.tailrec
+    private def nextData(req: Req, ex: Exch): Option[Pb.FlightDataMsg] =
+      awaitMessage(req, ex) match {
+        case None =>
+          if (!ex.sawSchema) { // the whole request arrived without a schema
+            requireFunction(ex)
+            throw new BadRequest("DoExchange ended before a schema message")
+          }
+          None
+        case Some(msg) =>
+          val fd = parsed("FlightData")(Pb.parseFlightData(msg))
+          if (ex.name.isEmpty) fd.descriptorPath.headOption.foreach(n => ex.name = n)
+          if (fd.dataHeader.isEmpty) nextData(req, ex) // descriptor/app-metadata only
+          else {
+            val ht = parsed("Arrow IPC message header") {
+              val m = org.apache.arrow.flatbuf.Message.getRootAsMessage(
+                java.nio.ByteBuffer.wrap(fd.dataHeader))
+              val t = m.headerType()
+              if (t != MessageHeader.Schema && t != MessageHeader.RecordBatch &&
+                  t != MessageHeader.DictionaryBatch)
+                throw new IOException(s"unexpected IPC header type $t")
+              if (m.bodyLength() < 0 || m.bodyLength() > Int.MaxValue)
+                throw new IOException(s"bad IPC body length ${m.bodyLength()}")
+              t
+            }
+            if (ht == MessageHeader.Schema) {
+              if (ex.sawSchema) throw new BadRequest("duplicate schema message on DoExchange")
+              requireFunction(ex)
+              ex.sawSchema = true
+            } else if (!ex.sawSchema)
+              throw new BadRequest("DoExchange record batch before schema message")
+            Some(fd)
           }
       }
-    }
 
-    /** First schema message: resolve the function, open the dedicated
-      * backend connection, forward verb + schema, read the backend's status
-      * + result schema, and start the response. */
-    private def beginExchange(sid: Int, req: Req, ex: Exch, schemaFd: Pb.FlightDataMsg): Unit = {
+    private def requireFunction(ex: Exch): Unit = {
       if (ex.name.isEmpty)
         throw new BadRequest("DoExchange carries no FlightDescriptor path (function name)")
-      val defs = Registry.global.lookup(ex.name)
-      if (defs.isEmpty) throw new Refuse(5, s"no function ${ex.name}")
-      // verb selection mirrors what infoFor advertised: table fns explode to
-      // (row, value); fallible scalars carry the (value, error) column pair
-      val verb =
-        if (defs.head.signature.kind == FunctionKind.Table) "CALLTABLE"
-        else if (defs.head.fallible) "CALLERR"
-        else "CALL"
-      ex.connectBackend()
-      ex.bout.write(s"$verb ${ex.name}\n".getBytes(StandardCharsets.UTF_8))
-      IpcFraming.write(ex.bout, schemaFd.dataHeader, schemaFd.dataBody)
-      ex.bout.flush()
-      val status = RemoteProtocol.readLine(ex.bin)
-      if (status == null) throw new EOFException("backend closed")
-      if (!status.startsWith("OK")) {
-        val msg = status.stripPrefix("ERR").trim
-        throw new Refuse(if (msg.startsWith("no ")) 5 else 13, msg)
-      }
-      val (schemaHeader, schemaBody) = IpcFraming.readMessage(ex.bin)
-        .getOrElse(throw new EOFException("backend sent no result schema"))
-      sendResponseHeaders(sid, req)
-      sendData(sid, req, grpcFrame(Pb.flightData(None, schemaHeader, schemaBody)))
-      ex.started = true
-    }
-
-    /** END_STREAM with all messages processed: close the request toward the
-      * backend, drain its end-of-stream, and send OK trailers. */
-    private def finishExchange(sid: Int, req: Req, ex: Exch): Unit = {
-      if (!ex.started) {
-        // the whole request arrived without a schema message
-        if (ex.name.isEmpty)
-          throw new BadRequest("DoExchange carries no FlightDescriptor path (function name)")
-        if (Registry.global.lookup(ex.name).isEmpty)
-          throw new Refuse(5, s"no function ${ex.name}")
-        throw new BadRequest("DoExchange ended before a schema message")
-      }
-      ex.bout.write(IpcFraming.Eos)
-      ex.bout.flush()
-      // normally the per-batch loop consumed every result; anything left
-      // (e.g. a backend that held batches back) still reaches the client
-      var m = IpcFraming.readMessage(ex.bin)
-      while (m.isDefined && !req.reset) {
-        sendData(sid, req, grpcFrame(Pb.flightData(None, m.get._1, m.get._2)))
-        m = IpcFraming.readMessage(ex.bin)
-      }
-      ex.closeBackend()
-      if (!req.reset) sendTrailers(sid, 0, "", trailersOnly = false)
+      if (Registry.global.lookup(ex.name).isEmpty) throw new NotFound(s"no function ${ex.name}")
     }
   }
 }

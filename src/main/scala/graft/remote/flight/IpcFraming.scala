@@ -1,6 +1,6 @@
 package graft.remote.flight
 
-import java.io.{ByteArrayOutputStream, DataInputStream, OutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, InputStream, OutputStream}
 
 /**
  * Arrow IPC encapsulated-message framing, shared by the Flight client and
@@ -62,5 +62,58 @@ private[flight] object IpcFraming {
     val bos = new ByteArrayOutputStream(header.length + body.length + 16)
     write(bos, header, body)
     bos.toByteArray
+  }
+}
+
+/** FlightData messages re-encapsulated as ONE Arrow IPC stream (EOS
+  * appended when `msgs` ends), pulled message by message — feeds a stock
+  * `ArrowStreamReader` batch by batch without buffering the whole exchange.
+  * Reads never run ahead of the message being consumed, so a ping-ponging
+  * peer is never waited on for a batch it has not been answered for. Used
+  * for the client's response stream and the server's request stream. */
+private[flight] final class FlightDataStream(msgs: Iterator[Pb.FlightDataMsg])
+    extends InputStream {
+  private var cur: Array[Byte] = Array.emptyByteArray
+  private var pos = 0
+  private var sawEos = false
+  private def refill(): Boolean = {
+    while (pos >= cur.length) {
+      if (sawEos) return false
+      if (msgs.hasNext) {
+        val fd = msgs.next()
+        if (fd.dataHeader.nonEmpty) { // metadata-only messages carry no IPC
+          val bos = new ByteArrayOutputStream(fd.dataHeader.length + fd.dataBody.length + 16)
+          IpcFraming.write(bos, fd.dataHeader, fd.dataBody)
+          cur = bos.toByteArray; pos = 0
+        }
+      } else {
+        sawEos = true
+        cur = IpcFraming.Eos; pos = 0
+      }
+    }
+    true
+  }
+  override def read(): Int =
+    if (!refill()) -1 else { val b = cur(pos) & 0xff; pos += 1; b }
+  override def read(b: Array[Byte], off: Int, len: Int): Int = {
+    if (len == 0) return 0
+    if (!refill()) return -1
+    val n = math.min(len, cur.length - pos)
+    System.arraycopy(cur, pos, b, off, n)
+    pos += n
+    n
+  }
+}
+
+/** The inverse of [[FlightDataStream]]: an Arrow IPC stream written here
+  * leaves as one (metadata, body) pair per message, handed to `send` at
+  * each flush; the EOS marker is dropped (a Flight stream ends with its
+  * trailers). The writer must flush on message boundaries. */
+private[flight] final class FlightDataSink(send: (Array[Byte], Array[Byte]) => Unit)
+    extends ByteArrayOutputStream {
+  override def flush(): Unit = {
+    val in = new DataInputStream(new ByteArrayInputStream(buf, 0, count))
+    while (in.available() > 0) IpcFraming.readMessage(in).foreach(m => send(m._1, m._2))
+    reset()
   }
 }

@@ -14,6 +14,36 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class FlightServerSpec extends AnyFunSuite {
 
+  /** A loopback TCP relay to `port`; `cut()` severs every connection it
+    * carries, the way a client host that vanishes mid-stream would. */
+  private final class Relay(port: Int) extends AutoCloseable {
+    private val listener =
+      new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    private val carried = new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]()
+    def boundPort: Int = listener.getLocalPort
+    private def daemon(body: => Unit): Unit = {
+      val t = new Thread(() => body)
+      t.setDaemon(true)
+      t.start()
+    }
+    private def pipe(from: java.net.Socket, to: java.net.Socket): Unit = daemon {
+      try from.getInputStream.transferTo(to.getOutputStream)
+      catch { case _: java.io.IOException => }
+      finally { from.close(); to.close() }
+    }
+    daemon {
+      try while (true) {
+        val client = listener.accept()
+        val upstream = new java.net.Socket("127.0.0.1", port)
+        Seq(client, upstream).foreach { s => s.setTcpNoDelay(true); carried.add(s) }
+        pipe(client, upstream)
+        pipe(upstream, client)
+      } catch { case _: java.io.IOException => } // listener closed
+    }
+    def cut(): Unit = carried.forEach(s => try s.close() catch { case _: java.io.IOException => })
+    override def close(): Unit = { listener.close(); cut() }
+  }
+
   private def runProbe(port: Int): Seq[String] = {
     val script = new java.io.File(sys.props("user.dir"), "tools/flight_client_probe.py")
     assert(script.isFile, s"probe script missing at $script")
@@ -246,5 +276,59 @@ class FlightServerSpec extends AnyFunSuite {
       assert(lines.contains("PINGPONG True"), out)
       assert(lines.contains("PPTABLE True True"), out)
     } finally server.close()
+  }
+
+  test("a guest that throws reaches a Flight client as INTERNAL with its message") {
+    graft.functions.Builtins.ensureRegistered()
+    graft.functions.Udf.scalar2[Int, Int, Int]("flight_strict_add(int, int) -> int") {
+      (a, b) => if (a < 0) throw new IllegalArgumentException(s"negative operand $a") else a + b
+    }
+    val server = new FlightServer()
+    try {
+      val c = new graft.remote.flight.FlightClient("127.0.0.1", server.boundPort,
+        timeoutMs = 10000)
+      try {
+        val it = org.apache.spark.sql.types.IntegerType
+        val e = intercept[graft.remote.flight.GrpcStatusException](
+          c.call("flight_strict_add", Seq(it, it), Seq(Seq(1, 2), Seq(-3, 4))))
+        assert(e.code == 13, s"wanted INTERNAL, got ${e.code}: ${e.getMessage}")
+        assert(e.getMessage.contains("negative operand -3"), e.getMessage)
+        // the connection survives the failed exchange
+        assert(c.call("flight_strict_add", Seq(it, it), Seq(Seq(1, 2))) == Seq(3))
+      } finally c.close()
+    } finally server.close()
+  }
+
+  test("an abandoned streamed exchange leaves no uncaught exception; the server answers on") {
+    // the client vanishes after one ping-pong with its stream still open: the
+    // exchange's worker is waiting for the next batch, holding the first
+    // batch's buffers, and must release them when the connection closes
+    graft.functions.Builtins.ensureRegistered()
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler { (_, e) => uncaught.add(e); () }
+    val server = new FlightServer()
+    val relay = new Relay(server.boundPort)
+    try {
+      val it = org.apache.spark.sql.types.IntegerType
+      val c1 = new graft.remote.flight.FlightClient("127.0.0.1", relay.boundPort,
+        timeoutMs = 10000)
+      try {
+        val ex = c1.openExchange("gcd", Seq(it, it))
+        assert(ex.call(Seq(Seq(12, 8))) == Seq(Seq(4)))
+        relay.cut()
+        // the wire's own handling of a dead stream: close, ignore the failure
+        try ex.close() catch { case _: java.io.IOException => }
+      } finally c1.close()
+      val c2 = new graft.remote.flight.FlightClient("127.0.0.1", server.boundPort)
+      try assert(c2.call("gcd", Seq(it, it), Seq(Seq(54, 24))) == Seq(6))
+      finally c2.close()
+      Thread.sleep(500) // let the abandoned exchange's worker finish
+      assert(uncaught.isEmpty, s"uncaught in a server thread: ${uncaught.peek()}")
+    } finally {
+      Thread.setDefaultUncaughtExceptionHandler(prev)
+      relay.close()
+      server.close()
+    }
   }
 }

@@ -197,9 +197,28 @@ class RemoteUdfSpec extends AnyFunSuite {
         out.write("ACC sum_udaf\n".getBytes("UTF-8"))
         RemoteProtocol.writeBlob(out, state)
       }
+      // a call cut off mid-stream: the schema and one batch are evaluated,
+      // then the peer goes away halfway through the second batch — the
+      // handler must release the batch it holds before closing its allocator
+      hangUp { out =>
+        val alloc = new org.apache.arrow.memory.RootAllocator()
+        val root = org.apache.arrow.vector.VectorSchemaRoot.create(
+          RemoteProtocol.argSchema(Seq(IntegerType, IntegerType)), alloc)
+        try {
+          val bos = new java.io.ByteArrayOutputStream()
+          val w = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, bos)
+          w.start()
+          RemoteProtocol.fillRoot(root, Seq(Seq(12, 18), Seq(7, 21)))
+          w.writeBatch()
+          val firstBatchEnd = bos.size()
+          w.writeBatch()
+          out.write("CALL gcd\n".getBytes("UTF-8"))
+          out.write(bos.toByteArray, 0, (firstBatchEnd + bos.size()) / 2)
+        } finally { root.close(); alloc.close() }
+      }
       // the same server still answers the next client
       assert(client(_.call("gcd", Seq(IntegerType, IntegerType), Seq(Seq(12, 18)))) == Seq(6))
-      Thread.sleep(500) // let both hang-up handlers finish
+      Thread.sleep(500) // let the hang-up handlers finish
       assert(uncaught.isEmpty, s"uncaught in a handler thread: ${uncaught.peek()}")
     } finally {
       Thread.setDefaultUncaughtExceptionHandler(prev)

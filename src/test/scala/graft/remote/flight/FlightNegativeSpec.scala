@@ -97,59 +97,4 @@ class FlightNegativeSpec extends AnyFunSuite {
       assert(rawStatus(Array[Byte](0, 0x7f, 0xff.toByte, 0xff.toByte, 0xfe.toByte)) == "3")
     } finally server.close()
   }
-
-  test("a backend emitting unsolicited result messages fails the exchange clearly") {
-    graft.functions.Builtins.ensureRegistered()
-    // a misbehaving backend: echoes OK + the input schema, then echoes each
-    // input batch TWICE — violating the one-result-batch-per-input contract
-    // the incremental ping-pong requires (FlightServer backendPort scaladoc).
-    // Without detection, batch N+1's result would be credited to batch N.
-    val backend = new java.net.ServerSocket(0, 4,
-      java.net.InetAddress.getLoopbackAddress)
-    val backendThread = new Thread(() => {
-      try {
-        while (true) {
-          val s = backend.accept()
-          new Thread(() => {
-            try {
-              val bin = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(s.getInputStream))
-              val bout = new java.io.DataOutputStream(
-                new java.io.BufferedOutputStream(s.getOutputStream))
-              // verb line
-              while (bin.read() != '\n') {}
-              val schema = IpcFraming.readMessage(bin).get
-              bout.write("OK\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              IpcFraming.write(bout, schema._1, schema._2)
-              bout.flush()
-              var m = IpcFraming.readMessage(bin)
-              while (m.isDefined) {
-                IpcFraming.write(bout, m.get._1, m.get._2)
-                IpcFraming.write(bout, m.get._1, m.get._2) // the extra one
-                bout.flush()
-                m = IpcFraming.readMessage(bin)
-              }
-              s.close()
-            } catch { case _: Exception => }
-          }).start()
-        }
-      } catch { case _: Exception => }
-    })
-    backendThread.setDaemon(true)
-    backendThread.start()
-    val server = new FlightServer(backendPort = () => backend.getLocalPort)
-    try {
-      val fc = new FlightClient("127.0.0.1", server.boundPort)
-      try {
-        val es = fc.openExchange("gcd", Seq(
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType))
-        es.call(Seq(Seq(6, 4))) // echo 1 credited to batch 1; echo 2 buffered
-        val e = intercept[GrpcStatusException](es.call(Seq(Seq(12, 8))))
-        assert(e.code == 13, s"${e.code}: ${e.getMessage}")
-        assert(e.getMessage.contains("unsolicited"), e.getMessage)
-        try es.close() catch { case _: Exception => } // release the reader
-      } finally fc.close()
-    } finally { server.close(0L); backend.close() }
-  }
 }
