@@ -2,15 +2,14 @@ package graft.remote.flight
 
 import graft.remote.{RemoteProtocol, UdfServer}
 import graft.sig.{FunctionDef, FunctionKind, Registry}
-import io.netty.buffer.Unpooled
-import io.netty.handler.codec.http2.{DefaultHttp2Headers, DefaultHttp2HeadersDecoder, DefaultHttp2HeadersEncoder}
+import io.netty.handler.codec.http2.DefaultHttp2Headers
 import org.apache.arrow.flatbuf.MessageHeader
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.WriteChannel
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.arrow.vector.types.pojo.{Schema => ASchema}
 import org.apache.spark.sql.types.IntegerType
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, EOFException, IOException}
+import java.io.{ByteArrayOutputStream, IOException}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
@@ -41,12 +40,14 @@ private[flight] final class NotFound(msg: String) extends IOException(msg)
  *  - `DoExchange` → evaluate each input record batch, stream one result
  *    batch per input batch; table functions yield (row, value) rows
  *
- * Architecture: the HTTP/2 + gRPC layer is handled here (same from-scratch
- * stack as the client side, HPACK via the shipped netty jar), and each
- * `DoExchange` is EVALUATED IN-PROCESS by the same call evaluator the raw
- * Arrow-IPC wire serves ([[graft.remote.UdfServer.serveCall]]): overload
- * resolution by input schema, CallMode, batched guest dispatch, the
- * native-expression tier and per-batch streamed results. Flight's
+ * Architecture: the HTTP/2 + gRPC byte rules (frames, SETTINGS/PING,
+ * credit, HPACK via the shipped netty jar, gRPC deframing) are [[H2]]'s,
+ * shared with the client side ([[Http2Conn]]); this class adds the server's
+ * streams, auth, drain and dispatch. Each `DoExchange` is EVALUATED
+ * IN-PROCESS by the same call evaluator the raw Arrow-IPC wire serves
+ * ([[graft.remote.UdfServer.serveCall]]): overload resolution by input
+ * schema, CallMode, batched guest dispatch, the native-expression tier and
+ * per-batch streamed results. Flight's
  * `FlightData` carries encapsulated Arrow IPC messages, so inbound messages
  * feed the evaluator's reader as one IPC stream ([[FlightDataStream]]) and
  * every result message it flushes leaves as one `FlightData`
@@ -74,16 +75,18 @@ private[flight] final class NotFound(msg: String) extends IOException(msg)
  *   fixture shape; a deployment fronting engine JVMs behind TCP load
  *   balancing binds "0.0.0.0" (pair with `tls` + `authToken` — a non-local
  *   bind without them serves the registry to anyone who can reach the port).
- * @param maxBuffered per-stream cap on UNPROCESSED request backlog (bytes);
- *   past it the stream is refused with RESOURCE_EXHAUSTED. The 64 MiB
- *   default is far above any legitimate bounded exchange; tests shrink it
- *   to force the overflow paths.
+ * @param maxBuffered per-stream cap on UNPROCESSED request backlog (bytes),
+ *   and so on one request message; past it the stream is refused with
+ *   RESOURCE_EXHAUSTED (a declared message length past it is
+ *   INVALID_ARGUMENT). The 64 MiB default ([[H2.MaxMessage]], also the
+ *   client's cap on a response message) is far above any legitimate
+ *   bounded exchange; tests shrink it to force the overflow paths.
  */
 final class FlightServer(port: Int = 0,
                          tls: Option[javax.net.ssl.SSLContext] = None,
                          authToken: Option[String] = None,
                          bindHost: String = "127.0.0.1",
-                         maxBuffered: Int = 64 << 20)
+                         maxBuffered: Int = H2.MaxMessage)
     extends AutoCloseable {
   graft.functions.Builtins.ensureRegistered()
 
@@ -182,23 +185,17 @@ final class FlightServer(port: Int = 0,
   // ---- per-connection HTTP/2 handler ----------------------------------------
   private final class H2Handler(sock: Socket) {
     import H2._
-    private val RecvWindow = 1 << 23
-    /** Per-stream request-body cap. The protocol bounds a legitimate
-      * exchange to ~one [[RemoteProtocol.BatchSize]] batch, far below this;
-      * past it the stream is refused (RESOURCE_EXHAUSTED) and dropped so a
-      * misbehaving client can't grow an unbounded buffer. */
-    private val MaxBuffered = maxBuffered
 
-    /** THE connection monitor (r15 stream-parallel dispatch): guards every
-      * frame write + flush (each frame lands atomically; HPACK encode happens
-      * under the same hold as its write, so header blocks hit the wire in
-      * encode order), all mutable connection/stream state (windows, the
-      * streams map, Req/Exch fields), and the condition workers wait on
-      * (window credit, buffered messages). The handler thread remains the
-      * ONLY socket reader — it reads outside the lock and applies each frame
-      * under it, then notifies; exchange workers never read the socket, they
-      * wait on this monitor. [[beginDrain]] (closer's thread) interleaves its
-      * GOAWAY at a frame boundary the same way. */
+    /** THE connection monitor: guards every codec write + flush (each frame
+      * lands atomically; HPACK encode happens under the same hold as its
+      * write, so header blocks hit the wire in encode order), all mutable
+      * connection/stream state (windows, the streams map, Req fields), and
+      * the condition workers wait on (window credit, buffered messages). The
+      * handler thread remains the ONLY socket reader — it reads outside the
+      * lock and applies each frame under it, then notifies; exchange workers
+      * never read the socket, they wait on this monitor. [[beginDrain]]
+      * (closer's thread) interleaves its GOAWAY at a frame boundary the same
+      * way. */
     private val writeLock = new Object
     @volatile private var draining = false
     /** Highest client-initiated stream id seen — GOAWAY's last-stream-id. */
@@ -206,13 +203,18 @@ final class FlightServer(port: Int = 0,
     private val activeStreams = new java.util.concurrent.atomic.AtomicInteger(0)
     def activeStreamCount: Int = activeStreams.get
 
+    private val streams = mutable.LinkedHashMap.empty[Int, Req]
+    private val codec = new H2.Codec(sock, 1 << 23,
+      delta => streams.values.foreach(_.sendWindow += delta))
+    private var closing = false
+
     /** Advertise GOAWAY(NO_ERROR) and refuse streams above the cutoff from
       * now on; in-flight streams keep running on the handler thread. */
     def beginDrain(): Unit = {
       draining = true
       try writeLock.synchronized {
-        H2.writeFrame(out, FrameGoaway, 0, 0, u32(maxSeenStream.toLong) ++ u32(0L))
-        flushOut()
+        codec.writeGoaway(maxSeenStream)
+        codec.flush()
       } catch { case _: Exception => } // peer already gone: nothing to drain
     }
 
@@ -227,80 +229,32 @@ final class FlightServer(port: Int = 0,
       case None => true
     }
 
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
-    private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
-    private val hpackEnc = new DefaultHttp2HeadersEncoder()
-    private val hpackDec = new DefaultHttp2HeadersDecoder(false)
-
-    private var connSend: Long = 65535L
-    private var peerInitWindow: Long = 65535L
-    private var peerMaxFrame: Int = 16384
-    private var closing = false
-
-    private final class Req {
-      var path: String = ""
-      var authorization: String = ""
-      val buf = new ByteArrayOutputStream()
-      var sendWindow: Long = peerInitWindow
+    private final class Req(val path: String, val authorization: String) {
+      /** Request messages as they arrive. Past `maxBuffered` bytes of
+        * unprocessed backlog the stream is refused (RESOURCE_EXHAUSTED) and
+        * dropped, so a misbehaving client can't grow an unbounded buffer;
+        * a legitimate exchange is ~one [[RemoteProtocol.BatchSize]] batch,
+        * far below it. */
+      val msgs = new GrpcDeframer(maxBuffered)
+      var sendWindow: Long = codec.peerInitialWindow
       var reset = false
       var headersSent = false
-      /** Non-null ⇔ this stream is a DoExchange, handled INCREMENTALLY on
-        * its OWN worker thread: each inbound record batch is evaluated and
-        * answered as it arrives (the reference `UdfProducer.java:104-139`
-        * loop), never buffered to end-of-request — and concurrent exchanges
-        * on one connection never serialize behind each other's evaluation. */
-      var exch: Exch = null
+      /** A DoExchange is handled INCREMENTALLY on its OWN worker thread:
+        * each inbound record batch is evaluated and answered as it arrives
+        * (the reference `UdfProducer.java:104-139` loop), never buffered to
+        * end-of-request — and concurrent exchanges on one connection never
+        * serialize behind each other's evaluation. */
+      val isExchange: Boolean = path == "/arrow.flight.protocol.FlightService/DoExchange"
+      /** The exchange's function (its descriptor path) and whether its
+        * schema message arrived. */
+      var name: String = ""
+      var sawSchema = false
       var ended = false
       /** Set by the handler when this stream blew the backlog cap; its
         * worker owns the stream's writes, so the refusal is emitted there. */
       var overflowed = false
     }
 
-    /** Incremental DoExchange session: gRPC message reassembly (bytes are
-      * consumed as messages complete, so the [[MaxBuffered]] cap applies to
-      * BACKLOG, not request length — exchanges of any total size run in
-      * bounded memory). */
-    private final class Exch {
-      var name: String = ""
-      var sawSchema = false
-      private var mbuf = new Array[Byte](8192)
-      private var mstart = 0
-      private var mend = 0
-      def unconsumed: Int = mend - mstart
-      def append(b: Array[Byte], off: Int, len: Int): Unit = {
-        if (mend + len > mbuf.length) {
-          val used = mend - mstart
-          if (used + len <= mbuf.length) System.arraycopy(mbuf, mstart, mbuf, 0, used)
-          else {
-            val nb = new Array[Byte](math.max(mbuf.length * 2, used + len))
-            System.arraycopy(mbuf, mstart, nb, 0, used)
-            mbuf = nb
-          }
-          mstart = 0; mend = used
-        }
-        System.arraycopy(b, off, mbuf, mend, len)
-        mend += len
-      }
-      /** Next complete length-prefixed gRPC message, if buffered. */
-      def tryParse(): Option[Array[Byte]] = {
-        if (mend - mstart < 5) return None
-        if (mbuf(mstart) != 0) throw new BadRequest("compressed gRPC messages not supported")
-        val n = ((mbuf(mstart + 1) & 0xff) << 24) | ((mbuf(mstart + 2) & 0xff) << 16) |
-          ((mbuf(mstart + 3) & 0xff) << 8) | (mbuf(mstart + 4) & 0xff)
-        // Long math: for n near Int.MaxValue, `5 + n` overflows negative and
-        // the availability comparison below would pass vacuously (then
-        // copyOfRange throws, misclassified as INTERNAL). Any message that
-        // could not fit the per-stream backlog cap is the client's error.
-        if (n < 0 || 5L + n > MaxBuffered)
-          throw new BadRequest(s"bad gRPC message length $n (per-stream limit $MaxBuffered)")
-        if (mend - mstart < 5 + n) return None
-        val m = java.util.Arrays.copyOfRange(mbuf, mstart + 5, mstart + 5 + n)
-        mstart += 5 + n
-        Some(m)
-      }
-    }
-
-    private val streams = mutable.LinkedHashMap.empty[Int, Req]
     /** Completed NON-exchange request streams, dispatched from the top-level
       * pump in [[run]] on the handler thread (discovery/action RPCs are
       * small); exchange streams run on their own workers instead. */
@@ -308,14 +262,8 @@ final class FlightServer(port: Int = 0,
 
     def run(): Unit = {
       try {
-        val preface = new Array[Byte](24)
-        in.readFully(preface)
-        if (!java.util.Arrays.equals(preface,
-            "PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes(StandardCharsets.US_ASCII)))
-          throw new IOException("bad http2 preface")
-        writeFrame(FrameSettings, 0, 0, settingsPayload(Seq(0x4 -> RecvWindow.toLong)))
-        writeFrame(FrameWindowUpdate, 0, 0, u32(RecvWindow - 65535))
-        flushOut()
+        codec.readPreface()
+        writeLock.synchronized(codec.open(client = false))
         while (!closing) {
           handleOneFrame()
           while ({
@@ -337,12 +285,10 @@ final class FlightServer(port: Int = 0,
       }
     }
 
-
-    private def writeFrame(tpe: Int, flags: Int, sid: Int, payload: Array[Byte],
-                           off: Int = 0, len: Int = -1): Unit =
-      writeLock.synchronized(H2.writeFrame(out, tpe, flags, sid, payload, off, len))
-
-    private def flushOut(): Unit = writeLock.synchronized(out.flush())
+    private def rst(sid: Int, code: Long): Unit = writeLock.synchronized {
+      codec.writeRst(sid, code)
+      codec.flush()
+    }
 
     /** Stream registration is counted so a drain can tell when the
       * connection is idle; every removal path goes through [[unregister]].
@@ -358,191 +304,92 @@ final class FlightServer(port: Int = 0,
     /** Read one frame (socket I/O, NO lock — the handler thread is the sole
       * reader) then apply it under [[writeLock]] and notify workers.
       * Completed non-exchange streams are QUEUED for the top-level pump;
-      * exchange bytes land in their stream's buffer and wake its worker. */
+      * exchange bytes land in their stream's deframer and wake its worker. */
     private def handleOneFrame(): Unit = {
-      val b0 = in.read()
-      if (b0 < 0) throw new EOFException("client closed")
-      val len = (b0 << 16) | (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-      val tpe = in.readUnsignedByte()
-      var flags = in.readUnsignedByte()
-      val sid = in.readInt() & 0x7fffffff
-      val payload = new Array[Byte](len)
-      in.readFully(payload)
-      // HEADERS: assemble the full block (HEADERS + CONTINUATIONs) while
-      // still reading — they are contiguous on the wire (RFC 9113 §6.10)
-      var headerBlock: Array[Byte] = null
-      var headersEndStream = false
-      if (tpe == FrameHeaders) {
-        var off = 0; var end = len
-        // latch END_STREAM from the ORIGINAL HEADERS flags: the loop below
-        // overwrites `flags`, and CONTINUATIONs carry no END_STREAM bit
-        headersEndStream = (flags & FlagEndStream) != 0
-        if ((flags & FlagPadded) != 0) { val pad = payload(0) & 0xff; off = 1; end = len - pad }
-        if ((flags & FlagPriority) != 0) off += 5
-        val block = new ByteArrayOutputStream()
-        block.write(payload, off, end - off)
-        while ((flags & FlagEndHeaders) == 0) {
-          val c0 = in.read()
-          if (c0 < 0) throw new EOFException("client closed mid-headers")
-          val clen = (c0 << 16) | (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-          val ctpe = in.readUnsignedByte()
-          flags = in.readUnsignedByte()
-          in.readInt()
-          if (ctpe != FrameContinuation)
-            throw new IOException(s"expected CONTINUATION, got $ctpe")
-          val cp = new Array[Byte](clen)
-          in.readFully(cp)
-          block.write(cp)
-        }
-        headerBlock = block.toByteArray
-      }
+      val f = codec.read()
       writeLock.synchronized {
-        try applyFrame(tpe, flags, sid, len, payload, headerBlock, headersEndStream)
+        try applyFrame(f)
         finally writeLock.notifyAll() // window credit / new bytes / resets
       }
     }
 
     /** Apply one frame to connection/stream state. Caller holds [[writeLock]]. */
-    private def applyFrame(tpe: Int, flags: Int, sid: Int, len: Int,
-                           payload: Array[Byte], headerBlock: Array[Byte],
-                           headersEndStream: Boolean): Unit = {
-      tpe match {
-        case FrameHeaders =>
-          val buf = Unpooled.wrappedBuffer(headerBlock)
-          val headers = try hpackDec.decodeHeaders(sid, buf) finally buf.release()
-          val auth = Option(headers.get("authorization")).map(_.toString).getOrElse("")
-          val endStream = headersEndStream
-          if (draining) {
-            // GOAWAY semantics: this stream is above the advertised
-            // last-stream-id — refuse it RETRYABLY (REFUSED_STREAM, which
-            // gRPC clients map to UNAVAILABLE and replay on another
-            // connection) and never register it; its DATA frames return
-            // connection credit like any unknown stream's.
-            writeFrame(FrameRst, 0, sid, u32(7L)); flushOut()
-          } else if (!authorized(auth)) {
-            // refuse at HEADERS time, BEFORE buffering any body: the stream
-            // is never registered, so its DATA frames return connection
-            // credit but are dropped — an unauthenticated peer can't stream
-            // bytes into server memory. RST tells the client to stop sending.
-            sendTrailers(sid, 16, "unauthenticated", trailersOnly = true)
-            if (!endStream) { writeFrame(FrameRst, 0, sid, u32(8L)); flushOut() }
-          } else {
-            val req = new Req
-            req.path = Option(headers.path()).map(_.toString).getOrElse("")
-            req.authorization = auth
-            if (req.path == "/arrow.flight.protocol.FlightService/DoExchange")
-              req.exch = new Exch
-            if (sid > maxSeenStream) maxSeenStream = sid
-            register(sid, req)
-            if (endStream) req.ended = true
-            if (req.exch != null) {
-              // STREAM-PARALLEL dispatch: every exchange gets its own
-              // worker, so stacked h2 streams from a multiplexed client
-              // never serialize behind one another's evaluation
-              val t = new Thread(() => runExchange(sid, req, req.exch),
-                s"graft-flight-exch-$sid")
-              t.setDaemon(true)
-              t.start()
-            } else if (endStream) completed.append(sid)
-          }
-        case FrameData =>
-          var off = 0; var n = len
-          if ((flags & FlagPadded) != 0) { val pad = payload(0) & 0xff; off = 1; n = len - 1 - pad }
-          streams.get(sid).foreach { req =>
-            val backlog = if (req.exch != null) req.exch.unconsumed else req.buf.size()
-            if (backlog + n > MaxBuffered) {
-              // Backlog cap blown. Reset FIRST so any in-flight sendData for
-              // this stream aborts instead of writing DATA past END_STREAM
-              // (streams.remove drops future WINDOW_UPDATEs, so its window
-              // could never replenish). For a NON-exchange stream the
-              // refusal is written here (handler owns those streams); an
-              // EXCHANGE stream's worker owns its writes — flag it and let
-              // the worker emit the refusal (trailersOnly decided there,
-              // where headersSent is stable).
-              req.reset = true
-              if (req.exch != null) req.overflowed = true
-              else {
-                sendTrailers(sid, 8, "request body exceeds per-stream limit",
-                  trailersOnly = !req.headersSent)
-                writeFrame(FrameRst, 0, sid, u32(8L)); flushOut()
-                unregister(sid)
-              }
-            } else if (req.exch != null) {
-              req.exch.append(payload, off, n) // worker woken by notifyAll
-            } else req.buf.write(payload, off, n)
-          }
-          if (len > 0) {
-            // connection credit returns even for unknown/reset streams — the
-            // shared window must never leak on a cancelled stream's tail
-            writeFrame(FrameWindowUpdate, 0, 0, u32(len.toLong))
-            if ((flags & FlagEndStream) == 0 && streams.contains(sid))
-              writeFrame(FrameWindowUpdate, 0, sid, u32(len.toLong))
-            flushOut()
-          }
-          if ((flags & FlagEndStream) != 0 && streams.contains(sid)) {
-            val req = streams(sid)
-            req.ended = true
-            if (req.exch == null) completed.append(sid)
-          }
-        case FrameSettings =>
-          if ((flags & FlagAck) == 0) {
-            var i = 0
-            while (i + 6 <= len) {
-              val k = ((payload(i) & 0xff) << 8) | (payload(i + 1) & 0xff)
-              val v = ((payload(i + 2) & 0xffL) << 24) | ((payload(i + 3) & 0xffL) << 16) |
-                ((payload(i + 4) & 0xffL) << 8) | (payload(i + 5) & 0xffL)
-              k match {
-                case 0x1 => hpackEnc.maxHeaderTableSize(v)
-                case 0x4 =>
-                  val delta = v - peerInitWindow
-                  peerInitWindow = v
-                  streams.values.foreach(_.sendWindow += delta)
-                case 0x5 => peerMaxFrame = v.toInt
-                case _ =>
-              }
-              i += 6
+    private def applyFrame(f: Frame): Unit = if (!codec.control(f)) f.tpe match {
+      case FrameHeaders =>
+        val sid = f.sid
+        val headers = codec.decodeHeaders(f)
+        val auth = Option(headers.get("authorization")).map(_.toString).getOrElse("")
+        if (draining) {
+          // GOAWAY semantics: this stream is above the advertised
+          // last-stream-id — refuse it RETRYABLY (REFUSED_STREAM, which
+          // gRPC clients map to UNAVAILABLE and replay on another
+          // connection) and never register it; its DATA frames return
+          // connection credit like any unknown stream's.
+          rst(sid, 7L)
+        } else if (!authorized(auth)) {
+          // refuse at HEADERS time, BEFORE buffering any body: the stream
+          // is never registered, so its DATA frames return connection
+          // credit but are dropped — an unauthenticated peer can't stream
+          // bytes into server memory. RST tells the client to stop sending.
+          sendTrailers(sid, 16, "unauthenticated", trailersOnly = true)
+          if (!f.endStream) rst(sid, 8L)
+        } else {
+          val req = new Req(Option(headers.path()).map(_.toString).getOrElse(""), auth)
+          if (sid > maxSeenStream) maxSeenStream = sid
+          register(sid, req)
+          if (f.endStream) req.ended = true
+          if (req.isExchange) {
+            // STREAM-PARALLEL dispatch: every exchange gets its own
+            // worker, so stacked h2 streams from a multiplexed client
+            // never serialize behind one another's evaluation
+            val t = new Thread(() => runExchange(sid, req), s"graft-flight-exch-$sid")
+            t.setDaemon(true)
+            t.start()
+          } else if (f.endStream) completed.append(sid)
+        }
+      case FrameData =>
+        val sid = f.sid
+        streams.get(sid).foreach { req =>
+          if (req.msgs.buffered + f.len > maxBuffered) {
+            // Backlog cap blown. Reset FIRST so any in-flight sendData for
+            // this stream aborts instead of writing DATA past END_STREAM
+            // (streams.remove drops future WINDOW_UPDATEs, so its window
+            // could never replenish). For a NON-exchange stream the
+            // refusal is written here (handler owns those streams); an
+            // EXCHANGE stream's worker owns its writes — flag it and let
+            // the worker emit the refusal (trailersOnly decided there,
+            // where headersSent is stable).
+            req.reset = true
+            if (req.isExchange) req.overflowed = true
+            else {
+              sendTrailers(sid, 8, "request body exceeds per-stream limit",
+                trailersOnly = !req.headersSent)
+              rst(sid, 8L)
+              unregister(sid)
             }
-            writeFrame(FrameSettings, FlagAck, 0, Array.emptyByteArray)
-            flushOut()
-          }
-        case FramePing =>
-          if ((flags & FlagAck) == 0) { writeFrame(FramePing, FlagAck, 0, payload); flushOut() }
-        case FrameWindowUpdate =>
-          val inc = ((payload(0) & 0x7fL) << 24) | ((payload(1) & 0xffL) << 16) |
-            ((payload(2) & 0xffL) << 8) | (payload(3) & 0xffL)
-          if (sid == 0) connSend += inc
-          else streams.get(sid).foreach(_.sendWindow += inc)
-        case FrameRst =>
-          streams.get(sid).foreach(_.reset = true)
-          unregister(sid)
-        case FrameGoaway => closing = true
-        case _ => // PRIORITY etc: ignore
-      }
+          } else req.msgs.append(f.payload, f.off, f.len) // a worker is woken by notifyAll
+        }
+        codec.returnCredit(f, streamOpen = !f.endStream && streams.contains(sid))
+        if (f.endStream) streams.get(sid).foreach { req =>
+          req.ended = true
+          if (!req.isExchange) completed.append(sid)
+        }
+      case FrameWindowUpdate => streams.get(f.sid).foreach(_.sendWindow += f.u31At(0))
+      case FrameRst =>
+        streams.get(f.sid).foreach(_.reset = true)
+        unregister(f.sid)
+      case FrameGoaway => closing = true
+      case _ => // PRIORITY etc: ignore
     }
 
     // ---- response writing ----------------------------------------------------
-    /** HPACK encode + frame write under ONE hold of [[writeLock]]: with
-      * concurrent exchange workers, header blocks must hit the wire in
-      * encode order or the peer's decoder desynchronizes. */
-    private def encodeHeaders(sid: Int, h: DefaultHttp2Headers, endStream: Boolean): Unit =
-      writeLock.synchronized {
-        val buf = Unpooled.buffer(256)
-        try {
-          hpackEnc.encodeHeaders(sid, h, buf)
-          val block = new Array[Byte](buf.readableBytes())
-          buf.readBytes(block)
-          writeFrame(FrameHeaders,
-            FlagEndHeaders | (if (endStream) FlagEndStream else 0), sid, block)
-        } finally buf.release()
-      }
-
     private def sendResponseHeaders(sid: Int, req: Req): Unit = writeLock.synchronized {
       val h = new DefaultHttp2Headers(false)
       h.status("200")
       h.add("content-type", "application/grpc")
-      encodeHeaders(sid, h, endStream = false)
+      codec.writeHeaders(sid, h, endStream = false)
       req.headersSent = true
-      flushOut()
+      codec.flush()
     }
 
     private def sendTrailers(sid: Int, code: Int, msg: String,
@@ -551,8 +398,10 @@ final class FlightServer(port: Int = 0,
       if (trailersOnly) { h.status("200"); h.add("content-type", "application/grpc") }
       h.add("grpc-status", code.toString)
       if (msg.nonEmpty) h.add("grpc-message", percentEncode(msg))
-      encodeHeaders(sid, h, endStream = true)
-      flushOut()
+      writeLock.synchronized {
+        codec.writeHeaders(sid, h, endStream = true)
+        codec.flush()
+      }
     }
 
     /** Flow-controlled DATA write. When the peer's windows are exhausted:
@@ -568,41 +417,30 @@ final class FlightServer(port: Int = 0,
         writeLock.synchronized {
           if (req.reset) return // client cancelled: stop writing this stream
           if (closing) throw new IOException("connection closing")
-          val avail = math.min(connSend, req.sendWindow)
-          if (avail > 0) {
-            val n = math.min(math.min(avail, peerMaxFrame.toLong),
-              (bytes.length - off).toLong).toInt
-            writeFrame(FrameData, 0, sid, bytes, off, n)
+          val n = codec.sendable(req.sendWindow, bytes.length - off)
+          if (n > 0) {
+            codec.writeData(sid, bytes, off, n, endStream = false)
             off += n
-            connSend -= n
             req.sendWindow -= n
             if (off >= bytes.length) done = true
-          } else if (req.exch != null) writeLock.wait()
+          } else if (req.isExchange) writeLock.wait()
           else pump = true
         }
         if (pump) handleOneFrame()
       }
-      flushOut()
+      writeLock.synchronized(codec.flush())
     }
 
-
+    /** gRPC status of a failed RPC: the client's own framing mistakes are
+      * INVALID_ARGUMENT (3), a missing function NOT_FOUND (5), anything
+      * else INTERNAL (13). */
+    private def statusOf(e: Exception): Int = e match {
+      case _: NotFound => 5
+      case _: BadRequest | _: GrpcFramingException => 3
+      case _ => 13
+    }
 
     // ---- gRPC dispatch ---------------------------------------------------------
-    private def parseMessages(bytes: Array[Byte]): Vector[Array[Byte]] = {
-      val msgs = Vector.newBuilder[Array[Byte]]
-      var p = 0
-      while (p + 5 <= bytes.length) {
-        if (bytes(p) != 0) throw new BadRequest("compressed gRPC messages not supported")
-        val n = ((bytes(p + 1) & 0xff) << 24) | ((bytes(p + 2) & 0xff) << 16) |
-          ((bytes(p + 3) & 0xff) << 8) | (bytes(p + 4) & 0xff)
-        if (n < 0 || p + 5L + n > bytes.length) // Long: no overflow near Int.MaxValue
-          throw new BadRequest(s"truncated gRPC message (declared $n bytes)")
-        msgs += java.util.Arrays.copyOfRange(bytes, p + 5, p + 5 + n)
-        p += 5 + n
-      }
-      msgs.result()
-    }
-
     /** Parse a protobuf request message, mapping any decode failure to
       * INVALID_ARGUMENT rather than INTERNAL. */
     private def parsed[T](what: String)(f: => T): T =
@@ -629,7 +467,8 @@ final class FlightServer(port: Int = 0,
           return
         }
         try {
-          val msgs = parseMessages(req.buf.toByteArray)
+          val msgs = Iterator.continually(req.msgs.next()).takeWhile(_ != null).toVector
+          req.msgs.finish()
           req.path match {
             case "/arrow.flight.protocol.FlightService/DoAction" =>
               val (tpe, _) = parsed("Action")(
@@ -675,9 +514,8 @@ final class FlightServer(port: Int = 0,
             // if response HEADERS already went out, the error must ride plain
             // trailers — a second :status pseudo-header in a trailing HEADERS
             // block is a connection-killing PROTOCOL_ERROR (RFC 9113 §8.3)
-            val code = e match { case _: BadRequest => 3; case _ => 13 }
             val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            try sendTrailers(sid, code, msg, trailersOnly = !req.headersSent)
+            try sendTrailers(sid, statusOf(e), msg, trailersOnly = !req.headersSent)
             catch { case _: Exception => }
         }
       } finally unregister(sid)
@@ -706,18 +544,18 @@ final class FlightServer(port: Int = 0,
       * trailers, refusals and RSTs are emitted here (frame-atomic under the
       * lock), so two streams' responses interleave at frame granularity,
       * exactly what h2 multiplexing permits. */
-    private def runExchange(sid: Int, req: Req, ex: Exch): Unit = {
+    private def runExchange(sid: Int, req: Req): Unit = {
       val allocator = new RootAllocator()
       try {
         // the first data message is the schema, or nextData throws
-        val schema = nextData(req, ex)
-        val fd = Registry.global.lookup(ex.name).head
+        val schema = nextData(req)
+        val fd = Registry.global.lookup(req.name).head
         val isTable = fd.signature.kind == FunctionKind.Table
         val input = new FlightDataStream(schema.iterator ++
-          Iterator.continually(nextData(req, ex)).takeWhile(_.isDefined).flatten)
+          Iterator.continually(nextData(req)).takeWhile(_.isDefined).flatten)
         val output = new FlightDataSink((header, body) =>
           sendData(sid, req, grpcFrame(Pb.flightData(None, header, body))))
-        UdfServer.serveCall(ex.name, isTable, withErrors = !isTable && fd.fallible,
+        UdfServer.serveCall(req.name, isTable, withErrors = !isTable && fd.fallible,
           input, output, allocator, {
             case None => sendResponseHeaders(sid, req)
             // fail BEFORE the evaluator drains: a ping-ponging client is
@@ -732,17 +570,12 @@ final class FlightServer(port: Int = 0,
           // out; a plain client reset stays silent
           if (req.overflowed) emitOverflowRefusal(sid, req)
           else if (!req.reset) {
-            val code = e match {
-              case _: NotFound => 5
-              case _: BadRequest => 3
-              case _ => 13
-            }
             val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            try sendTrailers(sid, code, msg, trailersOnly = !req.headersSent)
+            try sendTrailers(sid, statusOf(e), msg, trailersOnly = !req.headersSent)
             catch { case _: Exception => }
             // tell a still-sending client to stop (the auth-refusal pattern)
             if (!req.ended) {
-              try { writeFrame(FrameRst, 0, sid, u32(8L)); flushOut() }
+              try rst(sid, 8L)
               catch { case _: Exception => }
             }
           }
@@ -760,7 +593,7 @@ final class FlightServer(port: Int = 0,
       try sendTrailers(sid, 8, "request body exceeds per-stream limit",
         trailersOnly = !req.headersSent)
       catch { case _: Exception => }
-      try { writeFrame(FrameRst, 0, sid, u32(8L)); flushOut() }
+      try rst(sid, 8L)
       catch { case _: Exception => }
     }
 
@@ -768,21 +601,20 @@ final class FlightServer(port: Int = 0,
       * [[writeLock]] for the handler to append it; None once the client
       * half-closed. A reset, an overflow or a closing connection throws, so
       * the evaluator ends at its next read of exchange input. */
-    private def awaitMessage(req: Req, ex: Exch): Option[Array[Byte]] =
+    private def awaitMessage(req: Req): Option[Array[Byte]] =
       writeLock.synchronized {
-        var msg: Option[Array[Byte]] = None
-        while (msg.isEmpty) {
+        var msg: Array[Byte] = null
+        while (msg == null) {
           if (req.reset) throw new IOException("stream reset")
           if (closing) throw new IOException("connection closing")
-          msg = ex.tryParse()
-          if (msg.isEmpty && req.ended) {
-            if (ex.unconsumed > 0)
-              throw new BadRequest(s"truncated gRPC message (${ex.unconsumed} trailing bytes)")
+          msg = req.msgs.next()
+          if (msg == null && req.ended) {
+            req.msgs.finish()
             return None
           }
-          if (msg.isEmpty) writeLock.wait()
+          if (msg == null) writeLock.wait()
         }
-        msg
+        Some(msg)
       }
 
     /** The exchange's next Arrow IPC message, checked before the
@@ -792,18 +624,18 @@ final class FlightServer(port: Int = 0,
       * a function of that name. None once the client half-closed after its
       * schema. */
     @scala.annotation.tailrec
-    private def nextData(req: Req, ex: Exch): Option[Pb.FlightDataMsg] =
-      awaitMessage(req, ex) match {
+    private def nextData(req: Req): Option[Pb.FlightDataMsg] =
+      awaitMessage(req) match {
         case None =>
-          if (!ex.sawSchema) { // the whole request arrived without a schema
-            requireFunction(ex)
+          if (!req.sawSchema) { // the whole request arrived without a schema
+            requireFunction(req)
             throw new BadRequest("DoExchange ended before a schema message")
           }
           None
         case Some(msg) =>
           val fd = parsed("FlightData")(Pb.parseFlightData(msg))
-          if (ex.name.isEmpty) fd.descriptorPath.headOption.foreach(n => ex.name = n)
-          if (fd.dataHeader.isEmpty) nextData(req, ex) // descriptor/app-metadata only
+          if (req.name.isEmpty) fd.descriptorPath.headOption.foreach(n => req.name = n)
+          if (fd.dataHeader.isEmpty) nextData(req) // descriptor/app-metadata only
           else {
             val ht = parsed("Arrow IPC message header") {
               val m = org.apache.arrow.flatbuf.Message.getRootAsMessage(
@@ -817,19 +649,19 @@ final class FlightServer(port: Int = 0,
               t
             }
             if (ht == MessageHeader.Schema) {
-              if (ex.sawSchema) throw new BadRequest("duplicate schema message on DoExchange")
-              requireFunction(ex)
-              ex.sawSchema = true
-            } else if (!ex.sawSchema)
+              if (req.sawSchema) throw new BadRequest("duplicate schema message on DoExchange")
+              requireFunction(req)
+              req.sawSchema = true
+            } else if (!req.sawSchema)
               throw new BadRequest("DoExchange record batch before schema message")
             Some(fd)
           }
       }
 
-    private def requireFunction(ex: Exch): Unit = {
-      if (ex.name.isEmpty)
+    private def requireFunction(req: Req): Unit = {
+      if (req.name.isEmpty)
         throw new BadRequest("DoExchange carries no FlightDescriptor path (function name)")
-      if (Registry.global.lookup(ex.name).isEmpty) throw new NotFound(s"no function ${ex.name}")
+      if (Registry.global.lookup(req.name).isEmpty) throw new NotFound(s"no function ${req.name}")
     }
   }
 }

@@ -1,8 +1,7 @@
 package graft.remote.flight
 
-import io.netty.buffer.Unpooled
-import io.netty.handler.codec.http2.{DefaultHttp2Headers, DefaultHttp2HeadersDecoder, DefaultHttp2HeadersEncoder, Http2Headers}
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, IOException}
+import io.netty.handler.codec.http2.{DefaultHttp2Headers, Http2Headers}
+import java.io.IOException
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
@@ -15,12 +14,11 @@ import scala.collection.mutable
  * Why hand-rolled: the reference reaches its UDF services over Arrow Flight
  * (tonic/gRPC, `arrow-udf-runtime/src/remote/mod.rs:32-48`); this build has
  * no gRPC stubs and no dependency egress, but the Spark distribution DOES
- * ship `netty-codec-http2`, whose public HPACK header codec
- * (`DefaultHttp2HeadersEncoder/Decoder`) removes the only spec-table-heavy
- * part (RFC 7541 Huffman + static table). Everything else — connection
- * preface, frame layer, SETTINGS/PING/GOAWAY handling, flow control, gRPC
- * message framing and trailer status — is implemented here against the
- * public RFC 9113 / gRPC-over-HTTP2 specs.
+ * ship `netty-codec-http2`, whose public HPACK header codec removes the only
+ * spec-table-heavy part (RFC 7541 Huffman + static table). The byte-level
+ * rules — preface, frames, SETTINGS/PING, credit, HPACK — are [[H2]]'s and
+ * shared with [[FlightServer]]; this class adds the client's streams,
+ * GOAWAY/RST handling and its concurrency.
  *
  * Concurrency model: MULTIPLEXED — any number of concurrent RPCs interleave
  * as h2 streams on one connection, from any threads (the way stock gRPC
@@ -30,18 +28,13 @@ import scala.collection.mutable
  * whichever thread needs a frame first becomes the reader, dispatches what
  * it read under the lock, and hands the baton on — so a blocking read never
  * blocks another stream's writes, and HPACK blocks decode strictly in wire
- * order. Each RPC's exchange discipline stays half-duplex per STREAM (write
- * the bounded request, then drain the response), and every blocking point
- * services PING/SETTINGS/WINDOW_UPDATE frames, so keepalives and
- * flow-control credit never deadlock a call.
+ * order. Every blocking point services PING/SETTINGS/WINDOW_UPDATE frames,
+ * so keepalives and flow-control credit never deadlock a call.
  *
  * Flow control: we announce a large stream window (SETTINGS) and extend the
  * 65535-byte connection window once at startup, then return credit for every
- * DATA frame consumed (connection credit even for finished streams — a
- * cancelled stream's tail must not leak the shared window); sends respect
- * the peer's connection + stream windows, pumping frames while blocked.
- * Bounded exchanges (≤ one [[graft.remote.RemoteProtocol.BatchSize]] batch
- * per call) keep windows from ever being the throughput limiter.
+ * DATA frame consumed; sends respect the peer's connection + stream windows,
+ * pumping frames while blocked.
  */
 private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 120000,
                                       tls: Option[javax.net.ssl.SSLContext] = None,
@@ -49,12 +42,6 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     extends AutoCloseable {
 
   import H2._
-
-  /** Our receive window per stream (SETTINGS_INITIAL_WINDOW_SIZE) and the
-    * connection-window top-up. Large enough by default that a whole bounded
-    * exchange never waits on our credit; tests shrink it to force the
-    * window-blocked paths. */
-  private val RecvWindow = math.max(recvWindow, 65535)
 
   private val sock = tls match {
     case Some(ctx) =>
@@ -79,13 +66,8 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
   }
   sock.setTcpNoDelay(true)
   sock.setSoTimeout(timeoutMs)
-  private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
-  private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
 
-  private val hpackEnc = new DefaultHttp2HeadersEncoder()
-  private val hpackDec = new DefaultHttp2HeadersDecoder(false)
-
-  /** Guards every mutable field below, all frame writes (each frame lands on
+  /** Guards every mutable field below, all codec writes (each frame lands on
     * the wire atomically, HPACK blocks encode in write order), and the
     * reader-baton handoff. Never held across a socket READ. */
   private val lock = new Object
@@ -95,16 +77,12 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
   private var dead: IOException = null
 
   private var nextStreamId = 1
-  // peer-side flow control (how much WE may send)
-  private var connSendWindow: Long = 65535L
-  private var peerInitialWindow: Long = 65535L
-  private var peerMaxFrame: Int = 16384
   private var goaway: Option[String] = None
 
   /** One RPC's stream state. Owned by the calling thread; mutated only under
     * [[lock]] (by the reader's dispatch or the owner). */
   final class StreamState private[Http2Conn] (val id: Int) {
-    private[Http2Conn] var sendWindow: Long = peerInitialWindow
+    private[Http2Conn] var sendWindow: Long = codec.peerInitialWindow
     private[Http2Conn] val inbox = new mutable.ArrayDeque[Array[Byte]]()
     private[Http2Conn] var headers: Option[Http2Headers] = None
     private[Http2Conn] var trailers: Option[Http2Headers] = None
@@ -114,21 +92,12 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
   }
   private val streams = mutable.Map.empty[Int, StreamState]
 
-  // ---- connection preface ---------------------------------------------------
-  out.write("PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes(StandardCharsets.US_ASCII))
-  // SETTINGS: no server push; big per-stream receive window
-  H2.writeFrame(out, FrameSettings, 0, 0,
-    settingsPayload(Seq(0x2 -> 0L, 0x4 -> RecvWindow.toLong)))
-  // top up the fixed 65535 connection receive window once (a zero-increment
-  // WINDOW_UPDATE is a PROTOCOL_ERROR, so skip it at the minimum window)
-  if (RecvWindow > 65535)
-    H2.writeFrame(out, FrameWindowUpdate, 0, 0, u32(RecvWindow - 65535))
-  out.flush()
-
-  /** Caller must hold [[lock]]. */
-  private def writeFrameLocked(tpe: Int, flags: Int, streamId: Int, payload: Array[Byte],
-                               off: Int = 0, len: Int = -1): Unit =
-    H2.writeFrame(out, tpe, flags, streamId, payload, off, len)
+  /** Our receive window per stream is at least the RFC's 65535: large by
+    * default so a whole bounded exchange never waits on our credit; tests
+    * shrink it to force the window-blocked paths. */
+  private val codec = new H2.Codec(sock, math.max(recvWindow, 65535),
+    delta => streams.values.foreach(_.sendWindow += delta))
+  codec.open(client = true)
 
   private def rethrow(e: IOException): IOException = e match {
     case _: java.net.SocketTimeoutException =>
@@ -174,17 +143,15 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
         // baton on: a response burst (one bounded exchange ≈ several DATA
         // frames) dispatches in one hold instead of one wake/handoff per
         // frame — the difference between ~par and ~2x slower at 8 streams
-        // per connection. Drain only while a COMPLETE frame is buffered
-        // (header peeked via mark/reset): a partial frame would block the
-        // baton holder in readFrame for its tail — up to SO_TIMEOUT —
-        // stretching the hold past its "already-arrived frames only" scope.
-        // available() never blocks; writers don't need the baton, so
-        // hogging it only affects would-be readers who'd wait anyway.
-        // (TLS streams may report 0 — degrades to per-frame holds. A
-        // HEADERS frame whose CONTINUATIONs are not yet buffered can still
-        // block briefly — response header blocks are single-frame in
-        // practice.)
-        while (fullFrameBuffered()) pumpOne()
+        // per connection. Drain only while a COMPLETE frame is buffered: a
+        // partial frame would block the baton holder in read for its tail —
+        // up to SO_TIMEOUT — stretching the hold past its "already-arrived
+        // frames only" scope. Writers don't need the baton, so hogging it
+        // only affects would-be readers who'd wait anyway. (TLS streams may
+        // report nothing buffered — degrades to per-frame holds. A HEADERS
+        // frame whose CONTINUATIONs are not yet buffered can still block
+        // briefly — response header blocks are single-frame in practice.)
+        while (codec.frameBuffered()) pumpOne()
         ok = true
       }
       finally lock.synchronized {
@@ -196,146 +163,51 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     }
   }
 
-  /** Whether the NEXT whole frame (9-byte header + declared payload) has
-    * already arrived in the buffered stream — peeks the length via
-    * mark/reset, reads nothing it doesn't put back. Caller holds the reader
-    * baton (sole reader), so the peek can't race another read. */
-  private def fullFrameBuffered(): Boolean = {
-    if (in.available() < 9) return false
-    in.mark(9)
-    val len =
-      try (in.read() << 16) | (in.read() << 8) | in.read()
-      finally in.reset()
-    in.available() >= 9 + len
-  }
-
   // ---- frame pump -------------------------------------------------------------
   /** Read exactly one frame from the peer (NO lock held during the blocking
-    * read; caller holds the reader baton), then dispatch it under the lock.
-    * A HEADERS frame's CONTINUATIONs are read with it — they must be
-    * contiguous on the wire, and the baton keeps HPACK decode in order. */
+    * read; caller holds the reader baton), then dispatch it under the lock. */
   private def pumpOne(): Unit = {
-    val (tpe, flags0, sid, payload, headerBlock) =
-      try readFrame()
+    val f =
+      try codec.read()
       catch {
         case e: IOException =>
           lock.synchronized { if (dead == null) dead = e; lock.notifyAll() }
           throw rethrow(e)
       }
-    lock.synchronized { dispatch(tpe, flags0, sid, payload, headerBlock) }
+    lock.synchronized { dispatch(f) }
   }
 
-  /** (type, original HEADERS flags, stream id, payload, assembled header
-    * block or null). Blocking socket reads, no lock. */
-  private def readFrame(): (Int, Int, Int, Array[Byte], Array[Byte]) = {
-    val b0 = in.read()
-    if (b0 < 0) throw new EOFException("http2 connection closed")
-    val len = (b0 << 16) | (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-    val tpe = in.readUnsignedByte()
-    val flags = in.readUnsignedByte()
-    val sid = in.readInt() & 0x7fffffff
-    val payload = new Array[Byte](len)
-    in.readFully(payload)
-    if (tpe != FrameHeaders) return (tpe, flags, sid, payload, null)
-    // assemble the full header block (HEADERS + CONTINUATIONs)
-    var off = 0; var end = len
-    var fl = flags
-    if ((fl & FlagPadded) != 0) { val pad = payload(0) & 0xff; off = 1; end = len - pad }
-    if ((fl & FlagPriority) != 0) off += 5
-    val block = new java.io.ByteArrayOutputStream()
-    block.write(payload, off, end - off)
-    while ((fl & FlagEndHeaders) == 0) {
-      val c0 = in.read()
-      if (c0 < 0) throw new EOFException("http2 connection closed mid-headers")
-      val clen = (c0 << 16) | (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-      val ctpe = in.readUnsignedByte()
-      fl = in.readUnsignedByte()
-      in.readInt()
-      if (ctpe != FrameContinuation)
-        throw new IOException(s"expected CONTINUATION, got frame type $ctpe")
-      val cp = new Array[Byte](clen)
-      in.readFully(cp)
-      block.write(cp)
-    }
-    (tpe, flags, sid, payload, block.toByteArray)
-  }
-
-  /** Apply one frame to connection/stream state. Caller holds [[lock]]. */
-  private def dispatch(tpe: Int, flags: Int, sid: Int, payload: Array[Byte],
-                       headerBlock: Array[Byte]): Unit = tpe match {
+  /** Apply one stream-level frame to its stream. Caller holds [[lock]]. */
+  private def dispatch(f: Frame): Unit = if (!codec.control(f)) f.tpe match {
     case FrameData =>
-      var off = 0; var n = payload.length
-      if ((flags & FlagPadded) != 0) { val pad = payload(0) & 0xff; off = 1; n = payload.length - 1 - pad }
-      val s = streams.get(sid).orNull
+      val s = streams.get(f.sid).orNull
       if (s != null) {
-        if (n > 0) s.inbox.append(java.util.Arrays.copyOfRange(payload, off, off + n))
-        if ((flags & FlagEndStream) != 0) s.remoteClosed = true
+        if (f.len > 0) s.inbox.append(f.data)
+        if (f.endStream) s.remoteClosed = true
       }
-      // return credit for the whole frame (incl. padding) as we consume —
-      // CONNECTION credit even for unknown/finished streams, or a cancelled
-      // stream's in-flight tail permanently shrinks the shared window
-      if (payload.length > 0) {
-        writeFrameLocked(FrameWindowUpdate, 0, 0, u32(payload.length.toLong))
-        if (s != null && !s.remoteClosed)
-          writeFrameLocked(FrameWindowUpdate, 0, sid, u32(payload.length.toLong))
-        out.flush()
-      }
+      codec.returnCredit(f, streamOpen = s != null && !s.remoteClosed)
     case FrameHeaders =>
-      val buf = Unpooled.wrappedBuffer(headerBlock)
-      val decoded = try hpackDec.decodeHeaders(sid, buf) finally buf.release()
-      streams.get(sid).foreach { s =>
+      val decoded = codec.decodeHeaders(f)
+      streams.get(f.sid).foreach { s =>
         if (s.headers.isEmpty) s.headers = Some(decoded)
         else s.trailers = Some(decoded)
-        if ((flags & FlagEndStream) != 0) s.remoteClosed = true
+        if (f.endStream) s.remoteClosed = true
       }
-    case FrameSettings =>
-      if ((flags & FlagAck) == 0) {
-        var i = 0
-        while (i + 6 <= payload.length) {
-          val k = ((payload(i) & 0xff) << 8) | (payload(i + 1) & 0xff)
-          val v = ((payload(i + 2) & 0xffL) << 24) | ((payload(i + 3) & 0xffL) << 16) |
-            ((payload(i + 4) & 0xffL) << 8) | (payload(i + 5) & 0xffL)
-          k match {
-            case 0x1 => hpackEnc.maxHeaderTableSize(v) // our encoder must honor it
-            case 0x4 =>
-              val delta = v - peerInitialWindow
-              peerInitialWindow = v
-              streams.values.foreach(_.sendWindow += delta)
-            case 0x5 => peerMaxFrame = v.toInt
-            case _ =>
-          }
-          i += 6
-        }
-        writeFrameLocked(FrameSettings, FlagAck, 0, Array.emptyByteArray)
-        out.flush()
-      }
-    case FramePing =>
-      if ((flags & FlagAck) == 0) {
-        writeFrameLocked(FramePing, FlagAck, 0, payload); out.flush()
-      }
-    case FrameWindowUpdate =>
-      val inc = ((payload(0) & 0x7fL) << 24) | ((payload(1) & 0xffL) << 16) |
-        ((payload(2) & 0xffL) << 8) | (payload(3) & 0xffL)
-      if (sid == 0) connSendWindow += inc
-      else streams.get(sid).foreach(_.sendWindow += inc)
+    case FrameWindowUpdate => streams.get(f.sid).foreach(_.sendWindow += f.u31At(0))
     case FrameRst =>
-      streams.get(sid).foreach { s =>
-        s.rstCode = Some(((payload(0) & 0xffL) << 24) | ((payload(1) & 0xffL) << 16) |
-          ((payload(2) & 0xffL) << 8) | (payload(3) & 0xffL))
+      streams.get(f.sid).foreach { s =>
+        s.rstCode = Some(f.u32At(0))
         s.remoteClosed = true
       }
     case FrameGoaway =>
-      val code = ((payload(4) & 0xffL) << 24) | ((payload(5) & 0xffL) << 16) |
-        ((payload(6) & 0xffL) << 8) | (payload(7) & 0xffL)
-      val msg = if (payload.length > 8)
-        new String(payload, 8, payload.length - 8, StandardCharsets.UTF_8) else ""
+      val code = f.u32At(4)
+      val msg = new String(f.payload, 8, f.len - 8, StandardCharsets.UTF_8)
       // NEW RPCs are refused (startRpc); an in-flight stream at or below
       // lastStreamId still completes — the pump keeps draining its frames.
       // Only streams PAST the cutoff are dead: mark them errored so their
       // callers see the abort rather than a silent empty response.
       goaway = Some(s"GOAWAY code=$code $msg")
-      val lastSid = ((payload(0) & 0x7f) << 24) | ((payload(1) & 0xff) << 16) |
-        ((payload(2) & 0xff) << 8) | (payload(3) & 0xff)
+      val lastSid = f.u31At(0)
       streams.values.foreach { s =>
         if (s.id > lastSid && !s.remoteClosed) {
           s.rstCode = Some(code)
@@ -365,14 +237,8 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
       h.add("grpc-accept-encoding", "identity")
       h.add("user-agent", "graft-flight-bridge/1")
       extraHeaders.foreach { case (k, v) => h.add(k, v) }
-      val buf = Unpooled.buffer(256)
-      try {
-        hpackEnc.encodeHeaders(sid, h, buf)
-        val block = new Array[Byte](buf.readableBytes())
-        buf.readBytes(block)
-        writeFrameLocked(FrameHeaders, FlagEndHeaders, sid, block)
-        out.flush()
-      } finally buf.release()
+      codec.writeHeaders(sid, h, endStream = false)
+      codec.flush()
       s
     }
 
@@ -383,7 +249,7 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     * SETTINGS_MAX_CONCURRENT_STREAMS. */
   def finishStream(s: StreamState): Unit = lock.synchronized {
     if (streams.remove(s.id).isDefined && !s.localClosed && dead == null) {
-      try { writeFrameLocked(FrameRst, 0, s.id, u32(0x8L)); out.flush() } // CANCEL
+      try { codec.writeRst(s.id, 0x8L); codec.flush() } // CANCEL
       catch { case _: IOException => }
     }
   }
@@ -399,19 +265,17 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     var done = false
     while (off < bytes.length && !done) {
       // wait for credit on both windows (or stream end), servicing frames
-      awaitCond(s.remoteClosed || math.min(connSendWindow, s.sendWindow) > 0)
+      awaitCond(s.remoteClosed || codec.sendable(s.sendWindow, bytes.length - off) > 0)
       lock.synchronized {
         if (s.remoteClosed) done = true
         else {
-          val avail = math.min(connSendWindow, s.sendWindow)
-          if (avail > 0) { // re-check: another stream may have spent it
-            val n = math.min(math.min(avail, peerMaxFrame.toLong),
-              (bytes.length - off).toLong).toInt
+          // re-check: another stream may have spent the credit
+          val n = codec.sendable(s.sendWindow, bytes.length - off)
+          if (n > 0) {
             val last = endStream && off + n == bytes.length
             if (last) s.localClosed = true
-            writeFrameLocked(FrameData, if (last) FlagEndStream else 0, s.id, bytes, off, n)
+            codec.writeData(s.id, bytes, off, n, last)
             off += n
-            connSendWindow -= n
             s.sendWindow -= n
           }
         }
@@ -420,9 +284,9 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
     lock.synchronized {
       if (bytes.isEmpty && endStream && !s.remoteClosed) {
         s.localClosed = true
-        writeFrameLocked(FrameData, FlagEndStream, s.id, Array.emptyByteArray)
+        codec.writeData(s.id, bytes, 0, 0, endStream = true)
       }
-      out.flush()
+      codec.flush()
     }
   }
 
@@ -462,8 +326,8 @@ private[flight] final class Http2Conn(host: String, port: Int, timeoutMs: Int = 
   override def close(): Unit = {
     lock.synchronized {
       try {
-        writeFrameLocked(FrameGoaway, 0, 0, u32(0) ++ u32(0))
-        out.flush()
+        codec.writeGoaway(0)
+        codec.flush()
       } catch { case _: IOException => }
       if (dead == null) dead = new IOException("connection closed locally")
       lock.notifyAll()
@@ -486,10 +350,11 @@ private[flight] final class GrpcConn(host: String, port: Int, timeoutMs: Int = 1
     extends AutoCloseable {
   private val conn = new Http2Conn(host, port, timeoutMs, tls, recvWindow)
 
-  /** One gRPC call: send every request message, then stream back response
-    * messages; the iterator's exhaustion point verifies `grpc-status: 0`.
-    * Covers unary, server-streaming, and the write-then-read half of bidi —
-    * exactly the shapes Flight's UDF verbs use.
+  /** One gRPC call: a [[bidi]] call that sends every request message, then
+    * streams back response messages; the iterator's exhaustion point
+    * verifies `grpc-status: 0`. Covers unary, server-streaming, and the
+    * write-then-read half of bidi — exactly the shapes Flight's UDF verbs
+    * use.
     *
     * The returned iterator is also [[AutoCloseable]]: a caller that stops
     * consuming early — or whose decode throws mid-drain — must close() it
@@ -499,70 +364,26 @@ private[flight] final class GrpcConn(host: String, port: Int, timeoutMs: Int = 1
     * socket: late DATA keeps accumulating in its inbox and the stream
     * counts against the server's SETTINGS_MAX_CONCURRENT_STREAMS. */
   def call(path: String, requests: Iterator[Array[Byte]]): GrpcResponse = {
-    def frame(msg: Array[Byte]): Array[Byte] = H2.grpcFrame(msg)
-    val s = conn.startRpc(path, callHeaders)
-    if (requests.hasNext) {
-      var cur = requests.next()
-      while (requests.hasNext) { conn.sendData(s, frame(cur), endStream = false); cur = requests.next() }
-      conn.sendData(s, frame(cur), endStream = true)
-    } else conn.sendData(s, Array.emptyByteArray, endStream = true)
-
+    val rpc = bidi(path)
+    try {
+      if (!requests.hasNext) rpc.finishSending()
+      while (requests.hasNext) {
+        val msg = requests.next()
+        rpc.send(msg, last = !requests.hasNext)
+      }
+    } catch { case e: Throwable => rpc.close(); throw e }
     new GrpcResponse {
-      override def close(): Unit = conn.finishStream(s)
-      // amortized-growth ring over the DATA chunks: appending and slicing
-      // messages are O(bytes), not O(bytes²) like naive array concatenation
-      // (a multi-frame response arrives as hundreds of ≤16 KiB chunks)
-      private var buf = new Array[Byte](8192)
-      private var start = 0
-      private var end = 0
-      private var nextMsg: Array[Byte] = null
-      private var done = false
-      private var statusChecked = false
-
-      private def append(chunk: Array[Byte]): Unit = {
-        if (end + chunk.length > buf.length) {
-          val used = end - start
-          if (used + chunk.length <= buf.length) {
-            System.arraycopy(buf, start, buf, 0, used)
-          } else {
-            val nbuf = new Array[Byte](math.max(buf.length * 2, used + chunk.length))
-            System.arraycopy(buf, start, nbuf, 0, used)
-            buf = nbuf
-          }
-          start = 0; end = used
-        }
-        System.arraycopy(chunk, 0, buf, end, chunk.length)
-        end += chunk.length
+      private var head: Option[Array[Byte]] = null
+      override def close(): Unit = rpc.close()
+      def hasNext: Boolean = {
+        if (head == null) head = rpc.recv()
+        head.isDefined
       }
-      private def tryParse(): Boolean = {
-        if (end - start < 5) return false
-        if (buf(start) != 0) throw new IOException("compressed gRPC messages not supported")
-        val n = ((buf(start + 1) & 0xff) << 24) | ((buf(start + 2) & 0xff) << 16) |
-          ((buf(start + 3) & 0xff) << 8) | (buf(start + 4) & 0xff)
-        if (end - start < 5 + n) return false
-        nextMsg = java.util.Arrays.copyOfRange(buf, start + 5, start + 5 + n)
-        start += 5 + n
-        true
-      }
-      private def advance(): Unit = {
-        while (nextMsg == null) {
-          if (tryParse()) return
-          if (done) {
-            // drained: verify grpc-status exactly once at exhaustion
-            if (!statusChecked) { statusChecked = true; checkStatus(s) }
-            return
-          }
-          conn.nextData(s) match {
-            case Some(chunk) => append(chunk)
-            case None => done = true
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); nextMsg != null }
       def next(): Array[Byte] = {
-        advance()
-        if (nextMsg == null) throw new NoSuchElementException("gRPC response exhausted")
-        val m = nextMsg; nextMsg = null; m
+        if (!hasNext) throw new NoSuchElementException("gRPC response exhausted")
+        val m = head.get
+        head = null
+        m
       }
     }
   }
@@ -572,13 +393,11 @@ private[flight] final class GrpcConn(host: String, port: Int, timeoutMs: Int = 1
     * of the reference's multi-batch DoExchange (`UdfProducer.java:104-139`
     * loops the inbound stream). The caller keeps the exchange bounded by
     * ping-ponging one batch at a time; `recv` services flow-control/PING
-    * frames at every blocking point like the unary path. `grpc-status` is
-    * verified exactly once, when `recv` first returns None. */
+    * frames at every blocking point. `grpc-status` is verified exactly once,
+    * when `recv` first returns None. */
   final class BidiCall private[GrpcConn] (path: String) {
     private val s = conn.startRpc(path, callHeaders)
-    private var buf = new Array[Byte](8192)
-    private var start = 0
-    private var end = 0
+    private val msgs = new GrpcDeframer(H2.MaxMessage)
     private var done = false
     private var statusChecked = false
 
@@ -596,48 +415,24 @@ private[flight] final class GrpcConn(host: String, port: Int, timeoutMs: Int = 1
       * a long-lived shared connection. */
     def close(): Unit = conn.finishStream(s)
 
-    private def append(chunk: Array[Byte]): Unit = {
-      if (end + chunk.length > buf.length) {
-        val used = end - start
-        if (used + chunk.length <= buf.length) {
-          System.arraycopy(buf, start, buf, 0, used)
-        } else {
-          val nbuf = new Array[Byte](math.max(buf.length * 2, used + chunk.length))
-          System.arraycopy(buf, start, nbuf, 0, used)
-          buf = nbuf
-        }
-        start = 0; end = used
-      }
-      System.arraycopy(chunk, 0, buf, end, chunk.length)
-      end += chunk.length
-    }
-
-    private def tryParse(): Option[Array[Byte]] = {
-      if (end - start < 5) return None
-      if (buf(start) != 0) throw new IOException("compressed gRPC messages not supported")
-      val n = ((buf(start + 1) & 0xff) << 24) | ((buf(start + 2) & 0xff) << 16) |
-        ((buf(start + 3) & 0xff) << 8) | (buf(start + 4) & 0xff)
-      if (end - start < 5 + n) return None
-      val m = java.util.Arrays.copyOfRange(buf, start + 5, start + 5 + n)
-      start += 5 + n
-      Some(m)
-    }
-
     /** Next response message, or None once the server closed the stream
-      * (status verified at that point). */
+      * (status verified at that point, then a message cut off by the end of
+      * the stream is an error). */
     def recv(): Option[Array[Byte]] = {
       while (true) {
-        tryParse() match {
-          case some @ Some(_) => return some
-          case None =>
-            if (done) {
-              if (!statusChecked) { statusChecked = true; checkStatus(s) }
-              return None
-            }
-            conn.nextData(s) match {
-              case Some(chunk) => append(chunk)
-              case None => done = true
-            }
+        val m = msgs.next()
+        if (m != null) return Some(m)
+        if (done) {
+          if (!statusChecked) {
+            statusChecked = true
+            checkStatus(s)
+            msgs.finish()
+          }
+          return None
+        }
+        conn.nextData(s) match {
+          case Some(chunk) => msgs.append(chunk, 0, chunk.length)
+          case None => done = true
         }
       }
       None // unreachable

@@ -97,4 +97,43 @@ class FlightNegativeSpec extends AnyFunSuite {
       assert(rawStatus(Array[Byte](0, 0x7f, 0xff.toByte, 0xff.toByte, 0xfe.toByte)) == "3")
     } finally server.close()
   }
+
+  test("malformed control frames close the connection without killing the handler thread") {
+    graft.functions.Builtins.ensureRegistered()
+    val server = new FlightServer()
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler { (_, e) => uncaught.add(e); () }
+    try {
+      // one raw connection per frame: the preface and an empty SETTINGS,
+      // then the bad frame; the server must drop the connection
+      def send(frame: Array[Byte]): Unit = {
+        val s = new java.net.Socket("127.0.0.1", server.boundPort)
+        try {
+          s.setSoTimeout(10000)
+          val out = s.getOutputStream
+          out.write("PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes("US-ASCII"))
+          out.write(Array[Byte](0, 0, 0, 4, 0, 0, 0, 0, 0) ++ frame)
+          out.flush()
+          val in = s.getInputStream
+          while (in.read(new Array[Byte](4096)) >= 0) {}
+        } finally s.close()
+      }
+      send(Array[Byte](0, 0, 2, 8, 0, 0, 0, 0, 0, 0, 1)) // 2-byte WINDOW_UPDATE, stream 0
+      send(Array[Byte](0, 0, 0, 0, 8, 0, 0, 0, 1)) // zero-length PADDED DATA, stream 1
+      send(Array[Byte](0, 0, 2, 1, 0x24, 0, 0, 0, 1, 0, 0)) // PRIORITY HEADERS shorter than 5
+      // the same server still answers on a fresh connection
+      val g = new GrpcConn("127.0.0.1", server.boundPort)
+      try {
+        val ok = g.call(s"$Service/DoAction",
+          Iterator(Pb.action("protocol_version", Pb.Empty))).toSeq
+        assert(Pb.parseResultBody(ok.head).headOption.contains(2.toByte))
+      } finally g.close()
+      Thread.sleep(500) // let the dropped connections' handlers finish
+      assert(uncaught.isEmpty, s"uncaught in a handler thread: ${uncaught.peek()}")
+    } finally {
+      Thread.setDefaultUncaughtExceptionHandler(prev)
+      server.close()
+    }
+  }
 }
