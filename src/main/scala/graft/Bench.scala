@@ -1,13 +1,170 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Shim
 
-/** Per-round benchmark: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR (driver: sf0.1), forcing full execution through the
-  * noop sink (a bare count() would let Catalyst prune away the very UDF work
-  * being measured), and prints ONE JSON line.
+/** The at-scale invariant battery: every SparkEntry query over
+  * SPARK_GRAFT_SF_DIR (default sf0.1) and every `x_*` probe, each forced to
+  * run in full through the noop sink (a bare count() would let Catalyst
+  * prune away the UDF work being measured) or through its own invariant
+  * check.
+  *
+  * `runMain graft.Bench` runs the default battery: everything except the
+  * heavy `x_curate_10m` and the bench-redundant twins, under a 1100 s
+  * budget for further samples. `runMain graft.Bench <substring>...` runs
+  * exactly the probes whose names contain one of the substrings, heavy ones
+  * included, with no budget; it is the artifact-capture path. Sampling
+  * follows [[sample]]: one pass over every probe, then up to three samples
+  * for each probe whose first took at most 5 s. A probe's value is its
+  * minimum sample.
+  *
+  * Output: the full line, with every sample (`reps`) and the per-sample
+  * ledger (jobs, stages, tasks, task run/CPU/GC time, shuffle and spill,
+  * host load and CPU steal, and the curate funnel's stage seconds), goes to
+  * SPARK_GRAFT_BENCHFULL (default `BENCHFULL_c<cpus>.json`). stdout ends
+  * with a short summary line whose `n_failed` counts the probes that threw.
+  * SPARK_GRAFT_CPUS sets the `local[n]` width (default 32), and
+  * SPARK_GRAFT_BENCH_PREV the capture the summary compares against.
   */
 object Bench {
+  /** Further samples go only to probes whose first sample took at most this
+    * many seconds; a longer probe keeps one sample. */
+  val RepeatMaxSec = 5.0
+  /** At most this many samples per probe (BASELINE.md's min-of-3). */
+  val MaxSamples = 3
+  /** A default run starts no further sample after this much battery time. */
+  val BudgetSec = 1100.0
+
+  final case class Probe(name: String, run: () => Unit)
+
+  /** A one-time input, built before pass 1 when a selected probe's name
+    * contains one of `users`. */
+  final case class Fixture(users: Seq[String], build: () => Unit)
+
+  /** A probe's samples in seconds, in the order taken. `failed` when its
+    * fixture or one of its samples threw. */
+  final case class Outcome(name: String, samples: Vector[Double], failed: Boolean) {
+    def value: Double = if (failed || samples.isEmpty) -1.0 else samples.min
+  }
+
+  /** The sampling rule. Builds the fixtures the probes use; a throwing
+    * fixture fails only its users. Pass 1 times every probe once, in
+    * declaration order. Further samples go to the probes whose first sample
+    * took at most [[RepeatMaxSec]], round-robin, cheapest first sample
+    * first, up to [[MaxSamples]] each. Unless `named`, no further sample
+    * starts once [[BudgetSec]] of battery time (from pass 1's start, on
+    * `clock`, in seconds) has passed; pass 1 always runs whole, so every
+    * probe keeps one sample. A probe that throws is failed and gets no
+    * further sample. `bracket` wraps each timed sample in work kept outside
+    * the timed window. Returns the outcomes in declaration order, and
+    * whether the budget cut a further sample. */
+  def sample(probes: Seq[Probe], fixtures: Seq[Fixture], named: Boolean,
+      clock: () => Double,
+      bracket: (String, () => Double) => Double = (_, timed) => timed())
+      : (Seq[Outcome], Boolean) = {
+    val samples = Array.fill(probes.size)(Vector.empty[Double])
+    val failed = Array.fill(probes.size)(false)
+    def fail(i: Int, why: String): Unit = {
+      failed(i) = true
+      System.err.println(s"[bench] ${probes(i).name} failed: $why")
+    }
+    for (f <- fixtures) {
+      val users = probes.indices.filter(i => f.users.exists(probes(i).name.contains))
+      if (users.nonEmpty)
+        try f.build() catch { case e: Throwable => users.foreach(fail(_, s"fixture: ${e.getMessage}")) }
+    }
+    def take(i: Int): Unit = {
+      val p = probes(i)
+      try {
+        val t = bracket(p.name, () => { val t0 = clock(); p.run(); clock() - t0 })
+        samples(i) :+= t
+        System.err.println(f"[bench] ${p.name} rep${samples(i).size} $t%.3f s")
+      } catch { case e: Throwable => fail(i, e.getMessage) }
+    }
+    val t0 = clock()
+    probes.indices.filterNot(failed).foreach(take)
+    val repeat = probes.indices.filter(i => !failed(i) && samples(i).head <= RepeatMaxSec)
+      .sortBy(samples(_).head)
+    var budgetHit = false
+    for (_ <- 2 to MaxSamples; i <- repeat if !failed(i) && !budgetHit) {
+      budgetHit = !named && clock() - t0 > BudgetSec
+      if (budgetHit)
+        System.err.println(f"[bench] budget $BudgetSec%.0f s reached, no further samples")
+      else take(i)
+    }
+    (probes.indices.map(i => Outcome(probes(i).name, samples(i), failed(i))), budgetHit)
+  }
+
+  /** Whitespace-split first line of a /proc file; empty if unreadable. */
+  private def procLine(path: String): Array[String] =
+    try java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).get(0).trim.split("\\s+")
+    catch { case _: Throwable => Array.empty }
+
+  /** The 1-, 5- and 15-minute load averages as a JSON array, or null. */
+  private def loadavgJson(): String = {
+    val p = procLine("/proc/loadavg")
+    if (p.length < 3) "null" else p.take(3).mkString("[", ",", "]")
+  }
+
+  /** The per-sample ledger. One listener, registered on every SparkContext
+    * the battery builds, sums the task-end metrics of the jobs a sample
+    * runs (the fields of perfbench's Trace). [[begin]] and [[end]] bracket
+    * the timed window: both drain the asynchronous listener bus outside it.
+    * Each record also holds the 1-minute load at the sample's start, the
+    * host's CPU steal seconds over the sample (/proc/stat), and any stage
+    * seconds the probe [[mark]]s. */
+  private object Ledger extends SparkListener {
+    private var jobs, stages, tasks, runMs, cpuNs, gcMs, readB, writeB, spillB = 0L
+    private var steal0 = Option.empty[Long]
+    private var load1 = "null"
+    private val marks = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val records = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      Option(e.taskMetrics).foreach { m =>
+        runMs += m.executorRunTime; cpuNs += m.executorCpuTime; gcMs += m.jvmGCTime
+        readB += m.shuffleReadMetrics.totalBytesRead
+        writeB += m.shuffleWriteMetrics.bytesWritten
+        spillB += m.diskBytesSpilled
+      }
+    }
+
+    def mark(stage: String, sec: Double): Unit = synchronized { marks(stage) = sec }
+
+    private def stealTicks(): Option[Long] = procLine("/proc/stat").lift(8).flatMap(_.toLongOption)
+
+    def begin(sc: SparkContext): Unit = {
+      Shim.drainListeners(sc)
+      synchronized {
+        jobs = 0; stages = 0; tasks = 0; runMs = 0; cpuNs = 0; gcMs = 0
+        readB = 0; writeB = 0; spillB = 0; marks.clear()
+        load1 = procLine("/proc/loadavg").headOption.getOrElse("null")
+        steal0 = stealTicks()
+      }
+    }
+
+    def end(sc: SparkContext, probe: String, sec: Double): Unit = {
+      Shim.drainListeners(sc)
+      synchronized {
+        // /proc/stat counts in USER_HZ ticks, 100 a second
+        val stealS = steal0.zip(stealTicks()).map { case (a, b) => f"${(b - a) / 100.0}%.2f" }
+          .getOrElse("null")
+        val marksJson = if (marks.isEmpty) "" else marks
+          .map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",\"marks_s\":{", ",", "}")
+        records(probe) = records.getOrElse(probe, Vector.empty) :+
+          (f"""{"s":$sec%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+           f""""run_s":${runMs / 1e3}%.3f,"cpu_s":${cpuNs / 1e9}%.3f,"gc_s":${gcMs / 1e3}%.3f,""" +
+           f""""shuffle_read_mb":${readB / 1e6}%.1f,"shuffle_write_mb":${writeB / 1e6}%.1f,""" +
+           f""""spill_mb":${spillB / 1e6}%.1f,"load1":$load1,"steal_s":$stealS$marksJson}""")
+      }
+    }
+  }
+
   /** 10M-row two-int64-column parquet for the wasm scan probes (the batched
     * kernel only lowers over columnar scans, not range()). Written once,
     * reused across reps and rounds. */
@@ -46,17 +203,10 @@ object Bench {
     dir
   }
 
-  /** Lazily-started shared Flight server for the wire-overhead probe —
-    * returns its bound port. */
-  private lazy val flightBenchServerInstance = new graft.remote.flight.FlightServer()
-  private def flightBenchServer(): Int = flightBenchServerInstance.boundPort
-
   /** Bucketed+sorted join tables for x_bucketed_join. The in-memory catalog
     * forgets managed tables across JVMs while the warehouse directory
-    * persists, so a fresh session must drop + clear before rewriting —
-    * which is exactly why this build runs as a PRE-TIMED fixture: charged
-    * to rep 1 it shows up as a phantom 6-7 s regression whenever the
-    * budget guard leaves a single sample. */
+    * persists, so a fresh session must drop + clear before rewriting. The
+    * build runs as a fixture, outside the timed samples. */
   private def bucketedTablesFixture(s: SparkSession): Unit = {
     if (!s.catalog.tableExists("graft_bl") || !s.catalog.tableExists("graft_br")) {
       def rmrf(f: java.io.File): Unit = {
@@ -134,13 +284,14 @@ object Bench {
   private def curateFunnel(s: SparkSession, nDocs: Long, tag: String): Unit = {
     Graft.install(s)
     import org.apache.spark.sql.functions._
-    // per-stage wall-clock marks (ops.StageTimer) on the funnel's existing
-    // EAGER boundaries — checkpoints/collects — so each delta is one
-    // stage's real cost
+    // per-stage seconds into the sample's ledger, marked on the funnel's
+    // existing eager boundaries (checkpoints, collects), so each delta is
+    // one stage's real cost and no Spark action is added
     var stageLast = System.nanoTime()
     def mark(stage: String): Unit = {
-      graft.ops.StageTimer.mark(s"$tag stage $stage", stageLast)
-      stageLast = System.nanoTime()
+      val now = System.nanoTime()
+      Ledger.mark(stage, (now - stageLast) / 1e9)
+      stageLast = now
     }
         // every planted condition keys off the dup base `b` (NOT the id) so
         // the ÷20 duplicate pairs stay byte-identical: ÷11 of b gets a
@@ -292,14 +443,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Loadavg sampled at PROCESS ENTRY, before Spark session build + warmup
-    // + fixture builds spike the host's own 1-min average — the capture
-    // gate below must judge the host's PRIOR state, not our startup burst.
-    val loadAtEntry: Array[Double] = try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")
-        .take(3).map(_.toDouble)
-    } catch { case _: Throwable => Array.empty[Double] }
+    // the host's load before our own session build and warm-up raise it
+    val loadAtEntry = loadavgJson()
     val tInit = System.nanoTime()
     def buildSession(): SparkSession = {
       val s = SparkSession.builder()
@@ -320,6 +465,7 @@ object Bench {
         .config("spark.sql.warehouse.dir", "/tmp/graft_bench_warehouse")
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
+      s.sparkContext.addSparkListener(Ledger)
       s
     }
     var spark = buildSession()
@@ -494,10 +640,10 @@ object Bench {
       // batch size.
       "x_flight_throughput_5m" -> { s: SparkSession =>
         Graft.install(s)
-        val server = flightBenchServer() // shared across reps
+        val port = graft.remote.flight.FlightFixture.port
         val df = s.range(5000000L)
           .selectExpr("CAST(id % 1000003 AS INT) AS a", "CAST(id % 999983 AS INT) AS b")
-        graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", server)),
+        graft.remote.flight.FlightUdf.withFlightColumn(df, Seq(("127.0.0.1", port)),
             "gcd", Seq("a", "b"), org.apache.spark.sql.types.IntegerType)
           .write.format("noop").mode("overwrite").save()
       },
@@ -833,8 +979,7 @@ object Bench {
       // side. The hot bucket's candidate block is ~10M pairs in a single
       // join key — the shape that funnels one reducer in a plain SMJ. The
       // probe asserts AQE's skew-join split actually engages (skew=true in
-      // the final adaptive SMJ) AND the planted invariants hold, under a
-      // wall budget enforced by the bench harness itself.
+      // the final adaptive SMJ) AND the planted invariants hold.
       "x_lsh_skew_1m" -> { s: SparkSession =>
         Graft.install(s)
         val conf = s.conf
@@ -1775,43 +1920,14 @@ object Bench {
         out.write.format("noop").mode("overwrite").save()
       },
     )
-    // Optional substring filter (args) for local iteration on one probe;
-    // the driver passes no args and measures everything.
-    val keep: String => Boolean =
-      if (args.isEmpty) _ => true else n => args.exists(n.contains)
-    // SPARK_GRAFT_REPS=N: N full INTERLEAVED passes over the query list,
-    // min per query. Back-to-back reps of one query share any contention
-    // window, so a contended host poisons both samples of a few queries;
-    // interleaving spreads a window thinly across the whole list instead,
-    // and the per-rep values (printed + in the JSON) make one visible
-    // post-hoc. Default 2: single-rep numbers swing up to 5x contended.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    // Battery budget controls (r12 — the r11 driver bench hit its harness
-    // timeout, rc:124, after the battery's reps=2 wall grew to ~2440 s):
-    //  * SPARK_GRAFT_HEAVY=1 opts the `heavyOnly` probes in (x_curate_10m is
-    //    ~330 s/rep — BENCHFULL material, not a driver-default member; its
-    //    1M twin stays in the battery and carries the same plan asserts).
-    //    An explicit name filter in `args` also opts them in.
-    //  * SPARK_GRAFT_HEAVY_SEC (default 5): a probe whose rep-1 time exceeds
-    //    this gets no further reps. A 30 s probe averages a contention
-    //    window out within one run; the min-of-N interleave exists for the
-    //    sub-second tail where one window is a 5× swing — doubling the wall
-    //    of the long probes buys no signal and broke the driver gate.
-    //  * SPARK_GRAFT_BUDGET_SEC (default 1100): once total elapsed passes
-    //    this, no rep ≥ 2 measurements start (rep 1 always completes, so
-    //    every benchable keeps at least one sample). Guards the driver's
-    //    bench timeout against a host 2× slower than the quiet baseline.
-    val heavyOptIn = sys.env.get("SPARK_GRAFT_HEAVY").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
+    // A named run selects exactly the matching probes; the default battery
+    // leaves out the heavy x_curate_10m (its 1M twin carries the same plan
+    // asserts) and the bench-redundant twins below.
+    val named = args.nonEmpty
     val heavyOnly = Set("x_curate_10m")
-    val heavySec = sys.env.getOrElse("SPARK_GRAFT_HEAVY_SEC", "5.0").toDouble
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "1100").toDouble
-    // Bench-REDUNDANT oracle gates (r14 battery rebalance, VERDICT #7): each
-    // stays a full CORRECTNESS gate in Verify, but its bench cost duplicates
-    // a twin already in the battery — the wire/marshalling time it measures
-    // is the same exchange its gcd/arrow twin times. Excluded from the
-    // default battery so the probes that DO carry unique signal keep their
-    // ≥2 reps inside the driver budget; still benchable by explicit name.
+    // Bench-redundant oracle gates: each stays a full correctness gate in
+    // Verify, but its bench cost duplicates a twin already in the battery
+    // (the same wire or marshalling exchange its gcd/arrow twin times).
     val benchRedundant = Set(
       // error-column twins: same wire exchange as their gcd twin, plus the
       // identical per-row containment q_div_error/q_wasm_div_error measure
@@ -1829,147 +1945,45 @@ object Bench {
       "q_wasm_real_agg",
       // table-function-over-wire twins of q_flight_split/q_script_table
       "q_js_split", "q_python_split")
-
-    val benchables0: Seq[(String, () => Unit)] =
-      throughput.filter(p => keep(p._1)).map { case (name, fn) =>
-        name -> (() => fn(liveSession())) } ++
-      SparkEntry.queries.toSeq.sortBy(_._1).filter(p => keep(p._1)).map { case (name, fn) =>
-        name -> (() => fn(liveSession(), sfDir).write.format("noop").mode("overwrite").save())
-      }
-    val benchables =
-      if (args.nonEmpty) benchables0
-      else {
-        val afterHeavy =
-          if (heavyOptIn) benchables0 else benchables0.filterNot(p => heavyOnly(p._1))
-        afterHeavy.filterNot(p => benchRedundant(p._1))
+    val selected: String => Boolean =
+      if (named) n => args.exists(n.contains) else n => !heavyOnly(n) && !benchRedundant(n)
+    val probes: Seq[Probe] =
+      throughput.filter(p => selected(p._1)).map { case (name, fn) =>
+        Probe(name, () => fn(liveSession())) } ++
+      SparkEntry.queries.toSeq.sortBy(_._1).filter(p => selected(p._1)).map { case (name, fn) =>
+        Probe(name, () => fn(liveSession(), sfDir).write.format("noop").mode("overwrite").save())
       }
 
-    // one-time synthetic fixtures (content-addressed by _SUCCESS) build
-    // OUTSIDE the timed loop — otherwise a cold /tmp charges the build to
-    // the first rep of whichever probe touches it first
-    val fixtureUsers = Seq(
-      ("x_wasm_perrow_10m|x_wasm_batched_10m", () => { wasmBenchParquet(spark); () }),
-      ("x_wasm_str_|x_wasm_marshal_", () => { docsBenchParquet(spark); () }),
-      ("x_ann_|x_lsh_join_1m", () => { annBenchParquet(spark); () }),
-      ("x_ann_recall_1m", () => { annClusteredParquet(spark); () }),
-      ("x_scd2_apply_20m", () => { scd2HistParquet(spark); () }),
-      ("x_bucketed_join", () => { bucketedTablesFixture(liveSession()); () }),
-      // pyarrow server pool start (python + pyarrow import) is fixture cost,
-      // not exchange cost — pre-warm before rep 1
-      ("x_flight_perchunk_|x_flight_stream_",
-        () => { graft.remote.flight.FlightWorker.endpoints; () }),
-      // graft's own FlightServer + registry warm-up is likewise fixture cost
-      ("x_flight_srv_stream_",
-        () => { graft.functions.Builtins.ensureRegistered()
-                graft.remote.flight.FlightFixture.port; () }))
-    fixtureUsers.foreach { case (pat, build) =>
-      if (pat.split('|').exists(p => benchables.exists(_._1.contains(p)))) build()
-    }
+    // one-time inputs and servers, built before pass 1 so no probe's first
+    // sample pays for them
+    val fixtures = Seq(
+      Fixture(Seq("x_wasm_perrow_10m", "x_wasm_batched_10m"),
+        () => wasmBenchParquet(liveSession())),
+      Fixture(Seq("x_wasm_str_", "x_wasm_marshal_"), () => docsBenchParquet(liveSession())),
+      Fixture(Seq("x_ann_", "x_lsh_join_1m"), () => annBenchParquet(liveSession())),
+      Fixture(Seq("x_ann_recall_1m"), () => annClusteredParquet(liveSession())),
+      Fixture(Seq("x_scd2_apply_20m"), () => scd2HistParquet(liveSession())),
+      Fixture(Seq("x_bucketed_join"), () => bucketedTablesFixture(liveSession())),
+      // the pyarrow server pool (python + pyarrow import)
+      Fixture(Seq("x_flight_perchunk_", "x_flight_stream_"),
+        () => graft.remote.flight.FlightWorker.endpoints),
+      // graft's own servers, with the registry they serve
+      Fixture(Seq("x_flight_srv_stream_", "x_flight_throughput_5m"),
+        () => { graft.functions.Builtins.ensureRegistered(); graft.remote.flight.FlightFixture.port }),
+      Fixture(Seq("x_remote_throughput_5m", "x_remote_script_2m"),
+        () => { graft.functions.Builtins.ensureRegistered(); graft.remote.RemoteFixture.port }))
 
-    // Contention evidence IN the artifact: host load before/after the timed
-    // loop (1/5/15-min averages) + the per-rep samples below let a reader —
-    // and tools/bench_compare.py — separate a real regression from a busy
-    // host without re-running anything (loadavg ≫ ncpus ⇒ contended run).
-    def loadavg(): String = try {
-      val p = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")
-      s"[${p(0)},${p(1)},${p(2)}]"
-    } catch { case _: Throwable => "null" }
-    val loadBefore = loadavg()
-
-    // Loadavg GATE (r14, VERDICT #1): the methodology requires a ~idle host
-    // — a capture started at loadavg 5+ shows uniform +15-37% inflation on
-    // untouched code (the r13 artifact's lesson). An ARTIFACT capture
-    // (SPARK_GRAFT_BENCHFULL set) on a busy host now REFUSES up front
-    // instead of recording numbers whose rep spread has to do the
-    // explaining; the driver's per-round run (no artifact path) only
-    // annotates, so a contended driver host degrades visibly, not fatally.
-    // Override: SPARK_GRAFT_IGNORE_LOAD=1 (recorded in the artifact).
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "1.5").toDouble
-    val ignoreLoad = sys.env.get("SPARK_GRAFT_IGNORE_LOAD").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
-    // judged on the PROCESS-ENTRY sample (loadAtEntry): by this point our
-    // own session build + warmup + fixtures have already spiked the 1-min
-    // average, which must not trip the gate on an otherwise-idle host
-    val contended = loadAtEntry.nonEmpty &&
-      (loadAtEntry(0) > maxLoad || loadAtEntry.lift(2).exists(_ > maxLoad))
-    val loadEntryStr = loadAtEntry.map(v => f"$v%.2f").mkString("[", ",", "]")
-    val loadGate =
-      if (!contended) "ok"
-      else if (ignoreLoad) "overridden"
-      else if (sys.env.contains("SPARK_GRAFT_BENCHFULL")) {
-        System.err.println(
-          s"[bench] REFUSING artifact capture: loadavg-at-entry $loadEntryStr " +
-          s"exceeds $maxLoad (methodology requires a ~idle host; the r13 " +
-          "artifact was captured at 5.65 and its heavy probes inflated " +
-          "15-37%). Wait for idle, or set SPARK_GRAFT_IGNORE_LOAD=1 to " +
-          "record anyway.")
-        sys.exit(2)
-      }
-      else { // driver/iteration run: annotate loudly, keep going
-        System.err.println(
-          s"[bench] WARNING: host was contended at entry (loadavg $loadEntryStr > " +
-          s"$maxLoad) — numbers will be inflated; artifact captures would refuse")
-        "contended"
-      }
-
-    val samples = Array.fill(benchables.size)(List.empty[Double])
-    val failed = Array.fill(benchables.size)(false)
-    val batteryT0 = System.nanoTime()
-    def batteryElapsed(): Double = (System.nanoTime() - batteryT0) / 1e9
-    var budgetHit = false
-    def measure(name: String, run: () => Unit, i: Int, rep: Int): Unit =
-      try {
-        liveSession() // any rebuild happens OUTSIDE the timed window
-        val t0 = System.nanoTime(); run(); val t = (System.nanoTime() - t0) / 1e9
-        samples(i) :+= t
-        System.err.println(f"[bench] $name rep$rep $t%.3f s")
-      } catch { case e: Throwable =>
-        failed(i) = true
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-    for (((name, run), i) <- benchables.zipWithIndex) measure(name, run, i, 1)
-    // rep ≥ 2 runs in ASCENDING rep-1 time (r14, VERDICT #7): when the
-    // budget forces a cut, the cheap majority has already banked its second
-    // sample and only the few most expensive probes lose reps — instead of
-    // whatever happened to sit at the tail of the declaration order.
-    val rep2Order = benchables.indices
-      .filter(i => !failed(i) && samples(i).nonEmpty)
-      .sortBy(i => samples(i).head)
-    for (rep <- 2 to reps; i <- rep2Order if !failed(i)) {
-      if (!budgetHit && batteryElapsed() > budgetSec) {
-        budgetHit = true
-        System.err.println(
-          f"[bench] budget ${budgetSec}%.0f s exceeded at ${batteryElapsed()}%.0f s — rep-1 samples only from here")
-      }
-      val skip = budgetHit || samples(i).headOption.exists(_ > heavySec)
-      if (!skip) measure(benchables(i)._1, benchables(i)._2, i, rep)
-    }
-    // Stability pass: a fast probe whose reps disagree >15% gets extra
-    // samples (the BASELINE.md min-of-3 methodology, applied only where the
-    // spread says contention touched a sample) — budget permitting, so the
-    // pass degrades to nothing on a slow host. Up to TWO extra samples per
-    // probe: one contended re-sample next to a contended original still
-    // disagrees, and the second retry usually lands quiet (the r12
-    // x_semantic_dedup_1m outlier shape). Keeps cross-round compares from
-    // needing a contention caveat on the sub-5 s tail.
-    if (reps >= 2) {
-      for (((name, run), i) <- benchables.zipWithIndex
-           if !failed(i) && samples(i).size >= 2) {
-        var extra = 0
-        while (extra < 2 && !failed(i) && {
-            val ss = samples(i)
-            ss.min > 0 && (ss.max - ss.min) / ss.min > 0.15 &&
-              ss.min <= heavySec && batteryElapsed() < budgetSec }) {
-          measure(name, run, i, samples(i).size + 1)
-          extra += 1
-        }
-      }
-    }
-
-    val results = benchables.zipWithIndex.map { case ((name, _), i) =>
-      (name, if (failed(i) || samples(i).isEmpty) -1.0 else samples(i).min, samples(i))
-    }
+    val loadBefore = loadavgJson()
+    val (outcomes, budgetHit) = sample(probes, fixtures, named, () => System.nanoTime() / 1e9,
+      (name, timed) => {
+        val sc = liveSession().sparkContext // a rebuild stays outside the timed window
+        Ledger.begin(sc)
+        val t = timed()
+        Ledger.end(sc, name, t)
+        t
+      })
+    val loadAfter = loadavgJson()
+    val results = outcomes.map(o => (o.name, o.value, o.samples))
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val repsJson = results.map { case (k, _, ss) =>
@@ -1977,65 +1991,35 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalStr = f"$total%.3f"
-    // session_overhead = SparkSession build + warmup query (paid once per
-    // JVM, amortized to zero on a long-lived cluster); "queries" are
-    // steady-state only
-    val loadAfter = loadavg()
     val ncpus = Runtime.getRuntime.availableProcessors()
-    // Rep-floor accounting (r15, VERDICT #4): the driver budget can force
-    // rep-1-only samples on a contended host; record machine-readably
-    // whether every rep-eligible benchable (non-failed, rep-1 ≤ heavySec —
-    // longer probes are single-rep BY DESIGN) banked at least `rep_floor`
-    // samples, so a reader doesn't have to infer the shortfall from the
-    // per-query rep arrays.
-    val repFloor = math.min(reps, 2)
-    val repFloorMet = benchables.indices.forall { i =>
-      failed(i) || samples(i).isEmpty ||
-        samples(i).size >= repFloor || samples(i).head > heavySec
-    }
-    // loadavg_at_entry is the sample the load gate judged (process entry,
-    // BEFORE our own build/warmup spiked the 1-min average) — in the
-    // artifact so "load_gate":"ok" is auditable next to a post-warmup
-    // loadavg_before that our own session legitimately inflated.
-    val loadEntryJson =
-      if (loadAtEntry.isEmpty) "null"
-      else loadAtEntry.map(v => f"$v%.2f").mkString("[", ",", "]")
-    // cpus as an Int for the JSON artifacts: SPARK_GRAFT_CPUS is a free-form
-    // env string (it also names the BENCHFULL file) — a non-numeric value
-    // must not corrupt the machine-readable lines. Recorded in the FULL line
-    // too so a future prev-capture knows what core count it ran at.
+    // SPARK_GRAFT_CPUS is a free-form string (it also names the BENCHFULL
+    // file); a non-numeric value must not corrupt the JSON lines
     val cpusNum = scala.util.Try(cpus.trim.toInt).getOrElse(ncpus)
+    // session_overhead = SparkSession build + warm-up query (paid once per
+    // JVM); "queries" are steady-state only
     val jsonLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","cpus":$cpusNum,"queries":$qs,"reps":$repsJson,"session_overhead":${f"$overheadSec%.3f"},"loadavg_at_entry":$loadEntryJson,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpus":$ncpus,"load_gate":"$loadGate","rep_floor":$repFloor,"rep_floor_met":$repFloorMet,"budget_hit":$budgetHit,"heavy_skipped":${if (heavyOptIn || args.nonEmpty) "[]" else heavyOnly.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","cpus":$cpusNum,"queries":$qs,"reps":$repsJson,"session_overhead":${f"$overheadSec%.3f"},"loadavg_at_entry":$loadAtEntry,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"ncpus":$ncpus,"budget_hit":$budgetHit,"heavy_skipped":${if (named) "[]" else heavyOnly.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(jsonLine)
-    // The driver's BENCH_r<n>.json keeps only the tail of stdout, which
-    // truncates the per-query map past ~60 entries — persist the COMPLETE
-    // line to a file too so every benchable stays diffable round-over-round.
-    // The default file name is PER-CPU-COUNT (r15 verdict #1): the driver
-    // benches twice (32 cores, then 8), and with a single fixed name the
-    // low-core run overwrote the only full 32-core capture of the round.
-    // Override via SPARK_GRAFT_BENCHFULL (explicit paths are respected as
-    // given — an artifact capture names its own file).
+    // The complete line, with the per-sample ledger, goes to a file: the
+    // driver keeps only the tail of stdout. The default name is per core
+    // count, so a run at 8 cores does not overwrite the one at 32.
+    val ledgerJson = Ledger.records
+      .map { case (k, rs) => "\"" + k + "\":" + rs.mkString("[", ",", "]") }.mkString("{", ",", "}")
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCHFULL", s"BENCHFULL_c$cpus.json")
     try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), jsonLine + "\n")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
+        jsonLine.dropRight(1) + ",\"ledger\":" + ledgerJson + "}\n")
       System.err.println(s"[bench] full per-query JSON written to $fullPath")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write BENCHFULL: ${e.getMessage}")
     }
-    // Compact summary line, printed LAST (r15 verdict #1): the driver's
-    // BENCH_r<n>.json keeps only the final ~2000 chars of stdout, so the full
-    // per-query line above has not survived to PERF_r*.json since r12. This
-    // line carries the totals, counts and a round-over-round geomean (against
-    // the committed previous capture, BENCHFULL_prev.json by default /
-    // SPARK_GRAFT_BENCH_PREV) in well under 2000 chars; the full 331-entry
-    // map stays in the per-cpus BENCHFULL file for human/judge diffing.
+    // The summary line, printed last, stays well under the ~2000 chars of
+    // stdout the driver keeps: totals, counts, the top 12 families by time,
+    // and geomean speedups against SPARK_GRAFT_BENCH_PREV
+    // (BENCHFULL_prev.json by default).
     val nFailed = results.count(_._2 < 0)
-    // Per-family rollup (r16 — the verdict asked for per-family geomeans in
-    // the survivable tail): family = "tpch" for q<digit>… names, else the
-    // first '_'-token after the q_/x_ prefix (curate, wasm, lm, fuzzy, …).
-    // Only the top families by time are emitted so the line stays well
-    // under the 2000-char tail budget whatever the battery grows to.
+    // family = "tpch" for q<digit>… names, else the first '_'-token after
+    // the q_/x_ prefix (curate, wasm, lm, fuzzy, …)
     def family(name: String): String =
       if (name.matches("^q[0-9].*")) "tpch"
       else {
@@ -2094,7 +2078,7 @@ object Bench {
       }
     } catch { case _: Throwable => ("null", 0, 0, 0, "null") }
     val summaryLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"load_gate":"$loadGate","budget_hit":$budgetHit,"rep_floor_met":$repFloorMet,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"prev_cpus_assumed":$prevCpusAssumed,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"n_failed":$nFailed,"failed":${results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")},"cpus":$cpusNum,"ncpus":$ncpus,"budget_hit":$budgetHit,"session_overhead":${f"$overheadSec%.3f"},"geomean_speedup_vs_prev":$geoStr,"prev_cpus_assumed":$prevCpusAssumed,"n_common":$nCommon,"n_improved_10pct":$nImp,"n_regressed_10pct":$nReg,"family_sec":$famSecJson,"family_geomean_vs_prev":$famGeoJson,"prev_file":"$prevPath","benchfull":"$fullPath","sf":"$sfDir"}"""
     println(summaryLine)
     spark.stop()
   }

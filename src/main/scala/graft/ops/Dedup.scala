@@ -28,9 +28,6 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  private def stageTimes = StageTimer.on
-  private def markStage(tag: String, t0: Long): Unit = StageTimer.mark(tag, t0)
-
   /** Register scalar signature functions (per-row tier). */
   def registerAll(): Unit = {
     // MinHash signature over word-3-gram shingles: ONE md5 per shingle, then
@@ -286,15 +283,7 @@ object Dedup {
     // Labels propagate as longs; a non-integral id column would cast to null
     // in the final anti-join and silently return the corpus un-deduplicated.
     requireIntegralIds(df, Seq(idCol), "nearDedupCorpus")
-    val t0 = System.nanoTime()
     val (docs, rawCand, banded) = minhashCandidates(df, textCol, idCol, k, bands)
-    // attribution-only: force the banded-signature cache first so the pairs
-    // mark below isolates the join+verify cost from the signature compute.
-    // NOTE (r15 ADVICE): this count() is an EXTRA action that does not exist
-    // in the untimed path — stage-timing mode changes the job graph (cache
-    // forced earlier, AQE sees a materialized input), not just adds clocks;
-    // read its timings as attribution hints, never as the probe's number.
-    if (stageTimes) { val tb = System.nanoTime(); banded.count(); markStage("nearDedup.sig+band", tb) }
     // r16 (guide §3.2 — measured at the 10M funnel): verifying straight off
     // the lazy plan exchanged AND sort-merge-sorted the FULL (id, text)
     // corpus for the text attachments (AQE rescued only the first join with
@@ -307,13 +296,11 @@ object Dedup {
     // a corpus pre-filtered MAP-SIDE. No corpus-sized exchange or sort
     // remains; false positives only let a few extra text rows through to
     // the exact id equi-joins, so the result is bit-identical.
-    val tc = System.nanoTime()
     val cand = rawCand.localCheckpoint()
     // the checkpoint above materialized the candidates — the banded-
     // signature cache is dead weight from here on
     banded.unpersist(false)
     val nCand = cand.count()
-    if (stageTimes) markStage("nearDedup.cand", tc)
     // Below the floor the corpus text relations broadcast into the verify
     // joins anyway (AQE sees a tiny candidate side), so the Bloom build +
     // broadcast jobs cost more than they save — measured +0.6 s on the sf0.1
@@ -322,14 +309,11 @@ object Dedup {
     // cluster deployments can retune the crossover without a rebuild.
     val bloomFloor = df.sparkSession.conf
       .get("spark.graft.nearDedup.bloomFloor", "16384").toLong
-    if (stageTimes) System.err.println(
-      s"[bench] nearDedup nCand=$nCand bloom=${nCand >= bloomFloor}")
     val pairs = if (nCand < bloomFloor) {
       verifyPairs(cand, docs, threshold)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
     } else {
-      val tbl = System.nanoTime()
       val spark = df.sparkSession
       val ids = cand.select(col("id_a").as("id"))
         .union(cand.select(col("id_b").as("id")))
@@ -341,7 +325,6 @@ object Dedup {
       // correctness. The ×1.3 covers approx_count_distinct's 5% rsd.
       val nIds = ids.agg(approx_count_distinct(col("id")))
         .head.getLong(0)
-      if (stageTimes) System.err.println(s"[bench] nearDedup nIds~$nIds")
       val bf = ids.stat.bloomFilter("id",
         math.max((nIds * 1.3).toLong, 1000L), 0.01)
       val bfB = spark.sparkContext.broadcast(bf)
@@ -369,25 +352,19 @@ object Dedup {
       // SHUFFLE_HASH, which measured faster there). Budget is per-executor
       // memory (one copy per executor on a cluster); 64 B/row covers row
       // object + hash-relation overhead.
-      if (stageTimes) markStage("nearDedup.bloom", tbl)
       val bcMax = df.sparkSession.conf
         .get("spark.graft.nearDedup.broadcastTextBytes", "268435456").toLong
       val avgLen = if (nTxt == 0) 0L else txtBytes / nTxt
       val useBc = txtBytes + 64L * nTxt <= bcMax &&
         nCand * (48L + avgLen) > 4L * txtBytes
       val docsSide = if (useBc) broadcast(texts) else texts
-      val tv = System.nanoTime()
       val v = verifyPairs(cand, docsSide, threshold, shuffleHash = !useBc)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
-      if (stageTimes) markStage("nearDedup.verify", tv)
       texts.unpersist(false)
       v
     }
-    markStage("nearDedup.pairs", t0)
-    val t1 = System.nanoTime()
     val labels = connectedComponents(pairs, "id_a", "id_b", maxIter)
-    markStage("nearDedup.cc", t1)
     // Drop non-root endpoints; every other document (including the untouched
     // majority) survives — an anti join against the small loser set. labels
     // is already materialized (connectedComponents localCheckpoints its
@@ -440,9 +417,7 @@ object Dedup {
     var prev: Option[DataFrame] = None
     var changed = 1L
     var iter = 0
-    val ccT0 = System.nanoTime()
     while (changed > 0 && iter < maxIter) {
-      val iterT0 = System.nanoTime()
       // candidate label for dst = min over neighbors' current labels
       val proposals = edges.join(labels, edges("id_a") === labels("id"))
         .groupBy(col("id_b").as("id")).agg(min(col("comp")).as("ncomp"))
@@ -476,9 +451,7 @@ object Dedup {
       prev = Some(updated)
       labels = updated.select(col("id"), col("comp"))
       iter += 1
-      markStage(f"cc.iter$iter (changed=$changed)", iterT0)
     }
-    markStage(s"cc.total ($iter iters)", ccT0)
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge after $maxIter iterations")

@@ -52,15 +52,14 @@ object Rank {
     // stage runs once and is SKIPPED on the second action, and both passes
     // see the identical partition assignment the old DISK_ONLY
     // localCheckpoint existed to pin. The checkpoint wrote (and re-read) an
-    // uncompressed copy of the whole table, which the stage timers showed
-    // was ~85% of the 100M-row probe; the shuffle files it duplicated were
+    // uncompressed copy of the whole table, measured at ~85% of the
+    // 100M-row probe; the shuffle files it duplicated were
     // already on disk, compressed. (A `Window.partitionBy(__pid)` here
     // would re-exchange and re-sort the WHOLE table; the prefix attachment
     // below is a codegen'd stateful expression instead — zero post-shuffle
     // exchanges, nothing written twice, no boxing.)
     import org.apache.spark.sql.graftshim.Shim
     import graft.functions.PartitionRunningSum
-    val tRange = System.nanoTime()
     // NO sortWithinPartitions here: the offsets pass is order-independent,
     // so the in-partition sort happens exactly once, on the output side
     val ranged = df.repartitionByRange(orderCols: _*)
@@ -75,7 +74,6 @@ object Rank {
       while (it.hasNext) { val r = it.next(); c += 1L; s += r.getLong(vIdx) }
       Iterator.single((pid, c, s))
     }.collect().sortBy(_._1)
-    StageTimer.mark("globalPrefix.offsets", tRange)
     // exclusive prefix offsets per partition id, dense long[] (every
     // partition reports, including empty ones)
     val nParts = if (parts.isEmpty) 0 else parts.map(_._1).max + 1

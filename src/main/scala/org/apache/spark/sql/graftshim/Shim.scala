@@ -52,4 +52,7 @@ object Shim {
       logicalPlan(template).output, rdd)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
 
+  /** Block until every event posted to `sc`'s (asynchronous) listener bus
+    * has been delivered. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
